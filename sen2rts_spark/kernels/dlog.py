@@ -1,16 +1,20 @@
-"""Gu double-logistic curve fitting (scipy-free numpy port).
+"""Double-logistic curve fitting (scipy-free numpy port).
 
 Re-creates the fit used by the reference's ``fit_curve()``
-(/root/reference/R/fit_curve.R:70-183, delegating to ``phenopix::GuFit``):
+(``R/fit_curve.R:70-183``, delegating to ``phenopix::GuFit``):
 
     y(t) = y0 + a1/(1+exp(-(t-t01)/b1))^c1 - a2/(1+exp(-(t-t02)/b2))^c2
 
-The input cycle series (global-relval scale) is normalized with
-sf = quantile(x, c(0.05, 0.95)) (type 7) — convention verified bit-exact
-against the reference's cf fixture (tests/test_pheno_golden.py). The SSE is
-minimized by deterministic multistart Nelder-Mead (R optim BFGS is the
-reference's engine; dates extracted downstream are robust to the residual
-parameter difference — golden-tested).
+and the Beck, Elmore and Klosterman families. The cycle series
+(global-relval scale) is normalized with sf = quantile(x, c(0.05, 0.95))
+(type 7) — convention verified bit-exact against the reference's cf fixture
+(tests/test_pheno_golden.py). The SSE is minimized by deterministic
+multistart Nelder-Mead (R optim BFGS is the reference's engine; dates
+extracted downstream are robust to the residual parameter difference).
+
+All families share ``_fit_generic``, whose Nelder-Mead runs every start of
+a stage in lockstep (one SSE call per step for all of them), bit-identical
+to running the starts one by one (tests/test_dlog_lockstep.py).
 """
 
 from __future__ import annotations
@@ -39,54 +43,70 @@ def quantile7(v: np.ndarray, p: float) -> float:
     return float(v[lo] + (h - lo) * (v[hi] - v[lo]))
 
 
-def _sse(par, x, t):
-    if not np.all(np.isfinite(par)):
-        return 99999.0
-    pred = gu_curve(par, t)
-    if not np.all(np.isfinite(pred)):
-        return 99999.0
-    return float(np.sum((pred - x) ** 2))
+def _nelder_mead(sse, x0, maxiter, xatol=1e-9, fatol=1e-12):
+    """Deterministic Nelder-Mead (standard coefficients, pinned initial
+    simplex) started from every row of ``x0`` and advanced in lockstep.
 
-
-def _nelder_mead(f, x0, maxiter=2000, xatol=1e-9, fatol=1e-12):
-    """Deterministic Nelder-Mead (standard coefficients, pinned init simplex)."""
-    n = len(x0)
+    ``sse`` maps an (m, p) block of points to their m costs. Each step makes
+    at most three ``sse`` calls for all live starts together: reflections,
+    then expansions and contractions, then shrunk simplices. A start leaves
+    the block once it converges. Every start takes exactly the path it would
+    take alone. Returns the best vertex and its cost per start.
+    """
+    m, p = x0.shape
     alpha, gamma, rho, sigma = 1.0, 2.0, 0.5, 0.5
-    sim = np.empty((n + 1, n))
-    sim[0] = x0
-    for k in range(n):
-        y = np.array(x0, dtype=float)
-        y[k] = y[k] + (0.05 * y[k] if y[k] != 0 else 0.00025)
-        sim[k + 1] = y
-    fsim = np.array([f(s) for s in sim])
-    for _ in range(maxiter):
-        order = np.argsort(fsim, kind="stable")
-        sim, fsim = sim[order], fsim[order]
-        if (np.max(np.abs(sim[1:] - sim[0])) <= xatol
-                and np.max(np.abs(fsim[1:] - fsim[0])) <= fatol):
-            break
-        centroid = sim[:-1].mean(axis=0)
-        xr = centroid + alpha * (centroid - sim[-1])
-        fr = f(xr)
-        if fr < fsim[0]:
-            xe = centroid + gamma * (centroid - sim[-1])
-            fe = f(xe)
-            if fe < fr:
-                sim[-1], fsim[-1] = xe, fe
-            else:
-                sim[-1], fsim[-1] = xr, fr
-        elif fr < fsim[-2]:
-            sim[-1], fsim[-1] = xr, fr
-        else:
-            xc = centroid + rho * (sim[-1] - centroid)
-            fc = f(xc)
-            if fc < fsim[-1]:
-                sim[-1], fsim[-1] = xc, fc
-            else:
-                sim[1:] = sim[0] + sigma * (sim[1:] - sim[0])
-                fsim[1:] = [f(s) for s in sim[1:]]
-    order = np.argsort(fsim, kind="stable")
-    return sim[order][0], fsim[order][0]
+    sim = np.repeat(x0[:, None, :], p + 1, axis=1)
+    k = np.arange(p)
+    sim[:, k + 1, k] = np.where(x0 != 0, x0 + 0.05 * x0, x0 + 0.00025)
+    fsim = sse(sim.reshape(-1, p)).reshape(m, p + 1)
+    best_x, best_f = np.empty((m, p)), np.empty(m)
+    live = np.arange(m)
+    rows = live[:, None]
+    for it in range(maxiter + 1):
+        order = fsim.argsort(axis=1, kind="stable")
+        sim, fsim = sim[rows, order], fsim[rows, order]
+        # sorted ascending, NaN last: max |f_i - f_0| is f_last - f_0
+        done = fsim[:, -1] - fsim[:, 0] <= fatol
+        if done.any():
+            done &= np.abs(sim[:, 1:] - sim[:, :1]).max(axis=(1, 2)) <= xatol
+        done |= it == maxiter
+        if done.any():
+            best_x[live[done]], best_f[live[done]] = sim[done, 0], fsim[done, 0]
+            if done.all():
+                break
+            live, sim, fsim = live[~done], sim[~done], fsim[~done]
+            rows = rows[:len(live)]
+        # sum / p is what mean() computes, without its Python overhead
+        centroid = sim[:, :-1].sum(axis=1) / p
+        worst = sim[:, -1]
+        step = centroid - worst
+        xr = centroid + alpha * step
+        fr = sse(xr)
+        expand = fr < fsim[:, 0]
+        accept = fr < fsim[:, -2]
+        if accept.all() and not expand.any():
+            sim[:, -1], fsim[:, -1] = xr, fr
+            continue
+        # expansion where the reflection is a new best, contraction where it
+        # does not beat the second worst
+        probe = expand | ~accept
+        xp = np.where(expand[:, None], centroid + gamma * step,
+                      centroid + rho * (worst - centroid))
+        fp = np.full(len(live), np.nan)
+        fp[probe] = sse(xp[probe])
+        take = np.where(expand, fp < fr, fp < fsim[:, -1])
+        xnew, fnew = np.where(take[:, None], xp, xr), np.where(take, fp, fr)
+        shrink = ~(expand | accept | take)
+        if not shrink.any():
+            sim[:, -1], fsim[:, -1] = xnew, fnew
+            continue
+        keep = ~shrink
+        sim[keep, -1], fsim[keep, -1] = xnew[keep], fnew[keep]
+        s = sim[shrink]
+        s[:, 1:] = s[:, :1] + sigma * (s[:, 1:] - s[:, :1])
+        sim[shrink] = s
+        fsim[shrink, 1:] = sse(s[:, 1:].reshape(-1, p)).reshape(-1, p)
+    return best_x, best_f
 
 
 def fit_gu(x: np.ndarray):
@@ -95,16 +115,11 @@ def fit_gu(x: np.ndarray):
     ``x`` is the cycle's values (relval scale), t = 1..n implicitly.
     Returns dict(params, predicted, sf, sse) with ``predicted`` back-scaled to
     the input scale (phenopix GuFit convention: sf = 5%/95% quantiles).
+    A NaN in ``x`` makes the SSE NaN, which is kept: the fit is None unless
+    some refine chain still reaches a finite cost.
     """
-    x = np.asarray(x, dtype=np.float64)
     n = len(x)
     t = np.arange(1, n + 1, dtype=np.float64)
-    sf = (quantile7(x, 0.05), quantile7(x, 0.95))
-    span = sf[1] - sf[0]
-    if span == 0:
-        span = 1.0
-    xn = (x - sf[0]) / span
-
     d25 = quantile7(t, 0.25)
     d75 = quantile7(t, 0.75)
     # deterministic multistart: the 4 phenopix-style priors plus a seeded
@@ -123,28 +138,8 @@ def fit_gu(x: np.ndarray):
             np.exp(rng.uniform(np.log(0.1), np.log(8))),
             np.exp(rng.uniform(np.log(0.1), np.log(8))),
         ]))
-
-    def f(par):
-        return _sse(par, xn, t)
-
-    coarse = []
-    for p0 in starts:
-        par, cost = _nelder_mead(f, p0, maxiter=300)
-        coarse.append((cost, par))
-    coarse.sort(key=lambda r: r[0])
-    best_par, best_cost = None, np.inf
-    for cost, par in coarse[:3]:
-        par2, cost2 = _nelder_mead(f, par, maxiter=3000)
-        par2, cost2 = _nelder_mead(f, par2, maxiter=3000)
-        if cost2 < best_cost:
-            best_par, best_cost = par2, cost2
-
-    pred_n = gu_curve(best_par, t)
-    predicted = pred_n * span + sf[0]
-    if not np.all(np.isfinite(predicted)):
-        return None
-    return {"params": best_par, "predicted": predicted, "sf": sf,
-            "sse": best_cost, "method": "gu"}
+    return _fit_generic(x, gu_curve, starts, "gu", refine_iter=3000,
+                        refine_rounds=2, finite_sse=False)
 
 
 def fake_fit(x: np.ndarray):
@@ -191,9 +186,12 @@ def klosterman_curve(par: np.ndarray, t: np.ndarray) -> np.ndarray:
 
 
 def _fit_generic(x: np.ndarray, curve, starts, method: str,
-                 coarse_iter: int = 300, refine_iter: int = 2000):
+                 coarse_iter: int = 300, refine_iter: int = 2000,
+                 refine_rounds: int = 1, finite_sse: bool = True):
     """Shared multistart harness: normalize by sf quantiles, coarse NM on all
-    starts, refine the best three, back-scale the winner."""
+    starts, refine the best three (``refine_rounds`` restarts each), back-scale
+    the first chain with the strictly lowest cost. A non-finite parameter or
+    prediction costs 99999; so does any non-finite SSE if ``finite_sse``."""
     x = np.asarray(x, dtype=np.float64)
     n = len(x)
     t = np.arange(1, n + 1, dtype=np.float64)
@@ -203,35 +201,37 @@ def _fit_generic(x: np.ndarray, curve, starts, method: str,
         span = 1.0
     xn = (x - sf[0]) / span
 
-    def f(par):
-        if not np.all(np.isfinite(par)):
-            return 99999.0
-        pred = curve(par, t)
-        if not np.all(np.isfinite(pred)):
-            return 99999.0
-        sse = float(np.sum((pred - xn) ** 2))
-        # NaN input slice -> NaN sse -> 'NaN < best' always False and
-        # best_par would stay None; treat non-finite residuals as a miss
-        return sse if np.isfinite(sse) else 99999.0
+    def sse(par):
+        cost = np.add.reduce((curve(par.T[:, :, None], t) - xn) ** 2, axis=1)
+        # a finite total proves every cost and parameter finite
+        if np.isfinite(np.add.reduce(cost) + np.add.reduce(par, axis=None)):
+            return cost
+        # a non-finite prediction always gives a non-finite SSE
+        miss = ~np.isfinite(cost)
+        if miss.any() and not finite_sse:
+            pred = curve(par[miss].T[:, :, None], t)
+            miss[miss] = ~np.isfinite(pred).all(axis=1)
+        cost[miss | ~np.isfinite(par).all(axis=1)] = 99999.0
+        return cost
 
-    coarse = []
-    for p0 in starts:
-        par, cost = _nelder_mead(f, np.asarray(p0, dtype=np.float64),
-                                 maxiter=coarse_iter)
-        coarse.append((cost, par))
-    coarse.sort(key=lambda r: r[0])
-    best_par, best_cost = None, np.inf
-    for cost, par in coarse[:3]:
-        par2, cost2 = _nelder_mead(f, par, maxiter=refine_iter)
-        if cost2 < best_cost:
-            best_par, best_cost = par2, cost2
-    if best_par is None:
+    with np.errstate(all="ignore"):
+        par, cost = _nelder_mead(sse, np.array(starts, dtype=np.float64),
+                                 coarse_iter)
+        # Python's stable sort, so NaN costs order as they always have
+        top = sorted(range(len(cost)), key=cost.tolist().__getitem__)[:3]
+        par = par[top]
+        for _ in range(refine_rounds):
+            par, cost = _nelder_mead(sse, par, refine_iter)
+    best, best_cost = None, np.inf
+    for i, c in enumerate(cost):
+        if c < best_cost:
+            best, best_cost = i, c
+    if best is None:
         return None
-    pred_n = curve(best_par, t)
-    predicted = pred_n * span + sf[0]
+    predicted = curve(par[best], t) * span + sf[0]
     if not np.all(np.isfinite(predicted)):
         return None
-    return {"params": best_par, "predicted": predicted, "sf": sf,
+    return {"params": par[best], "predicted": predicted, "sf": sf,
             "sse": best_cost, "method": method}
 
 

@@ -247,4 +247,4 @@ def fit_curves(filled: DataFrame, cycles: DataFrame, fit="gu",
         joined, ["id", "year", "cycle"], _fn,
         "id string, year int, cycle int, date date, value_fitted double, "
         "fit_method string",
-        order=["date"])
+        order=["date"], by_range=True)

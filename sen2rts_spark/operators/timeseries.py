@@ -260,5 +260,7 @@ def extract_pheno(filled: DataFrame, cycles: DataFrame, fit="gu",
     cols = [f.strip().split()[0] for f in schema.split(",")]
 
     from .grouped import grouped_apply
+    # one fit costs seconds whatever the cycle's length: range placement
+    # puts each cycle in its own task where hashing would stack them
     return grouped_apply(joined, ["id", "year", "cycle"], _fn, schema,
-                         order=["date"])
+                         order=["date"], by_range=True)

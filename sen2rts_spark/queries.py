@@ -35,7 +35,8 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 
 
 def spread(df: DataFrame, *keys: str) -> DataFrame:
-    """Round-robin the rows of a single-row-group input across the engine.
+    """Spread the rows of a single-row-group input across the engine: hash
+    them on ``keys`` when given, else round-robin them.
 
     The driver's testdata parquet ships each table as ONE file with one or
     few row groups, so parquet's row-group split granularity caps the scan —
@@ -44,8 +45,8 @@ def spread(df: DataFrame, *keys: str) -> DataFrame:
     at one task regardless of core count. Guide §2.5: "input skew: one huge
     unsplittable file — repartition immediately after the read". The
     exchange moves only the scanned bytes (MBs here) and uses an EXPLICIT
-    partition count derived from engine width (3 tasks/core, the session's
-    standard sizing) so AQE does not coalesce it back to one partition.
+    partition count, engine width (1 task/core, see below), so AQE does not
+    coalesce it back to one partition.
     On a store whose layout already provides >= engine-width splits this
     exchange is pure overhead — disable with SPARK_GRAFT_INPUT_SPREAD=0
     (scale knob, local default on).

@@ -324,3 +324,13 @@ def rda_table(path: str, name: str) -> dict:
 
 def rda_object(path: str, name: str):
     return load_rda(path)[name]
+
+
+def require_fixtures(data_dir: str) -> None:
+    """Skip the calling test when the golden fixture directory is absent."""
+    import os
+
+    import pytest
+    if not os.path.isdir(data_dir):
+        pytest.skip(f"golden fixtures missing: {data_dir} not found "
+                    "(see FIXTURES.md)")

@@ -12,7 +12,7 @@ import numpy as np
 import pytest
 
 sys.path.insert(0, os.path.dirname(__file__))
-from rda_reader import rda_table  # noqa: E402
+from rda_reader import rda_table, require_fixtures  # noqa: E402
 
 from sen2rts_spark.kernels.series import fill_series, smooth_series  # noqa: E402
 
@@ -21,6 +21,7 @@ EPOCH = np.datetime64("1970-01-01")
 
 
 def _load(name):
+    require_fixtures(DATA)
     return rda_table(f"{DATA}/{name}.rda", name)
 
 

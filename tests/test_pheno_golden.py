@@ -8,7 +8,7 @@ import numpy as np
 import pytest
 
 sys.path.insert(0, os.path.dirname(__file__))
-from rda_reader import load_rda, rda_table  # noqa: E402
+from rda_reader import load_rda, rda_table, require_fixtures  # noqa: E402
 
 from sen2rts_spark.kernels.cycles import cut_cycles_series  # noqa: E402
 from sen2rts_spark.kernels.dlog import fit_gu  # noqa: E402
@@ -30,21 +30,25 @@ def _named(o):
 
 @pytest.fixture(scope="module")
 def ts_filled():
+    require_fixtures(DATA)
     return rda_table(f"{DATA}/ts_filled.rda", "ts_filled")
 
 
 @pytest.fixture(scope="module")
 def dt_cycles():
+    require_fixtures(DATA)
     return rda_table(f"{DATA}/dt_cycles.rda", "dt_cycles")
 
 
 @pytest.fixture(scope="module")
 def dt_pheno():
+    require_fixtures(DATA)
     return rda_table(f"{DATA}/dt_pheno.rda", "dt_pheno")
 
 
 @pytest.fixture(scope="module")
 def cf_fits():
+    require_fixtures(DATA)
     cfd = _named(load_rda(f"{DATA}/cf.rda")["cf"])
     out = {}
     for sid in cfd:

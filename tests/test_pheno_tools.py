@@ -9,13 +9,14 @@ import numpy as np
 import pytest
 
 sys.path.insert(0, os.path.dirname(__file__))
-from rda_reader import rda_table  # noqa: E402
+from rda_reader import rda_table, require_fixtures  # noqa: E402
 
 DATA = "/root/reference/data"
 
 
 @pytest.fixture(scope="module")
 def fixture_dfs(spark):
+    require_fixtures(DATA)
     f = rda_table(f"{DATA}/ts_filled.rda", "ts_filled")
     rows = list(zip(f["id"], f["date"],
                     [None if math.isnan(v) else v for v in f["value"]]))

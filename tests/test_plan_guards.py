@@ -81,3 +81,61 @@ def test_no_driver_actions_in_query_builders():
                 bad.append(f"{mod.__name__}:{node.lineno} "
                            f".{node.func.attr}()")
     assert not bad, f"driver actions in query/operator modules: {bad}"
+
+
+# Placement of the grouped kernels. The series stages cost per row and keep
+# the id hash partitioning; the curve fits cost seconds per cycle, so their
+# input exchange is a range partitioning on the cycle key, which gives each
+# of a handful of cycles its own task instead of a shared hash bucket.
+
+def _input_exchange(df):
+    """(partitioning, key columns) of the exchange feeding the kernel."""
+    import re
+    lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    start = next(i for i, ln in enumerate(lines) if "MapInPandas" in ln)
+    ex = next(ln for ln in lines[start:] if "Exchange " in ln)
+    kind, args = re.search(r"Exchange (\w+)\((.*)\)", ex).groups()
+    return kind, re.findall(r"(\w+)#\d+", args.split(", REPARTITION")[0])
+
+
+def test_fit_operators_range_partition_on_cycle_key(spark):
+    import datetime
+
+    from sen2rts_spark.operators import pheno_tools, timeseries
+
+    day = datetime.date(2020, 1, 1)
+    obs = spark.createDataFrame(
+        [("a", day, "o", "s", 0.5, 1.0)],
+        "id string, date date, orbit string, sensor string, value double, "
+        "qa double")
+    smoothed = timeseries.smooth(obs)
+    filled = timeseries.fill(smoothed)
+    cycles = timeseries.cut_cycles(filled)
+    for df in (smoothed, filled, cycles):
+        assert _input_exchange(df) == ("hashpartitioning", ["id"])
+    key = ("rangepartitioning", ["id", "year", "cycle"])
+    assert _input_exchange(timeseries.extract_pheno(
+        filled, cycles, rescale=(0.0, 1.0))) == key
+    assert _input_exchange(pheno_tools.fit_curves(
+        filled, cycles, rescale=(0.0, 1.0))) == key
+
+
+def test_range_placement_gives_each_cycle_its_own_task(spark):
+    import pandas as pd
+    from pyspark import TaskContext
+
+    from sen2rts_spark.operators.grouped import grouped_apply
+
+    k = spark.sparkContext.defaultParallelism
+    rows = [(f"id{i % 3}", 2020 + i // 3, 1, d) for i in range(k)
+            for d in range(30)]
+    df = spark.createDataFrame(rows, "id string, year int, cycle int, d int")
+
+    def fn(pdf):
+        return pd.DataFrame({"id": [pdf["id"].iloc[0]],
+                             "part": [TaskContext.get().partitionId()]})
+
+    out = grouped_apply(df, ["id", "year", "cycle"], fn,
+                        "id string, part int", by_range=True).collect()
+    assert len(out) == k
+    assert len({r.part for r in out}) == k

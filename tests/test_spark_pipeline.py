@@ -10,7 +10,7 @@ import numpy as np
 import pytest
 
 sys.path.insert(0, os.path.dirname(__file__))
-from rda_reader import rda_table  # noqa: E402
+from rda_reader import rda_table, require_fixtures  # noqa: E402
 
 DATA = "/root/reference/data"
 EPOCH = datetime.date(1970, 1, 1)
@@ -18,6 +18,7 @@ EPOCH = datetime.date(1970, 1, 1)
 
 @pytest.fixture(scope="module")
 def ts_raw_df(spark):
+    require_fixtures(DATA)
     t = rda_table(f"{DATA}/ts_raw.rda", "ts_raw")
     rows = list(zip(t["id"], t["date"], t["orbit"], t["sensor"],
                     [None if math.isnan(v) else v for v in t["value"]],

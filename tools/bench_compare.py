@@ -60,7 +60,10 @@ def main() -> None:
     for k in sorted(set(qa) | set(qb), key=lambda k: -(qb.get(k) or qa.get(k) or 0)):
         va, vb = qa.get(k), qb.get(k)
         if va is not None and vb is not None:
-            pct = (vb / va - 1) * 100 if va else float("inf")
+            if va:
+                pct = (vb / va - 1) * 100
+            else:  # 0 -> 0 is no change; 0 -> x has no ratio
+                pct = 0.0 if vb == 0 else float("inf")
             mark = " <<" if abs(pct) >= thresh else ""
             if mark:
                 flagged.append((k, pct))
