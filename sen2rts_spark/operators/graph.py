@@ -100,7 +100,8 @@ def cc_unconverged_edges(labels: DataFrame, edges: DataFrame) -> DataFrame:
     """Optional convergence post-check for ``connected_components``.
 
     Returns a one-row DataFrame ``(unconverged_edges bigint)`` counting
-    edges whose endpoints carry different ``cluster_rep`` labels. Zero iff
+    edges whose endpoints carry different ``cluster_rep`` labels, or whose
+    endpoint has no label row or a null label at all. Zero iff
     the labeling is fully converged — and a converged labeling is EXACT:
     a vertex's label only ever decreases and always holds the id of a
     same-component member, so the component's min-id vertex keeps its own
@@ -113,13 +114,15 @@ def cc_unconverged_edges(labels: DataFrame, edges: DataFrame) -> DataFrame:
     + action per call for a diameter regime (> ~2**iters) LSH near-dup
     graphs do not reach. Callers that ingest adversarial graphs can run it
     after materializing labels; tests pin both directions (zero on
-    converged graphs, non-zero when iters is forced too small).
+    converged graphs, non-zero when iters is forced too small or an
+    endpoint's label is missing).
     """
     e = edges.select("src", "dst")
     a = labels.select(F.col("doc_id").alias("src"),
                       F.col("cluster_rep").alias("src_rep"))
     b = labels.select(F.col("doc_id").alias("dst"),
                       F.col("cluster_rep").alias("dst_rep"))
-    return (e.join(a, "src").join(b, "dst")
-            .filter(F.col("src_rep") != F.col("dst_rep"))
+    return (e.join(a, "src", "left").join(b, "dst", "left")
+            .filter(F.col("src_rep").isNull() | F.col("dst_rep").isNull()
+                    | (F.col("src_rep") != F.col("dst_rep")))
             .agg(F.count(F.lit(1)).alias("unconverged_edges")))

@@ -1579,7 +1579,12 @@ def _ngram_rows(spark, sf_dir, n, pred=None):
     cannot push a doc_id filter through the opaque kernel, so callers that
     want only a split of the corpus (decontamination's eval vs train
     branches) must filter BEFORE gram assembly — passing it here keeps the
-    pushdown explicit."""
+    pushdown explicit.
+
+    Tokens are cut with the ASCII word class and lowercased afterwards (as
+    the oracle does); the former Catalyst form lowered the whole text first,
+    which differs on one-way-lowercase codepoints such as U+212A KELVIN SIGN
+    (lowercases to ASCII 'k')."""
     d = load(spark, sf_dir, "documents")
     if pred is not None:
         d = d.filter(pred)

@@ -3,6 +3,12 @@
 Tuned for the engine's workload: Arrow-batched pandas UDFs over
 ``groupBy(url)``, AQE with skew-join handling, and shuffle partitioning
 proportional to cores (overridable for the bench's N vs 4N protocol).
+
+Python workers start through ``sen2rts_spark._daemon`` whenever they can
+import it: it takes Spark's pyspark/py4j archives off the workers'
+``sys.path`` so a task does not pay ~0.25 CPU-s re-reading them (see
+``_daemon``). A session built with a raw ``SparkSession.builder`` keeps
+Spark's stock daemon.
 """
 
 from __future__ import annotations
@@ -12,6 +18,21 @@ import os
 from pyspark.sql import SparkSession
 
 __all__ = ["get_spark", "prewarm_python_workers"]
+
+_DAEMON = "sen2rts_spark._daemon"
+
+
+def workers_can_import_package() -> bool:
+    """True when a local session's Python workers can import this package.
+
+    Local workers share two path sources with the driver: its working
+    directory and the ``PYTHONPATH`` environment variable. The package
+    counts as importable when its parent directory is one of them.
+    """
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    entries = [os.getcwd()] + os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    return any(os.path.realpath(p) == os.path.realpath(root)
+               for p in entries if p)
 
 
 def prewarm_python_workers(spark, n_workers: int | None = None) -> float:
@@ -59,6 +80,16 @@ def prewarm_python_workers(spark, n_workers: int | None = None) -> float:
 def get_spark(app: str = "sen2rts_spark", cores: int | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
+    """Get or create the engine's ``local[cores]`` session.
+
+    ``cores`` defaults to ``$SPARK_GRAFT_CPUS`` (else the CPU count) and
+    ``shuffle_partitions`` to 3 per core (at least 12). When the workers
+    can import this package (``workers_can_import_package``),
+    ``spark.python.daemon.module`` is set to ``sen2rts_spark._daemon``;
+    otherwise Spark's stock daemon runs, since a daemon module the workers
+    cannot import would fail every Python task. ``extra_conf`` is applied
+    last and overrides any of these settings.
+    """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     # Pin BLAS to one thread per Python worker: this host's OpenBLAS
@@ -109,6 +140,8 @@ def get_spark(app: str = "sen2rts_spark", cores: int | None = None,
         shm = "/dev/shm/spark-local"
         os.makedirs(shm, exist_ok=True)
         b = b.config("spark.local.dir", shm)
+    if workers_can_import_package():
+        b = b.config("spark.python.daemon.module", _DAEMON)
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()

@@ -25,6 +25,7 @@ import shutil
 import time
 import uuid
 
+import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -32,6 +33,7 @@ __all__ = ["Catalog"]
 
 LINEAGE_SCHEMA = ("stage string, bucket int, rows_out bigint, wall_ms bigint, "
                   "run_id string, committed_at timestamp, status string")
+LINEAGE_COLS = [f.split()[0] for f in LINEAGE_SCHEMA.split(", ")]
 
 
 class Catalog:
@@ -131,9 +133,14 @@ class Catalog:
                  run_id, None, "ok") for r in written]
         rows += [(table, int(b), 0, wall_ms, run_id, None, "ok")
                  for b in empty_now]
-        lin = self.spark.createDataFrame(rows, LINEAGE_SCHEMA) \
-            .withColumn("committed_at", F.current_timestamp())
-        lin.write.mode("append").parquet(self.lineage_path)
+        if rows:
+            # a pandas frame goes through Arrow into a local relation: no
+            # Python task runs (a list would be parallelized into
+            # defaultParallelism Python tasks), and the commit is one file
+            lin = self.spark.createDataFrame(
+                pd.DataFrame(rows, columns=LINEAGE_COLS), LINEAGE_SCHEMA) \
+                .withColumn("committed_at", F.current_timestamp())
+            lin.coalesce(1).write.mode("append").parquet(self.lineage_path)
         return {"written_buckets": sorted(int(r["bucket"]) for r in written),
                 "rows": sum(int(r["rows_out"]) for r in written)}
 

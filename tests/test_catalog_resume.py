@@ -222,3 +222,22 @@ def test_point_lookup_prunes_partitions(spark, tmp_path_factory):
                   .select("id", "bucket_start", "value").collect())
     assert got == want and len(got) > 0
     _sh.rmtree(base, ignore_errors=True)
+
+
+def test_lineage_commit_is_one_file(spark, tmp_path):
+    # lineage rows go through Arrow into a local relation and are written
+    # as one file per commit (a parallelized list wrote one per core)
+    from sen2rts_spark.sources.catalog import LINEAGE_SCHEMA, Catalog
+    cat = Catalog(spark, str(tmp_path), n_buckets=8)
+    df = spark.range(0, 200).select(F.col("id").cast("string").alias("id"))
+    cat.write_stage(df, "t1")
+    cat.write_stage(df, "t2", only_buckets=[0, 1])
+    files = [f for f in os.listdir(cat.lineage_path) if f.endswith(".parquet")]
+    assert len(files) == 2
+    lin = cat.lineage()
+    assert lin.dtypes == spark.createDataFrame([], LINEAGE_SCHEMA).dtypes
+    rows = lin.select("stage", "bucket", "rows_out", "status").collect()
+    assert sorted((r.stage, r.bucket) for r in rows) == \
+        [("t1", b) for b in range(8)] + [("t2", 0), ("t2", 1)]
+    assert sum(r.rows_out for r in rows if r.stage == "t1") == 200
+    assert {r.status for r in rows} == {"ok"}

@@ -81,3 +81,15 @@ def test_convergence_post_check_detects_too_few_iters(spark):
     assert n_bad > 0
     reps = {r.cluster_rep for r in labels.collect()}
     assert reps != {0}  # genuinely unconverged, not a false alarm
+
+
+def test_convergence_post_check_counts_unlabeled_endpoint(spark):
+    # an edge whose endpoint has no label row is not converged: an inner
+    # join would drop it and report 0
+    from sen2rts_spark.operators.graph import cc_unconverged_edges
+    labels = spark.createDataFrame([(0, 0), (1, 0), (2, 0)],
+                                   "doc_id long, cluster_rep long")
+    edges = spark.createDataFrame([(0, 1), (1, 2), (2, 3)], "src long, dst long")
+    assert cc_unconverged_edges(labels, edges).first()[0] == 1
+    assert cc_unconverged_edges(labels, edges.select(
+        F.col("dst").alias("src"), F.col("src").alias("dst"))).first()[0] == 1

@@ -61,6 +61,19 @@ def _offset(col: pa.ChunkedArray, delta: int) -> pa.ChunkedArray:
     return pc.add(col, pa.scalar(delta, type=col.type))
 
 
+# foreign key -> (referenced table, its key): a foreign key is offset by the
+# referenced key's stride so copy i's rows still point into copy i
+_FK_REF = {"o_custkey": ("customer", "c_custkey"),
+           "l_orderkey": ("orders", "o_orderkey"),
+           "l_partkey": ("part", "p_partkey"),
+           "l_suppkey": ("supplier", "s_suppkey")}
+
+
+def _stride(src: str, table: str, col: str) -> int:
+    t = pq.read_table(os.path.join(src, f"{table}.parquet"), columns=[col])
+    return pc.max(t.column(col)).as_py() + 1
+
+
 def replicate(src: str, dst: str, k: int, model: str = "linear") -> None:
     os.makedirs(dst, exist_ok=True)
     plans = {
@@ -76,22 +89,14 @@ def replicate(src: str, dst: str, k: int, model: str = "linear") -> None:
     }
     if model == "quadratic":
         plans["embeddings"] = ["vec_id"]
-    # foreign keys must share the referenced table's stride
-    stride_of: dict[str, int] = {}
     for name in ["region", "nation"]:
         t = pq.read_table(os.path.join(src, f"{name}.parquet"))
         pq.write_table(t, os.path.join(dst, f"{name}.parquet"))
         print(f"{name}: copied {t.num_rows} rows")
     for name, key_cols in plans.items():
         t = pq.read_table(os.path.join(src, f"{name}.parquet"))
-        for c in key_cols:
-            own = pc.max(t
-                         .column(c)).as_py() + 1
-            base = {"o_custkey": "c_custkey", "l_orderkey": "o_orderkey",
-                    "l_partkey": "p_partkey", "l_suppkey": "s_suppkey"}
-            ref = base.get(c, c)
-            stride_of.setdefault(ref, own)
-            stride_of.setdefault(c, stride_of[ref])
+        stride_of = {c: _stride(src, *_FK_REF.get(c, (name, c)))
+                     for c in key_cols}
         copies = []
         for i in range(k):
             cols = {c: t.column(c) for c in t.column_names}
@@ -109,9 +114,10 @@ def replicate(src: str, dst: str, k: int, model: str = "linear") -> None:
         big = pa.concat_tables(copies)
         rg = {} if model == "quadratic" else {
             "row_group_size": max(t.num_rows, 1)}
-        pq.write_table(big, os.path.join(dst, f"{name}.parquet"), **rg)
+        out = os.path.join(dst, f"{name}.parquet")
+        pq.write_table(big, out, **rg)
         print(f"{name}: {t.num_rows} -> {big.num_rows} rows, "
-              f"{k} row groups")
+              f"{pq.ParquetFile(out).num_row_groups} row groups")
     open(os.path.join(dst, "_DONE"), "w").close()
 
 
