@@ -104,7 +104,8 @@ def compact_blobs(blobs: DataFrame) -> DataFrame:
             # the per-blob scalar encoder pays ~25 numpy dispatches of fixed
             # cost per group (~0.4 ms), which dominated the compaction wall
             # at tens of thousands of groups; gorilla_encode_multi pays it
-            # once per batch (r9 — same entry the sink's hot path uses)
+            # once per batch. (The sink, encode_blobs, still calls the
+            # scalar gorilla_encode once per blob.)
             starts = np.concatenate(
                 ([0], np.cumsum([len(t) for _, t, _ in groups])[:-1]))
             ts_all = np.concatenate([t for _, t, _ in groups])

@@ -16,6 +16,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from ..kernels.gorilla import gorilla_decode_multi, gorilla_encode
+from .grouped import _PARTS_PER_CORE
 
 __all__ = ["encode_blobs", "decode_blobs", "decode_blobs_agg", "BLOB_SCHEMA"]
 
@@ -24,7 +25,6 @@ BLOB_SCHEMA = ("id string, tier string, chunk_start timestamp, blob binary, "
 
 
 def encode_blobs(tier_df: DataFrame, tier: str, chunk_days: int = 366,
-                 num_partitions: int | None = None,
                  clustered: bool = False) -> DataFrame:
     """Rollup tier → one Gorilla blob per (id, chunk_days window).
 
@@ -54,10 +54,8 @@ def encode_blobs(tier_df: DataFrame, tier: str, chunk_days: int = 366,
         "chunk", F.window("bucket_start", f"{chunk_secs} seconds")["start"])
     arranged = with_chunk.select("id", "chunk", "bucket_start", "value")
     if not clustered:
-        # 3 tasks/core (standard sizing): a straggling core delays the stage
-        # by ~1/3 task instead of a whole partition's worth of work
-        parts = num_partitions or \
-            3 * tier_df.sparkSession.sparkContext.defaultParallelism
+        parts = _PARTS_PER_CORE * \
+            tier_df.sparkSession.sparkContext.defaultParallelism
         arranged = arranged.repartition(parts, "id", "chunk")
     arranged = arranged.sortWithinPartitions("id", "chunk", "bucket_start")
 

@@ -32,12 +32,13 @@ __all__ = ["grouped_apply"]
 
 # 3 tasks/core (standard sizing) — straggler/steal mitigation; groups are
 # small relative to partitions so the extra splits don't fragment runs.
+# The one partition-count rule of the grouped kernels, the Gorilla sink and
+# the fused rollup pipeline's exchange.
 _PARTS_PER_CORE = 3
 
 
 def grouped_apply(df: DataFrame, keys: list[str], fn: Callable, schema: str,
                   order: list[str] | None = None,
-                  num_partitions: int | None = None,
                   by_range: bool = False) -> DataFrame:
     """Apply ``fn(pdf) -> pdf`` once per distinct ``keys`` group.
 
@@ -46,8 +47,7 @@ def grouped_apply(df: DataFrame, keys: list[str], fn: Callable, schema: str,
     instead of hashing them, for kernels whose cost is per group rather
     than per row (module docstring).
     """
-    parts = num_partitions or \
-        _PARTS_PER_CORE * df.sparkSession.sparkContext.defaultParallelism
+    parts = _PARTS_PER_CORE * df.sparkSession.sparkContext.defaultParallelism
     partition = df.repartitionByRange if by_range else df.repartition
     arranged = partition(parts, *keys) \
         .sortWithinPartitions(*(keys + (order or [])))

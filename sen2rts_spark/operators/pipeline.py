@@ -24,21 +24,20 @@ from pyspark.sql import DataFrame
 
 from .extract import extract_obs
 from .gorilla_sink import encode_blobs
+from .grouped import _PARTS_PER_CORE
 from .rollup import rollup_raw
 
 __all__ = ["rollup_gorilla_pipeline"]
 
 
 def rollup_gorilla_pipeline(pages: DataFrame, tier: str = "daily",
-                            fused: bool = True,
-                            tasks_per_core: int = 3) -> DataFrame:
+                            fused: bool = True) -> DataFrame:
     """pages → blob table for ``tier``, ready to write (one blob per
-    (id, chunk)). ``tasks_per_core`` sizes the single fused exchange
-    (straggler smoothing, same 3×-parallelism default as the sink)."""
+    (id, chunk)). The single fused exchange has the sink's 3 tasks/core."""
     parts = None
     if fused:
         sc = pages.sparkSession.sparkContext
-        parts = tasks_per_core * sc.defaultParallelism
+        parts = _PARTS_PER_CORE * sc.defaultParallelism
     obs = extract_obs(pages, partition_by_id=parts).select(
         "id", F.col("date").cast("timestamp").alias("ts"), "value", "qa")
     tier_df = rollup_raw(obs, tier)

@@ -314,14 +314,6 @@ def q_minhash_lsh_capped(spark, sf_dir):
     return _lsh_candidate_pairs(sig, hot_bucket_cap=_HOT_CAP, band_rows=rows)
 
 
-# connected-components rounds for dedup_cluster: each round does one
-# neighbor-min propagation (+1 hop) AND one pointer jump (label <- label
-# of label, ~doubling the covered radius), so labels converge for any
-# component of diameter <= ~2**_CC_ITERS. LSH near-dup components are
-# hub-and-chain shaped with tiny diameters; 6 rounds covers ~64 hops.
-_CC_ITERS = 6
-
-
 @register("dedup_cluster", f"""
 WITH RECURSIVE shingles AS ({_SHINGLES_SQL}),
 {_CAND_SQL},
@@ -342,31 +334,22 @@ def q_dedup_cluster(spark, sf_dir):
     LSH candidate graph, then keep the min-doc_id representative per
     component (the survivor a dedup pipeline retains).
 
-    The Spark plan is the alternating min-label-propagation + pointer-
-    jumping family of distributed CC (Kiveris et al., "Connected Components
-    in MapReduce and Beyond" — public algorithm): per round, (1) every node
-    takes the min label over its neighbors (edges join + groupBy-min — one
-    shuffle keyed on dst), (2) every node re-reads the label OF its label
-    (self-join on the label table), which roughly doubles the radius a
-    label has travelled, giving convergence in O(log diameter) rounds with
-    a FIXED _CC_ITERS = {_CC_ITERS} (diameter <= ~2**{_CC_ITERS}; LSH
-    components are hub-shaped and far shallower). No driver-side
-    convergence loop — the round count is static. Each round references
-    the label table 4x, so lineage is truncated every 2nd round with a
-    LAZY localCheckpoint (no job at plan-construction; without it the
-    plan holds 4**iters copies of the LSH subtree — see
-    operators/graph.py for the 4**cadence bound).
-    At 100 TB each round is 2 bounded shuffles of |V| + |E| rows;
-    singleton docs stay their own cluster. The oracle recomputes
-    components exactly via a recursive CTE (bidirected reachability, min
-    label per node).
+    The Spark plan (operators/graph.py) keeps the candidate edges whose
+    endpoints are both documents, gathers them into ONE mapInArrow task and
+    labels them there with a numpy union-find run to a fixpoint, so the
+    components are exact for any diameter; the labels then left-join the
+    documents, so singleton docs stay their own cluster. No driver-side
+    convergence loop and no lineage truncation. At 100 TB the one task
+    holds the candidate edges (ARCHITECTURE item 20). The oracle
+    recomputes components exactly via a recursive CTE (bidirected
+    reachability, min label per node).
     """
     from sen2rts_spark.operators.graph import connected_components
     pairs = q_minhash_lsh_candidates(spark, sf_dir)
     edges = pairs.select(F.col("doc_a").alias("src"),
                          F.col("doc_b").alias("dst"))
     verts = load(spark, sf_dir, "documents").select("doc_id")
-    return connected_components(verts, edges, iters=_CC_ITERS)
+    return connected_components(verts, edges)
 
 
 # the exact quality expression gated by quality_score, shared so the
@@ -418,8 +401,8 @@ def q_dedup_survivors(spark, sf_dir):
     all-partial-aggregatable single shuffle, no window sort. Only
     clusters with >= 2 members survive to the output (singletons are
     trivially retained). At 100 TB both shuffles move |V| rows of three
-    scalar columns; the LSH candidate subtree is shared with
-    dedup_cluster and lineage-truncated once (lazy localCheckpoint).
+    scalar columns; the LSH candidate subtree and the single-task
+    union-find are dedup_cluster's plan, unchanged.
     """
     cc = q_dedup_cluster(spark, sf_dir).select("doc_id", "cluster_rep")
     qual = q_quality_score(spark, sf_dir)

@@ -15,6 +15,7 @@ or put row-at-a-time Python in the hot path — correct at sf0.01, fatal at
   registry is Arrow-batched (ArrowEvalPython / MapInArrow / mapInPandas).
 """
 
+import pyspark.sql.functions as F
 import pytest
 
 FORBIDDEN = {
@@ -56,13 +57,14 @@ def test_no_driver_actions_in_query_builders():
     import inspect
 
     from sen2rts_spark import queries, queries_docs, queries_ts
-    from sen2rts_spark.operators import (extract, geo, gorilla_sink, grouped,
+    from sen2rts_spark.operators import (compaction, extract, geo,
+                                         gorilla_sink, graph, grouped,
                                          pheno_tools, rollup, skew,
                                          timeseries)
 
     bad = []
-    for mod in (queries, queries_docs, queries_ts, extract, geo,
-                gorilla_sink, grouped, pheno_tools, rollup, skew,
+    for mod in (queries, queries_docs, queries_ts, compaction, extract, geo,
+                gorilla_sink, graph, grouped, pheno_tools, rollup, skew,
                 timeseries):
         src = inspect.getsource(mod)
         lines = src.splitlines()
@@ -81,6 +83,20 @@ def test_no_driver_actions_in_query_builders():
                 bad.append(f"{mod.__name__}:{node.lineno} "
                            f".{node.func.attr}()")
     assert not bad, f"driver actions in query/operator modules: {bad}"
+
+
+def test_connected_components_is_one_python_pass(spark):
+    # the labeling is one mapInArrow task over the kept edges: no round
+    # loop of joins and no checkpointed (lineage-truncated) RDD scan
+    from sen2rts_spark.operators.graph import connected_components
+
+    verts = spark.range(6).withColumnRenamed("id", "doc_id")
+    edges = spark.range(5).select(F.col("id").alias("src"),
+                                  (F.col("id") + 1).alias("dst"))
+    plan = connected_components(verts, edges)._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert plan.count("MapInArrow") == 1
+    assert "ExistingRDD" not in plan
 
 
 # Placement of the grouped kernels. The series stages cost per row and keep
