@@ -8,7 +8,7 @@ Deterministic byte encoding of one (timestamps, values) series:
   leading/meaningful window | '1' + 6b leading + 6b meaningful-length) + bits
 
 decode(encode(ts, v)) == (ts, v) bit-exact — property-tested. Used as the
-blob payload of the rollup sink (one blob per (url, bucket_start, tier)).
+blob payload of the rollup sink (one blob per (id, tier, chunk_start)).
 The reference has no compressed storage (SURVEY.md §2.1 S4); this implements
 the north rule's storage format from the public paper.
 """
@@ -144,8 +144,8 @@ _SMALL_N = 192
 def _encode_small(header: bytes, ts: np.ndarray, values: np.ndarray) -> bytes:
     """Per-point encode loop — faster than the vectorized path for short
     series (daily-tier blobs are often < 100 points at fine chunking).
-    Value windows use the paper's shrink-fit reuse; the decoder is policy-
-    agnostic (it follows the control bits), so the two paths interoperate."""
+    Same blob-global value window as the vectorized path, so both paths
+    (and gorilla_encode_multi) write the same bytes for the same series."""
     w = _BitWriter()
     deltas = np.diff(ts)
     dods = np.diff(np.concatenate(([np.int64(0)], deltas)))
@@ -197,13 +197,14 @@ def gorilla_encode(ts: np.ndarray, values: np.ndarray) -> bytes:
 
     Long series: fully vectorized (no per-point Python) — delta-of-delta
     classes via np.select, XOR lead/trail via vectorized bit-length, one
-    variable-width token pack at the end. The value-window policy there is
-    'reuse iff (lead, trail) exactly match the previous nonzero XOR' —
-    unlike the paper's shrink-fit rule this is expressible as a vector
-    compare (no sequential window state); any policy is valid Gorilla, the
+    variable-width token pack at the end. The value-window policy is
+    blob-global: one '11' header with the tightest window covering every
+    nonzero XOR, then '10' reuse — unlike the paper's shrink-fit rule it
+    needs no sequential window state; any policy is valid Gorilla, the
     decoder follows the control bits (paper §4.1.2 explicitly leaves the
     reuse heuristic to the encoder). Short series (< _SMALL_N) dispatch to
-    the per-point loop, which beats numpy's fixed dispatch cost there.
+    the per-point loop, which beats numpy's fixed dispatch cost there and
+    writes the same bytes.
     """
     ts = np.asarray(ts, dtype=np.int64)
     values = np.asarray(values, dtype=np.float64)
@@ -300,10 +301,9 @@ def gorilla_encode_multi(ts: np.ndarray, values: np.ndarray,
     decodable by :func:`gorilla_decode`.
 
     Token policy is gorilla_encode's blob-global value window applied per
-    group, so output is byte-identical to ``gorilla_encode(group)`` for
-    groups >= _SMALL_N; short groups get the same (valid) policy instead of
-    the scalar path's shrink-fit — the decoder follows control bits either
-    way. The point of this entry is the sink hot path: the ~25-dispatch
+    group, so every blob is byte-identical to ``gorilla_encode(group)``, at
+    any group size (property-tested). The point of this entry is the blob
+    writers' hot path (``gorilla_sink.blob_batch``): the ~25-dispatch
     numpy fixed cost that made per-blob encode ~0.4 ms is paid once per
     *batch* here — dod classes, XOR windows (per-group minimum.reduceat),
     and ONE global bit-pack with a <=7-bit per-group alignment pad so every

@@ -37,8 +37,11 @@ import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-from ..kernels.gorilla import gorilla_decode_multi, gorilla_encode_multi
-from .gorilla_sink import BLOB_SCHEMA, _blob_buffers
+# gorilla_encode_multi is called through blob_batch; it stays a module
+# attribute because perfbench's traced runs wrap it here by name
+from ..kernels.gorilla import gorilla_decode_multi, gorilla_encode_multi  # noqa: F401
+from .gorilla_sink import BLOB_SCHEMA, _blob_buffers, blob_batch
+from .grouped import arrow_runs
 
 __all__ = ["compact_blobs"]
 
@@ -47,11 +50,14 @@ def compact_blobs(blobs: DataFrame) -> DataFrame:
     """Rewrite multi-blob (id, tier, chunk_start) groups into one blob each.
 
     Input/output schema: ``BLOB_SCHEMA``. Groups that already hold a single
-    blob pass through byte-identical (tested); fragmented groups are decoded
-    with the vectorized cross-blob kernel, merged in timestamp order, and
-    re-encoded. ``count``/``min_ts``/``max_ts`` of a merged blob are
-    recomputed from the merged points, so the envelope prune
-    (tier_read_window_prune) stays exact after compaction.
+    blob pass through byte-identical (tested); fragmented groups are walked
+    as whole runs (``grouped.arrow_runs``, the sink's walker), decoded with
+    the vectorized cross-blob kernel, merged in timestamp order, and
+    re-encoded by the sink's writer (``gorilla_sink.blob_batch``), so a
+    merged blob is byte-identical to the sink's blob of the same points.
+    ``count``/``min_ts``/``max_ts`` of a merged blob are recomputed from
+    the merged points, so the envelope prune (tier_read_window_prune)
+    stays exact after compaction.
 
     Writing the result: repartition to the sink's standard 3-tasks/core
     sizing (or your store's target file size) before ``.write`` — the
@@ -63,8 +69,6 @@ def compact_blobs(blobs: DataFrame) -> DataFrame:
     amortized cost via the lockstep kernel, so there the payoff is the
     blob-index reduction (envelope scan/filter/shuffle rows), not decode.
     """
-    import pyarrow as pa
-
     group = ["id", "tier", "chunk_start"]
     tagged = blobs.withColumn(
         "_nfrag", F.count(F.lit(1)).over(Window.partitionBy(*group)))
@@ -76,105 +80,29 @@ def compact_blobs(blobs: DataFrame) -> DataFrame:
     frag = (tagged.filter(F.col("_nfrag") > 1).drop("_nfrag")
             .sortWithinPartitions(*group, "min_ts"))
 
-    out_type = pa.schema([
-        ("id", pa.string()), ("tier", pa.string()),
-        ("chunk_start", pa.timestamp("us")), ("blob", pa.binary()),
-        ("count", pa.int32()), ("min_ts", pa.timestamp("us")),
-        ("max_ts", pa.timestamp("us")),
-    ])
-
     def _merge(batches):
-        pend = None  # (key=(id, tier, chunk_us), [ts arrays], [val arrays])
-
-        def finish(key, ts_parts, val_parts, groups):
-            ts = np.concatenate(ts_parts)
-            vals = np.concatenate(val_parts)
-            order = np.argsort(ts, kind="stable")
+        # per batch of whole groups (contiguous after the sort above): ONE
+        # vectorized decode of every fragment, one stable time sort of the
+        # points within their group, ONE vectorized re-encode
+        for batch, starts in arrow_runs(batches, group):
+            dat, offs = _blob_buffers(batch)
+            counts, ts, vals = gorilla_decode_multi(dat, offs)
+            sizes = np.add.reduceat(counts, starts)
+            gid = np.repeat(np.arange(len(starts)), sizes)
+            order = np.lexsort((ts, gid))
             ts, vals = ts[order], vals[order]
-            if len(ts) > 1 and (np.diff(ts) == 0).any():
+            dup = np.flatnonzero((ts[1:] == ts[:-1]) & (gid[1:] == gid[:-1]))
+            if len(dup):
+                row = starts[gid[dup[0]]]
+                key = [batch.column(k)[row].as_py() for k in group]
                 raise ValueError(
                     f"duplicate bucket across fragments of (id={key[0]}, "
                     f"tier={key[1]}, chunk={key[2]}): upserts go through "
                     f"the catalog's idempotent bucket overwrite, not blob "
                     f"appends — refusing to pick a winner")
-            groups.append((key, ts, vals))
-
-        def to_batch(groups):
-            # ONE vectorized encode for every merged group in the batch:
-            # the per-blob scalar encoder pays ~25 numpy dispatches of fixed
-            # cost per group (~0.4 ms), which dominated the compaction wall
-            # at tens of thousands of groups; gorilla_encode_multi pays it
-            # once per batch. (The sink, encode_blobs, still calls the
-            # scalar gorilla_encode once per blob.)
-            starts = np.concatenate(
-                ([0], np.cumsum([len(t) for _, t, _ in groups])[:-1]))
-            ts_all = np.concatenate([t for _, t, _ in groups])
-            vals_all = np.concatenate([v for _, _, v in groups])
-            dat, offs = gorilla_encode_multi(ts_all, vals_all, starts)
-            return pa.record_batch([
-                pa.array([k[0] for k, _, _ in groups], pa.string()),
-                pa.array([k[1] for k, _, _ in groups], pa.string()),
-                pa.array([int(k[2]) for k, _, _ in groups],
-                         pa.timestamp("us")),
-                pa.array([dat[offs[g]:offs[g + 1]].tobytes()
-                          for g in range(len(groups))], pa.binary()),
-                pa.array([len(t) for _, t, _ in groups], pa.int32()),
-                pa.array([int(t[0]) * 1_000_000 for _, t, _ in groups],
-                         pa.timestamp("us")),
-                pa.array([int(t[-1]) * 1_000_000 for _, t, _ in groups],
-                         pa.timestamp("us")),
-            ], schema=out_type)
-
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            # one vectorized decode of every fragment in the batch, then
-            # per-group slices of the concatenated point arrays (groups are
-            # contiguous after the sortWithinPartitions above)
-            dat, offs = _blob_buffers(batch)
-            counts, ts_all, vals_all = gorilla_decode_multi(dat, offs)
-            base = np.cumsum(counts) - counts
-            ids = np.asarray(
-                batch.column(batch.schema.get_field_index("id"))
-                .to_numpy(zero_copy_only=False))
-            tiers = np.asarray(
-                batch.column(batch.schema.get_field_index("tier"))
-                .to_numpy(zero_copy_only=False))
-            chunks = np.asarray(
-                batch.column(batch.schema.get_field_index("chunk_start"))
-                .cast(pa.int64()).to_numpy())
-            n = len(ids)
-            change = np.concatenate(
-                ([True], (ids[1:] != ids[:-1]) | (tiers[1:] != tiers[:-1])
-                 | (chunks[1:] != chunks[:-1])))
-            starts = np.flatnonzero(change)
-            ends = np.concatenate((starts[1:], [n]))
-            groups = []
-            for k in range(len(starts)):
-                s, e = starts[k], ends[k]
-                key = (ids[s], tiers[s], chunks[s])
-                pts_lo = base[s]
-                pts_hi = base[e - 1] + counts[e - 1]
-                ts_parts = [ts_all[pts_lo:pts_hi]]
-                val_parts = [vals_all[pts_lo:pts_hi]]
-                if pend is not None:
-                    if pend[0] == key:
-                        ts_parts = pend[1] + ts_parts
-                        val_parts = pend[2] + val_parts
-                    else:
-                        finish(pend[0], pend[1], pend[2], groups)
-                    pend = None
-                if k == len(starts) - 1:
-                    # group may continue into the next Arrow batch
-                    pend = (key, ts_parts, val_parts)
-                else:
-                    finish(key, ts_parts, val_parts, groups)
-            if groups:
-                yield to_batch(groups)
-        if pend is not None:
-            groups = []
-            finish(pend[0], pend[1], pend[2], groups)
-            yield to_batch(groups)
+            yield blob_batch(*(batch.column(k).take(starts) for k in group),
+                             ts * 1_000_000, vals,
+                             np.cumsum(sizes) - sizes)
 
     merged = frag.mapInArrow(_merge, BLOB_SCHEMA)
     return single.unionByName(merged)

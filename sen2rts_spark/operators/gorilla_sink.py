@@ -2,8 +2,9 @@
 
 One blob per (id, chunk) where chunk groups ``chunk_days`` of buckets —
 bounded blob size regardless of series length. Encode/decode are Arrow-batched
-pandas UDF stages (the codec itself is the kernel in kernels/gorilla.py);
-the blob table is the storage unit of the retention service:
+mapInArrow stages (the codec itself is the kernel in kernels/gorilla.py);
+``blob_batch`` is the one blob writer, shared with compaction. The blob
+table is the storage unit of the retention service:
 
     blobs(id string, tier string, chunk_start timestamp, blob binary,
           count int, min_ts timestamp, max_ts timestamp)
@@ -12,13 +13,19 @@ the blob table is the storage unit of the retention service:
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from ..kernels.gorilla import gorilla_decode_multi, gorilla_encode
-from .grouped import _PARTS_PER_CORE
+# gorilla_encode is not called here; it stays a module attribute because
+# perfbench's traced runs wrap ``gorilla_sink.gorilla_encode`` by name
+from ..kernels.gorilla import (gorilla_decode_multi, gorilla_encode,  # noqa: F401
+                               gorilla_encode_multi)
+from .grouped import _PARTS_PER_CORE, arrow_runs
 
-__all__ = ["encode_blobs", "decode_blobs", "decode_blobs_agg", "BLOB_SCHEMA"]
+__all__ = ["encode_blobs", "decode_blobs", "decode_blobs_agg", "blob_batch",
+           "BLOB_SCHEMA"]
 
 BLOB_SCHEMA = ("id string, tier string, chunk_start timestamp, blob binary, "
                "count int, min_ts timestamp, max_ts timestamp")
@@ -29,9 +36,11 @@ def encode_blobs(tier_df: DataFrame, tier: str, chunk_days: int = 366,
     """Rollup tier → one Gorilla blob per (id, chunk_days window).
 
     Hash-partitioned on (id, chunk), sorted within partitions, then a single
-    mapInPandas pass walks group runs on raw numpy arrays — no per-group
-    pandas objects, one Arrow batch out per batch in (the applyInPandas
-    per-group dispatch was ~15x slower at 3000 series, see operators/grouped.py).
+    mapInArrow pass walks whole (id, chunk) runs with ``grouped.arrow_runs``
+    and encodes each batch of runs with one ``blob_batch`` call — no
+    per-group Python, one Arrow batch out per batch of runs (the
+    applyInPandas per-group dispatch was ~15x slower at 3000 series, see
+    operators/grouped.py).
 
     Contract: ``value`` must be non-NaN — the write job fails loudly on NaN
     (since r6) because NaN silently diverges the ``decode_blobs_agg``
@@ -59,87 +68,57 @@ def encode_blobs(tier_df: DataFrame, tier: str, chunk_days: int = 366,
         arranged = arranged.repartition(parts, "id", "chunk")
     arranged = arranged.sortWithinPartitions("id", "chunk", "bucket_start")
 
-    import pyarrow as pa
-
-    out_type = pa.schema([
-        ("id", pa.string()), ("tier", pa.string()),
-        ("chunk_start", pa.timestamp("us")), ("blob", pa.binary()),
-        ("count", pa.int32()), ("min_ts", pa.timestamp("us")),
-        ("max_ts", pa.timestamp("us")),
-    ])
-
     def _stream(batches):
-        # mapInArrow: zero-copy numpy views of the Arrow columns — the
-        # Arrow→pandas conversion alone cost ~1 s per 150k-row task
-        carry = None  # (ids, chunks_us, ts_us, vals) numpy arrays
-        def emit(ids, chunks, ts_us, vals, hold_last):
-            n = len(ids)
-            change = np.concatenate(
-                ([True], (ids[1:] != ids[:-1]) | (chunks[1:] != chunks[:-1])))
-            starts = np.flatnonzero(change)
-            ends = np.concatenate((starts[1:], [n]))
-            stop = len(starts) - 1 if hold_last else len(starts)
-            cols = {"id": [], "chunk_start": [], "blob": [], "count": [],
-                    "min_ts": [], "max_ts": []}
-            for k in range(stop):
-                s, e = starts[k], ends[k]
-                cols["id"].append(ids[s])
-                cols["chunk_start"].append(int(chunks[s]))
-                cols["blob"].append(gorilla_encode(ts_us[s:e] // 1_000_000,
-                                                   vals[s:e]))
-                cols["count"].append(int(e - s))
-                cols["min_ts"].append(int(ts_us[s]))
-                cols["max_ts"].append(int(ts_us[e - 1]))
-            rest = (ids[starts[-1]:], chunks[starts[-1]:],
-                    ts_us[starts[-1]:], vals[starts[-1]:]) if hold_last else None
-            if not cols["id"]:
-                return None, rest
-            rb = pa.record_batch([
-                pa.array(cols["id"], pa.string()),
-                pa.array([tier] * len(cols["id"]), pa.string()),
-                pa.array(cols["chunk_start"], pa.timestamp("us")),
-                pa.array(cols["blob"], pa.binary()),
-                pa.array(cols["count"], pa.int32()),
-                pa.array(cols["min_ts"], pa.timestamp("us")),
-                pa.array(cols["max_ts"], pa.timestamp("us")),
-            ], schema=out_type)
-            return rb, rest
-
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = np.asarray(batch.column(0).to_numpy(zero_copy_only=False))
-            chunks = np.asarray(batch.column(1).cast(pa.int64()).to_numpy())
-            ts_us = np.asarray(batch.column(2).cast(pa.int64()).to_numpy())
-            vals = np.asarray(batch.column(3).to_numpy(zero_copy_only=False),
-                              dtype=np.float64)
+        # mapInArrow: numpy views of the Arrow columns — the Arrow→pandas
+        # conversion alone cost ~1 s per 150k-row task
+        for batch, starts in arrow_runs(batches, ["id", "chunk"]):
+            ts_us = np.asarray(batch.column("bucket_start").cast(pa.int64()))
+            vals = np.asarray(batch.column("value"), dtype=np.float64)
             if np.isnan(vals).any():
                 # NaN would silently diverge the decode_blobs_agg pushdown
                 # from the decode+groupBy plan (numpy reductions propagate
                 # NaN, Spark orders it largest) — fail loudly at write time
                 raise ValueError("NaN value in rollup tier; the Gorilla "
                                  "sink stores non-NaN series only")
-            if carry is not None:
-                ids = np.concatenate([carry[0], ids])
-                chunks = np.concatenate([carry[1], chunks])
-                ts_us = np.concatenate([carry[2], ts_us])
-                vals = np.concatenate([carry[3], vals])
-            rb, carry = emit(ids, chunks, ts_us, vals, hold_last=True)
-            if rb is not None:
-                yield rb
-        if carry is not None and len(carry[0]):
-            rb, _ = emit(*carry, hold_last=False)
-            if rb is not None:
-                yield rb
+            yield blob_batch(batch.column("id").take(starts),
+                             [tier] * len(starts),
+                             batch.column("chunk").take(starts),
+                             ts_us, vals, starts)
 
     return arranged.mapInArrow(_stream, schema=BLOB_SCHEMA)
+
+
+def blob_batch(ids, tiers, chunks, ts_us, vals, starts):
+    """One ``BLOB_SCHEMA`` record batch holding one Gorilla blob per group.
+
+    ``ids``/``tiers``/``chunks`` are the groups' keys (one entry per group,
+    ``chunks`` as timestamps); ``ts_us``/``vals`` hold every group's points
+    back to back, time-sorted within a group, and ``starts`` is each
+    group's first index. All blobs come from ONE ``gorilla_encode_multi``
+    call and share its buffer; ``count``/``min_ts``/``max_ts`` are the
+    groups' point counts and first/last ``ts_us``.
+    """
+    dat, offs = gorilla_encode_multi(ts_us // 1_000_000, vals, starts)
+    last = np.append(starts[1:], len(ts_us)) - 1
+    blob = pa.Array.from_buffers(
+        pa.binary(), len(starts),
+        [None, pa.py_buffer(offs.astype(np.int32)), pa.py_buffer(dat)])
+    return pa.record_batch([
+        pa.array(ids, pa.string()),
+        pa.array(tiers, pa.string()),
+        pa.array(chunks, pa.timestamp("us")),
+        blob,
+        pa.array(last - starts + 1, pa.int32()),
+        pa.array(ts_us[starts], pa.timestamp("us")),
+        pa.array(ts_us[last], pa.timestamp("us")),
+    ], names=["id", "tier", "chunk_start", "blob", "count", "min_ts",
+              "max_ts"])
 
 
 def _blob_buffers(batch):
     """Zero-copy (data, offsets) numpy views of a record batch's ``blob``
     binary column — the exact layout gorilla_decode_multi consumes; no
     per-blob ``as_py()`` byte copies (VERDICT r5 task 3)."""
-    import pyarrow as pa  # noqa: F401  (callers run inside mapInArrow)
     col = batch.column(batch.schema.get_field_index("blob"))
     if col.null_count:
         raise ValueError("null blob in sink table")
@@ -168,9 +147,6 @@ def decode_blobs(blobs: DataFrame) -> DataFrame:
     (lockstep token walk — no per-blob Python, ~10x the per-blob path at
     tier blob sizes); the row explosion is Arrow-native (pc.take with a
     repeated index vector — no Python string materialization)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
     out_type = pa.schema([
         ("id", pa.string()), ("tier", pa.string()),
         ("bucket_start", pa.timestamp("us")), ("value", pa.float64()),
@@ -230,9 +206,6 @@ def decode_blobs_agg(blobs: DataFrame,
     NaN at encode time (encode_blobs raises), making the equality contract
     unconditional over sink-written tables.
     """
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
     out_schema = pa.schema([
         ("id", pa.string()), ("tier", pa.string()),
         ("bucket_start", pa.timestamp("us")), ("n_points", pa.int64()),

@@ -18,6 +18,10 @@ handful of cycles run in as many tasks instead of sharing a hash bucket.
 Correctness: either partitioning colocates each group in one partition;
 sortWithinPartitions makes each group a contiguous run; the carry handles
 runs that straddle batch boundaries. Output equals applyInPandas (tested).
+
+``run_starts`` is the one run-boundary rule. ``arrow_runs`` is the same
+walk for ``mapInArrow`` writers that need no pandas (the Gorilla sink and
+compaction): it yields Arrow batches of whole runs.
 """
 
 from __future__ import annotations
@@ -26,9 +30,10 @@ from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
-__all__ = ["grouped_apply"]
+__all__ = ["grouped_apply", "run_starts", "arrow_runs"]
 
 # 3 tasks/core (standard sizing) — straggler/steal mitigation; groups are
 # small relative to partitions so the extra splits don't fragment runs.
@@ -70,14 +75,8 @@ def grouped_apply(df: DataFrame, keys: list[str], fn: Callable, schema: str,
                     if out is not None and len(out):
                         outs.append(out)
                 carry = None
-            # find run boundaries over the key columns
-            n = len(pdf)
-            change = np.zeros(n, dtype=bool)
-            for k in keys:
-                col = pdf[k].to_numpy()
-                change[1:] |= col[1:] != col[:-1]
-            starts = np.flatnonzero(np.concatenate(([True], change[1:])))
-            ends = np.concatenate((starts[1:], [n]))
+            starts = run_starts([pdf[k] for k in keys])
+            ends = np.append(starts[1:], len(pdf))
             # last run may continue into the next batch — hold it back
             for s, e in zip(starts[:-1], ends[:-1]):
                 out = fn(pdf.iloc[s:e])
@@ -94,3 +93,37 @@ def grouped_apply(df: DataFrame, keys: list[str], fn: Callable, schema: str,
                 yield out
 
     return arranged.mapInPandas(_stream, schema=schema)
+
+
+def run_starts(cols) -> np.ndarray:
+    """First row of each run of equal values across the equal-length key
+    columns ``cols`` (numpy arrays or anything ``np.asarray`` takes)."""
+    change = np.zeros(len(cols[0]), dtype=bool)
+    change[:1] = True
+    for col in cols:
+        col = np.asarray(col)
+        change[1:] |= col[1:] != col[:-1]
+    return np.flatnonzero(change)
+
+
+def arrow_runs(batches, keys: list[str]):
+    """Walk key-sorted Arrow record batches as whole runs of equal ``keys``.
+
+    Yields ``(batch, starts)``: ``batch`` holds only complete runs and
+    ``starts`` is each run's first row. The last run of every input batch
+    is held back and prepended to the next, so a run that straddles batch
+    boundaries comes out whole, exactly once. Empty batches are skipped.
+    """
+    carry = None
+    for batch in batches:
+        if batch.num_rows == 0:
+            continue
+        if carry is not None:
+            batch = pa.Table.from_batches([carry, batch]) \
+                .combine_chunks().to_batches()[0]
+        starts = run_starts([batch.column(k) for k in keys])
+        if len(starts) > 1:
+            yield batch.slice(0, starts[-1]), starts[:-1]
+        carry = batch.slice(starts[-1])
+    if carry is not None:
+        yield carry, np.zeros(1, dtype=np.int64)

@@ -104,10 +104,12 @@ def test_multi_roundtrip_mixed_groups(seed, ngroups):
 
 
 def test_multi_byte_identical_to_single_for_large_groups():
-    # same window policy as gorilla_encode's vectorized path -> same bytes
+    # same blob-global window policy as both gorilla_encode paths -> same
+    # bytes, short groups (per-point scalar path, n < 192) included: the
+    # blob writers rely on it to replace per-blob gorilla_encode calls
     rng = np.random.default_rng(3)
     groups = []
-    for n in (192, 366, 2048):
+    for n in (1, 2, 40, 191, 192, 366, 2048):
         ts = np.cumsum(rng.integers(1, 5000, n))
         groups.append((ts, rng.normal(0, 1, n)))
     for blob, (ts, vals) in zip(_multi_groups(groups), groups):
