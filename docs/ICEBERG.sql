@@ -37,6 +37,12 @@ CREATE TABLE ice.crawl.blobs (
 ) USING iceberg
 PARTITIONED BY (bucket(512, id), tier);
 
+-- One row per (stage, bucket) per commit. rows_out is not a re-scan of the
+-- committed data: it is the sum of record_count over the data files the
+-- commit added to that bucket, read from the commit's data-file stats
+-- (the `files` metadata table, e.g. ice.crawl.tier_daily.files, or the
+-- snapshot summary's added-records). The parquet emulation in
+-- catalog.py does the same with the fresh files' footers.
 CREATE TABLE ice.crawl.lineage (
   stage STRING, bucket INT, rows_out BIGINT, wall_ms BIGINT,
   run_id STRING, committed_at TIMESTAMP, status STRING

@@ -9,8 +9,14 @@ Iceberg runtime jar, so the SAME layout is emulated with parquet:
   ``b = pmod(hash(id), n_buckets)`` — Spark's ``hash()`` is Murmur3-x86-32,
   the same hash family as Iceberg's ``bucket`` transform, so the layout (and
   the skew behaviour) carries over 1:1;
-- a commit appends one lineage row per bucket to ``<root>/_lineage`` with
-  rows_out / wall_ms / status — the snapshot analogue;
+- a commit runs no Spark job besides its partitioned data write.
+  ``rows_out`` per bucket is the sum of ``num_rows`` in the parquet
+  footers of the files that commit wrote, read on the driver. The commit's
+  lineage rows (rows_out / wall_ms / status, one per bucket) go to
+  ``<root>/_lineage`` as one parquet file, written by pyarrow on the
+  driver under a ``.``-prefixed name and renamed into place, so a crash
+  mid-write leaves no partial file for Spark to read — the snapshot
+  analogue;
 - ``resume=True`` recomputes ONLY buckets missing from lineage (the
   anti-join resume of SURVEY.md §4.3) and appends them; a killed run
   restarted this way produces byte-identical table contents (tested).
@@ -24,8 +30,10 @@ import os
 import shutil
 import time
 import uuid
+from datetime import datetime, timezone
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -33,7 +41,12 @@ __all__ = ["Catalog"]
 
 LINEAGE_SCHEMA = ("stage string, bucket int, rows_out bigint, wall_ms bigint, "
                   "run_id string, committed_at timestamp, status string")
-LINEAGE_COLS = [f.split()[0] for f in LINEAGE_SCHEMA.split(", ")]
+# the same columns as written by pyarrow; Spark reads each back as the type
+# LINEAGE_SCHEMA names (an INT64 UTC-adjusted timestamp reads as timestamp)
+LINEAGE_ARROW = pa.schema([
+    ("stage", pa.string()), ("bucket", pa.int32()), ("rows_out", pa.int64()),
+    ("wall_ms", pa.int64()), ("run_id", pa.string()),
+    ("committed_at", pa.timestamp("us", tz="UTC")), ("status", pa.string())])
 
 
 class Catalog:
@@ -53,10 +66,14 @@ class Catalog:
 
     # -- lineage -----------------------------------------------------------
     def lineage(self) -> DataFrame:
-        try:
-            return self.spark.read.parquet(self.lineage_path)
-        except Exception:  # noqa: BLE001 — empty catalog
+        """All lineage rows. Empty only when no commit has landed: a lineage
+        file that cannot be read raises, so resume never mistakes a
+        damaged history for an empty one and silently redoes every bucket."""
+        p = self.lineage_path
+        if not (os.path.isdir(p) and any(not f.startswith(("_", "."))
+                                         for f in os.listdir(p))):
             return self.spark.createDataFrame([], LINEAGE_SCHEMA)
+        return self.spark.read.parquet(p)
 
     def completed_buckets(self, stage: str) -> list[int]:
         lin = self.lineage().filter((F.col("stage") == stage)
@@ -88,7 +105,7 @@ class Catalog:
                 sorted(set(todo) & set(only_buckets))
 
         before = self._bucket_file_sets(table)
-        t0 = time.time()
+        t0 = time.perf_counter()
         # Dynamic partition overwrite makes a bucket re-write idempotent: a
         # crash between the data commit and the lineage commit is repaired by
         # resume redoing the bucket (replacing, never duplicating, its files) —
@@ -96,7 +113,7 @@ class Catalog:
         bucketed.write.mode("overwrite").partitionBy("bucket") \
             .option("partitionOverwriteMode", "dynamic") \
             .parquet(self.table_path(table))
-        wall_ms = int((time.time() - t0) * 1000)
+        wall_ms = int((time.perf_counter() - t0) * 1000)
 
         # Lineage counts come from the COMMITTED files, not a re-evaluation of
         # the (possibly non-deterministic) upstream plan: data + lineage then
@@ -108,11 +125,20 @@ class Catalog:
         # granularity and executor clock skew (round-3 ADVICE — the mtime
         # heuristic could silently rmtree a bucket written this run). This is
         # the snapshot-file-list diff an Iceberg commit gives for free.
+        # Dynamic overwrite replaced each written bucket whole, so every file
+        # in it is fresh, and its row count is the sum of those files'
+        # parquet footers: a driver-side metadata read, no Spark job and no
+        # re-scan of the data (an Iceberg commit takes the same count from
+        # the writer's data-file stats).
         candidates = set(todo if todo is not None else range(self.n_buckets))
         after = self._bucket_file_sets(table)
         fresh = {b for b, names in after.items()
                  if names != before.get(b, frozenset())}
         written_now = sorted(candidates & fresh)
+        rows_out = {b: sum(pq.read_metadata(os.path.join(
+                        self.table_path(table), f"bucket={b}", f)).num_rows
+                        for f in after[b])
+                    for b in written_now}
         # Candidate buckets with no data this run: drop any stale prior-run
         # partition (upstream no longer produces it — overwrite semantics)
         # and commit an explicit rows_out=0 row, so resume doesn't re-run an
@@ -122,27 +148,30 @@ class Catalog:
             p = os.path.join(self.table_path(table), f"bucket={b}")
             if os.path.isdir(p):
                 shutil.rmtree(p)
-        written = []
-        if written_now:
-            written = self.spark.read.parquet(self.table_path(table)) \
-                .filter(F.col("bucket").isin(written_now)) \
-                .groupBy("bucket").agg(F.count(F.lit(1)).alias("rows_out")) \
-                .collect()
-        run_id = uuid.uuid4().hex[:12]
-        rows = [(table, int(r["bucket"]), int(r["rows_out"]), wall_ms,
-                 run_id, None, "ok") for r in written]
-        rows += [(table, int(b), 0, wall_ms, run_id, None, "ok")
-                 for b in empty_now]
-        if rows:
-            # a pandas frame goes through Arrow into a local relation: no
-            # Python task runs (a list would be parallelized into
-            # defaultParallelism Python tasks), and the commit is one file
-            lin = self.spark.createDataFrame(
-                pd.DataFrame(rows, columns=LINEAGE_COLS), LINEAGE_SCHEMA) \
-                .withColumn("committed_at", F.current_timestamp())
-            lin.coalesce(1).write.mode("append").parquet(self.lineage_path)
-        return {"written_buckets": sorted(int(r["bucket"]) for r in written),
-                "rows": sum(int(r["rows_out"]) for r in written)}
+            rows_out[b] = 0
+        if rows_out:
+            self._append_lineage(table, rows_out, wall_ms)
+        return {"written_buckets": written_now,
+                "rows": sum(rows_out[b] for b in written_now)}
+
+    def _append_lineage(self, table: str, rows_out: dict[int, int],
+                        wall_ms: int) -> None:
+        """One lineage file per commit, written by pyarrow on the driver.
+        It lands under a ``.``-prefixed name (Spark lists no such file) and
+        is renamed into place, so a reader sees the whole file or none."""
+        buckets = sorted(rows_out)
+        n = len(buckets)
+        lin = pa.table({
+            "stage": [table] * n, "bucket": buckets,
+            "rows_out": [rows_out[b] for b in buckets],
+            "wall_ms": [wall_ms] * n, "run_id": [uuid.uuid4().hex[:12]] * n,
+            "committed_at": [datetime.now(timezone.utc)] * n,
+            "status": ["ok"] * n}, schema=LINEAGE_ARROW)
+        os.makedirs(self.lineage_path, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.zstd.parquet"
+        tmp = os.path.join(self.lineage_path, "." + name)
+        pq.write_table(lin, tmp, compression="zstd")
+        os.replace(tmp, os.path.join(self.lineage_path, name))
 
     def _bucket_file_sets(self, table: str) -> dict[int, frozenset]:
         """bucket -> frozenset of data-file names, from the filesystem

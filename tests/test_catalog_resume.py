@@ -5,6 +5,7 @@ import os
 import shutil
 
 import pyspark.sql.functions as F
+import pytest
 
 
 def _daily(spark):
@@ -241,3 +242,148 @@ def test_lineage_commit_is_one_file(spark, tmp_path):
         [("t1", b) for b in range(8)] + [("t2", 0), ("t2", 1)]
     assert sum(r.rows_out for r in rows if r.stage == "t1") == 200
     assert {r.status for r in rows} == {"ok"}
+
+
+def _bucket_counts(cat, table):
+    return {r["bucket"]: r["count"] for r in
+            cat.read_stage(table).groupBy("bucket").count().collect()}
+
+
+def _new_lineage(cat, table, seen_runs):
+    """{bucket: rows_out} of the commits to ``table`` not in ``seen_runs``."""
+    lin = cat.lineage().filter(F.col("stage") == table).collect()
+    new = [r for r in lin if r["run_id"] not in seen_runs]
+    seen_runs.update(r["run_id"] for r in lin)
+    return {r["bucket"]: r["rows_out"] for r in new}
+
+
+def test_footer_counts_equal_spark_recount(spark, tmp_path):
+    """rows_out comes from the fresh files' parquet footers. With several
+    files per bucket, lineage, written_buckets and rows must equal a Spark
+    recount of the committed table: plain commit, only_buckets, resume."""
+    from sen2rts_spark.sources.catalog import Catalog
+    daily = _daily(spark)
+    daily.cache()
+    key = "spark.sql.files.maxRecordsPerFile"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "7")
+    try:
+        seen = set()
+        plain = Catalog(spark, str(tmp_path / "plain"), n_buckets=8)
+        res = plain.write_stage(daily, "t")
+        want = _bucket_counts(plain, "t")
+        assert all(len(os.listdir(os.path.join(plain.table_path("t"),
+                                               f"bucket={b}"))) > 2
+                   for b in want)
+        assert res["written_buckets"] == sorted(want)
+        assert res["rows"] == sum(want.values()) == daily.count()
+        assert _new_lineage(plain, "t", seen) == want
+
+        seen = set()
+        cat = Catalog(spark, str(tmp_path / "resume"), n_buckets=8)
+        part = cat.write_stage(daily, "t", only_buckets=[1, 3, 5])
+        got = _bucket_counts(cat, "t")
+        assert part["written_buckets"] == [1, 3, 5] == sorted(got)
+        assert part["rows"] == sum(got.values())
+        assert _new_lineage(cat, "t", seen) == got
+
+        res = cat.write_stage(daily, "t", resume=True)
+        full = _bucket_counts(cat, "t")
+        assert full == want
+        assert res["written_buckets"] == [0, 2, 4, 6, 7]
+        assert res["rows"] == sum(full[b] for b in res["written_buckets"])
+        assert _new_lineage(cat, "t", seen) == \
+            {b: full[b] for b in res["written_buckets"]}
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+
+def test_corrupt_lineage_fails_loudly(spark, tmp_path):
+    """Only an absent lineage, or one with no data file, is empty. A file
+    Spark cannot read must raise, not make resume redo every bucket."""
+    from sen2rts_spark.sources.catalog import Catalog
+    cat = Catalog(spark, str(tmp_path), n_buckets=8)
+    assert cat.completed_buckets("t") == []
+    os.makedirs(cat.lineage_path)
+    # a lineage write cut short leaves only a hidden temporary file
+    with open(os.path.join(cat.lineage_path, ".part-x.zstd.parquet"), "wb") as f:
+        f.write(b"PAR1 cut short")
+    assert cat.completed_buckets("t") == []
+
+    with open(os.path.join(cat.lineage_path, "part-00000.parquet"), "wb") as f:
+        f.write(b"not a parquet file" * 8)
+    with pytest.raises(Exception, match="(?i)parquet"):
+        cat.completed_buckets("t")
+    df = spark.range(0, 50).select(F.col("id").cast("string").alias("id"))
+    with pytest.raises(Exception, match="(?i)parquet"):
+        cat.write_stage(df, "t", resume=True)
+    assert not os.path.exists(cat.table_path("t"))
+
+
+def test_mixed_spark_and_pyarrow_lineage(spark, tmp_path):
+    """A catalog whose lineage was written by Spark (INT96 committed_at)
+    keeps resuming: its commit and a new pyarrow-written one read back
+    together with LINEAGE_SCHEMA's dtypes and both count."""
+    import pandas as pd
+    import pyarrow.parquet as pq
+    from sen2rts_spark.sources.catalog import LINEAGE_SCHEMA, Catalog
+    cat = Catalog(spark, str(tmp_path), n_buckets=8)
+    df = spark.range(0, 300).select(F.col("id").cast("string").alias("id"))
+    first = cat.write_stage(df, "t", only_buckets=[0, 1, 2, 3])
+    cols = [f.split()[0] for f in LINEAGE_SCHEMA.split(", ")]
+    old_rows = [tuple(r[c] for c in cols) for r in cat.lineage().collect()]
+    # rewrite that commit's lineage the way Spark's writer committed it
+    shutil.rmtree(cat.lineage_path)
+    spark.createDataFrame(pd.DataFrame(old_rows, columns=cols), LINEAGE_SCHEMA) \
+        .withColumn("committed_at", F.current_timestamp()) \
+        .coalesce(1).write.mode("append").parquet(cat.lineage_path)
+    spark_file, = [f for f in os.listdir(cat.lineage_path)
+                   if f.endswith(".parquet")]
+    col = pq.ParquetFile(os.path.join(cat.lineage_path, spark_file)) \
+        .schema.column(cols.index("committed_at"))
+    assert col.physical_type == "INT96"
+
+    rest = cat.write_stage(df, "t", resume=True)
+    assert rest["written_buckets"] == [4, 5, 6, 7]
+    lin = cat.lineage()
+    assert lin.dtypes == spark.createDataFrame([], LINEAGE_SCHEMA).dtypes
+    rows = lin.collect()
+    assert len(rows) == 8 and all(r.committed_at is not None for r in rows)
+    assert len({r.run_id for r in rows}) == 2
+    assert cat.completed_buckets("t") == list(range(8))
+    m, = cat.metrics().collect()
+    assert (m["buckets"], m["rows"]) == (8, first["rows"] + rest["rows"]) \
+        == (8, 300)
+
+
+def test_commit_runs_only_its_data_write(spark, tmp_path):
+    """A commit of a cached input runs exactly the jobs of the bare
+    partitioned dynamic-overwrite write of that input: no recount, no
+    lineage job."""
+    from sen2rts_spark.sources.catalog import Catalog
+    sc = spark.sparkContext
+    df = spark.range(0, 400).select(F.col("id").cast("string").alias("id"),
+                                    (F.col("id") * 0.5).alias("value"))
+    df.cache().count()
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    bare = jobs("catalog-bare-write", lambda: df
+                .withColumn("bucket", F.pmod(F.hash("id"), F.lit(8)))
+                .write.mode("overwrite").partitionBy("bucket")
+                .option("partitionOverwriteMode", "dynamic")
+                .parquet(str(tmp_path / "bare")))
+    cat = Catalog(spark, str(tmp_path / "cat"), n_buckets=8)
+    commit = jobs("catalog-commit", lambda: cat.write_stage(df, "t"))
+    assert bare >= 1 and commit == bare
+    df.unpersist()
