@@ -3,7 +3,7 @@
 Re-creates ``cut_cycles()`` (/root/reference/R/cut_cycles.R:81-361) and its
 internal ``clean_maxmin_ts()`` (:365-413) as a per-series numpy scan. The
 detection is inherently sequential (alternation cleaning, prominence checks),
-so it runs inside an ``applyInPandas`` per url; the surrounding relval
+so it runs as a ``grouped_apply`` kernel per url; the surrounding relval
 normalisation / year ranking are also computed here since they are
 per-id / per-(id, year) — one shuffle on url covers the whole operator.
 

@@ -1,7 +1,7 @@
 """Per-series numpy kernels: theoretical-cadence grid, smoothing, gap filling.
 
-These are the numeric bodies executed inside ``applyInPandas`` (one call per
-url/series, vectorized inside — no per-row Python). Semantics re-create the
+These are the numeric bodies the ``grouped_apply`` operators call (one call
+per url/series, vectorized inside — no per-row Python). Semantics re-create the
 reference pipeline:
 
 - ``dop_grid``      ~ s2_dop_simpl()        (/root/reference/R/s2_dop_simpl.R:21-70)

@@ -38,9 +38,9 @@ def encode_blobs(tier_df: DataFrame, tier: str, chunk_days: int = 366,
     Hash-partitioned on (id, chunk), sorted within partitions, then a single
     mapInArrow pass walks whole (id, chunk) runs with ``grouped.arrow_runs``
     and encodes each batch of runs with one ``blob_batch`` call — no
-    per-group Python, one Arrow batch out per batch of runs (the
-    applyInPandas per-group dispatch was ~15x slower at 3000 series, see
-    operators/grouped.py).
+    per-group Python, one Arrow batch out per batch of runs (one Python
+    call per group, as ``groupBy().applyInPandas`` makes, was ~15x slower
+    at 3000 series).
 
     Contract: ``value`` must be non-NaN — the write job fails loudly on NaN
     (since r6) because NaN silently diverges the ``decode_blobs_agg``

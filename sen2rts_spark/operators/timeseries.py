@@ -1,6 +1,7 @@
 """Per-series pipeline operators: smooth → fill → cut_cycles → pheno.
 
-Each operator is one ``applyInPandas`` over ``groupBy(id)`` — the reference's
+Each operator is one ``grouped_apply`` keyed by id (operators/grouped.py:
+one Python call per Arrow batch of whole series) — the reference's
 per-id R loops (smooth_s2ts.R:182,197; fill_s2ts.R:75; cut_cycles.R body)
 become Arrow-batched numpy kernels executed in parallel across millions of
 series; the only shuffle is the hash partition on id, reused stage to stage.

@@ -57,12 +57,13 @@ def spread(df: DataFrame, *keys: str) -> DataFrame:
     what the registry's float discipline exists for: every cross-engine
     float is ROUND()ed on both sides (module docstring).
 
-    ``keys``: columns to HASH-partition on — a (near-)unique id, or the
-    downstream groupBy keys so the kernel's exchange is this one. Preferred
-    over keyless round-robin, which pays a local sort of the whole input on
-    the single upstream task first (spark.sql.execution.sortBeforeRepartition,
-    needed so retried tasks reproduce their row-to-partition assignment —
-    measured +1 s on the 1 M-row events table). Hashing a unique id is the
+    ``keys``: columns to HASH-partition on — a (near-)unique id. Grouped
+    kernels bring their own exchange (``grouped_apply``), so none reuses
+    this one. Preferred over keyless round-robin, which pays a local sort
+    of the whole input on the single upstream task first
+    (spark.sql.execution.sortBeforeRepartition, needed so retried tasks
+    reproduce their row-to-partition assignment — measured +1 s on the
+    1 M-row events table). Hashing a unique id is the
     guide §2.5 deterministic-spread pattern: retry-safe by construction,
     uniform because the key cardinality vastly exceeds the partition count,
     and sort-free.
@@ -331,23 +332,27 @@ SELECT user_id,
 FROM d WHERE dd IS NOT NULL AND dd > 0 GROUP BY user_id
 """)
 def q_gcd_date_diffs(spark, sf_dir):
-    # A13: GCD of date diffs (fill_s2ts.R:52-58) — Euclid as a pandas kernel
-    import math as _math
+    # A13: GCD of date diffs (fill_s2ts.R:52-58)
+    return _day_diff_gcd(load(spark, sf_dir, "events"))
 
+
+def _day_diff_gcd(e: DataFrame) -> DataFrame:
+    """(user_id, g): the GCD of each user's positive day gaps between
+    consecutive events, one ``np.gcd.reduce`` per user."""
+    import numpy as np
     import pandas as pd
-    e = load(spark, sf_dir, "events")
+
+    from .operators.grouped import grouped_apply
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     day = (F.unix_timestamp("ts") / 86400).cast("long")
     d = e.select("user_id", (day - F.lag(day).over(w)).alias("dd")) \
         .filter(F.col("dd").isNotNull() & (F.col("dd") > 0))
 
     def _fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        g = 0
-        for v in pdf["dd"]:
-            g = _math.gcd(g, int(v))
+        g = int(np.gcd.reduce(pdf["dd"].to_numpy(dtype=np.int64)))
         return pd.DataFrame([{"user_id": pdf["user_id"].iloc[0], "g": g}])
 
-    return d.groupBy("user_id").applyInPandas(_fn, "user_id bigint, g bigint")
+    return grouped_apply(d, ["user_id"], _fn, "user_id bigint, g bigint")
 
 
 @register("agg_fanout_melt", """
@@ -796,20 +801,8 @@ def q_series_integrity_composite(spark, sf_dir):
     # Composite of A13 (GCD of date diffs, fill_s2ts.R:52-58), A12 ((id,
     # date) dup detect, s2ts-class.R:208-214) and A7 (type-1 quantile,
     # cut_cycles.R:149) — the per-series sanity checks run before fill.
-    import numpy as np
-    import pandas as pd
     e = load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    day = (F.unix_timestamp("ts") / 86400).cast("long")
-    d = e.select("user_id", (day - F.lag(day).over(w)).alias("dd")) \
-        .filter(F.col("dd").isNotNull() & (F.col("dd") > 0))
-
-    def _gcd_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        g = int(np.gcd.reduce(pdf["dd"].to_numpy(dtype=np.int64)))
-        return pd.DataFrame([{"user_id": pdf["user_id"].iloc[0], "g": g}])
-
-    from .operators.grouped import grouped_apply
-    g = grouped_apply(d, ["user_id"], _gcd_fn, "user_id bigint, g bigint")
+    g = _day_diff_gcd(e)
     dup = (e.groupBy("user_id", "ts").agg(F.count(F.lit(1)).alias("n"))
            .filter(F.col("n") > 1)
            .groupBy("user_id").agg(F.count(F.lit(1)).alias("n_dup_keys")))

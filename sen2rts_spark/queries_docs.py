@@ -14,6 +14,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 
+from .operators.grouped import grouped_apply
 from .queries import load, register, spread as _spread
 
 
@@ -696,21 +697,16 @@ def _pairwise_cosine_block(ids, E, thr):
 
 
 def _pair_sims_kernel(thr, extra_cols=()):
-    """applyInPandas kernel over one LSH cell: emit (va, vb, sim[, group
-    cols]) for every in-cell pair with sim >= thr (raw, un-rounded sims —
-    the caller rounds in Catalyst exactly as before). Null embeddings are
-    dropped up front: they can only produce null sims, which the former
-    per-pair filter dropped too."""
+    """grouped_apply kernel over one LSH cell, rows in vec_id order: emit
+    (va, vb, sim[, group cols]) for every in-cell pair with sim >= thr (raw,
+    un-rounded sims — the caller rounds in Catalyst exactly as before). Null
+    embeddings are dropped up front: they can only produce null sims, which
+    the former per-pair filter dropped too."""
     def _fn(pdf):
         pdf = pdf[pdf["embedding"].notna()]
-        pdf = pdf.sort_values("vec_id")
         ids = pdf["vec_id"].to_numpy()
         if len(ids) < 2:
-            return pd.DataFrame({"va": np.zeros(0, np.int64),
-                                 "vb": np.zeros(0, np.int64),
-                                 "sim": np.zeros(0),
-                                 **{c: pd.Series([], dtype=pdf[c].dtype)
-                                    for c in extra_cols}})
+            return None
         E = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
         va, vb, sim = _pairwise_cosine_block(ids, E, thr)
         out = {"va": va, "vb": vb, "sim": sim}
@@ -767,43 +763,6 @@ _ANN_BUCKET_SQL = " + ".join(
     for i in range(ANN_LSH_BITS))
 
 
-def ann_lsh_pairs(e, hot_bucket_cap=None):
-    """(va, vb, bucket, ea, eb) candidate pairs within a hyperplane bucket.
-
-    ``hot_bucket_cap=K``: buckets with more than K members contribute only
-    star pairs — the bucket representative (min vec_id) joined against every
-    other member — so pair count is linear, not quadratic, in hot-bucket
-    size. Default None = exhaustive in-bucket pairs (the oracle semantics).
-    """
-    bucket = sum(
-        (F.when(F.col("embedding")[2 * i] - F.col("embedding")[2 * i + 1] >= 0,
-                F.lit(1 << i)).otherwise(F.lit(0))
-         for i in range(ANN_LSH_BITS)), start=F.lit(0))
-    withb = e.withColumn("bucket", bucket)
-    left = withb
-    if hot_bucket_cap is not None:
-        w = Window.partitionBy("bucket")
-        left = (withb
-                .withColumn("_bn", F.count(F.lit(1)).over(w))
-                .withColumn("_rep", F.min("vec_id").over(w))
-                .filter((F.col("_bn") <= F.lit(int(hot_bucket_cap)))
-                        | (F.col("vec_id") == F.col("_rep")))
-                .drop("_bn", "_rep"))
-    # carry the vector norm computed once per ROW: consumers that divide by
-    # ||a||*||b|| would otherwise re-fold both arrays inside every pair
-    nrm = F.expr(_norm_sql("embedding"))
-    # _spread: the pair expansion happens on the STREAMED side of the
-    # (planner-chosen) broadcast join — parallelize it past the one-row-group
-    # scan; the build side stays as the planner sizes it
-    a = _spread(left, "vec_id").select(
-        F.col("vec_id").alias("va"), F.col("embedding").alias("ea"),
-        "bucket", nrm.alias("na_"))
-    b = withb.select(F.col("vec_id").alias("vb"), F.col("embedding").alias("eb"),
-                     F.col("bucket").alias("bucket_b"), nrm.alias("nb_"))
-    return a.join(b, (F.col("bucket") == F.col("bucket_b"))
-                  & (F.col("va") < F.col("vb")))
-
-
 @register("ann_lsh_bucketed", f"""
 WITH bk AS (
   SELECT vec_id, embedding, {_ANN_BUCKET_SQL} AS bucket FROM embeddings),
@@ -822,9 +781,8 @@ def q_ann_lsh_bucketed(spark, sf_dir):
     neighbors searched within the bucket only (bucket = the shuffle key, no
     all-pairs join). The deterministic hyperplane family makes the whole
     path oracle-able; production would use seeded random normals + multiple
-    tables, same plan shape. Hot-bucket star-pair capping available via
-    ann_lsh_pairs(hot_bucket_cap=K); the gate runs exhaustive to match the
-    oracle."""
+    tables, same plan shape. In-bucket expansion is exhaustive, as the
+    oracle requires."""
     e = load(spark, sf_dir, "embeddings")
     bucket = sum(
         (F.when(F.col("embedding")[2 * i] - F.col("embedding")[2 * i + 1] >= 0,
@@ -834,15 +792,11 @@ def q_ann_lsh_bucketed(spark, sf_dir):
     # §4.2): one shuffle keyed on the hyperplane bucket — the former join
     # key — then batched bit-identical cosines per cell (see
     # _pairwise_cosine_block; 782 k pairs at sf1.0 took 9.1 s through the
-    # interpreted per-pair fold). ann_lsh_pairs remains the generic
-    # (capped) pair generator for callers that need the join form.
-    # _spread on the bucket key — one reused exchange, AQE-coalesce-proof
-    # (see q_dedup_embedding_near)
-    withb = _spread(e.select("vec_id", bucket.alias("bucket"), "embedding"),
-                    "bucket")
-    out = withb.groupBy("bucket") \
-        .applyInPandas(_pair_sims_kernel(ANN_SIM_THR, extra_cols=("bucket",)),
-                       "va long, vb long, sim double, bucket int")
+    # interpreted per-pair fold).
+    out = grouped_apply(
+        e.select("vec_id", bucket.alias("bucket"), "embedding"), ["bucket"],
+        _pair_sims_kernel(ANN_SIM_THR, extra_cols=("bucket",)),
+        "va long, vb long, sim double, bucket int", order=["vec_id"])
     return out.select("va", "vb", F.round("sim", 4).alias("sim"), "bucket")
 
 
@@ -1412,15 +1366,10 @@ def q_dedup_embedding_near(spark, sf_dir):
     # O(dim) fold per candidate pair dominated the query (measured
     # ~11 us/pair, 14.9 s at sf1.0 for 1.25 M pairs). Raw sims cross the
     # boundary; the ROUND stays in Catalyst as before.
-    # _spread on the cell key: the groupBy reuses this one exchange, and the
-    # explicit engine-width count stops AQE coalescing the (tiny-by-bytes)
-    # kernel input to one partition, which would serialize the per-cell
-    # Python calls (measured 1.10 -> 0.62 s at sf0.1)
-    eb = _spread(e.select("vec_id", "label", bucket.alias("bucket"),
-                          "embedding"), "label", "bucket")
-    out = eb.groupBy("label", "bucket") \
-        .applyInPandas(_pair_sims_kernel(NEAR_DUP_SIM),
-                       "va long, vb long, sim double")
+    out = grouped_apply(
+        e.select("vec_id", "label", bucket.alias("bucket"), "embedding"),
+        ["label", "bucket"], _pair_sims_kernel(NEAR_DUP_SIM),
+        "va long, vb long, sim double", order=["vec_id"])
     return out.select("va", "vb", F.round("sim", 4).alias("sim"))
 
 

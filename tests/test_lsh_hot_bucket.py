@@ -8,10 +8,7 @@ around a representative (M-1 pairs), keeping the cluster connected for the
 downstream union-find/verify step.
 """
 
-import pyspark.sql.functions as F
-
-from sen2rts_spark.queries_docs import (N_PERMS, _lsh_candidate_pairs,
-                                        ann_lsh_pairs)
+from sen2rts_spark.queries_docs import N_PERMS, _lsh_candidate_pairs
 
 
 def _planted_signatures(spark, n_hot, n_cold):
@@ -47,26 +44,3 @@ def test_minhash_cap_no_effect_below_threshold(spark):
     assert capped == exhaustive == [
         (a, b) for a in range(6) for b in range(a + 1, 6)]
 
-
-def test_ann_hot_bucket_cap_linear(spark):
-    # 30 identical embeddings -> one hot hyperplane bucket; 4 distinct others
-    dim = 16
-    hot = [(v, [1.0 if i % 2 == 0 else -1.0 for i in range(dim)])
-           for v in range(30)]
-    # cold vectors land in bucket b (diff sign at hyperplane i = bit i of b),
-    # none in the hot bucket 255
-    cold = []
-    for v, b in enumerate([5, 9, 33, 200]):
-        vec = []
-        for i in range(dim // 2):
-            vec += [1.0 if ((b >> i) & 1) else -1.0, 0.0]
-        cold.append((100 + v, vec))
-    e = spark.createDataFrame(hot + cold, ["vec_id", "embedding"])
-
-    exhaustive = ann_lsh_pairs(e).filter(F.col("va") < 100).count()
-    assert exhaustive == 30 * 29 // 2
-
-    capped = ann_lsh_pairs(e, hot_bucket_cap=10).filter(F.col("va") < 100)
-    rows = capped.collect()
-    assert len(rows) == 29
-    assert all(r.va == 0 for r in rows)

@@ -13,7 +13,17 @@ or put row-at-a-time Python in the hot path — correct at sf0.01, fatal at
   and must plan as BroadcastNestedLoopJoin.
 - ``BatchEvalPython``: a row-at-a-time Python UDF. All Python in the
   registry is Arrow-batched (ArrowEvalPython / MapInArrow / mapInPandas).
+- ``FlatMapGroupsInPandas``: ``groupBy().applyInPandas``, one Python call
+  per group. Grouped kernels go through ``grouped_apply``, one call per
+  Arrow batch.
+
+Each node name matches as a substring (``BatchEvalPython`` also catches
+the row-at-a-time UDTF node ``BatchEvalPythonUDTF``), except a match
+followed by ``WithState``: the streaming ``FlatMapGroupsInPandasWithState``
+does not trip the ``FlatMapGroupsInPandas`` entry.
 """
+
+import re
 
 import pyspark.sql.functions as F
 import pytest
@@ -21,6 +31,7 @@ import pytest
 FORBIDDEN = {
     "CartesianProduct": "non-broadcast cross join",
     "BatchEvalPython": "row-at-a-time Python UDF",
+    "FlatMapGroupsInPandas": "per-group Python dispatch (use grouped_apply)",
 }
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -37,7 +48,7 @@ def test_no_cartesian_or_row_python(spark):
     bad = {}
     for name, plan in _plans(spark):
         hits = [f"{node} ({why})" for node, why in FORBIDDEN.items()
-                if node in plan]
+                if re.search(rf"{node}(?!WithState)", plan)]
         if hits:
             bad[name] = hits
     assert not bad, f"plan guard violations: {bad}"
@@ -104,12 +115,16 @@ def test_connected_components_is_one_python_pass(spark):
 # input exchange is a range partitioning on the cycle key, which gives each
 # of a handful of cycles its own task instead of a shared hash bucket.
 
+def _kernel_subtree(df):
+    """Plan lines from the outermost grouped kernel down."""
+    lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    start = next(i for i, ln in enumerate(lines) if "MapInArrow" in ln)
+    return lines[start:]
+
+
 def _input_exchange(df):
     """(partitioning, key columns) of the exchange feeding the kernel."""
-    import re
-    lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
-    start = next(i for i, ln in enumerate(lines) if "MapInPandas" in ln)
-    ex = next(ln for ln in lines[start:] if "Exchange " in ln)
+    ex = next(ln for ln in _kernel_subtree(df) if "Exchange " in ln)
     kind, args = re.search(r"Exchange (\w+)\((.*)\)", ex).groups()
     return kind, re.findall(r"(\w+)#\d+", args.split(", REPARTITION")[0])
 
@@ -155,3 +170,15 @@ def test_range_placement_gives_each_cycle_its_own_task(spark):
                         "id string, part int", by_range=True).collect()
     assert len(out) == k
     assert len({r.part for r in out}) == k
+
+
+@pytest.mark.parametrize("name, cell", [
+    ("ann_lsh_bucketed", ["bucket"]),
+    ("dedup_embedding_near", ["label", "bucket"]),
+])
+def test_pair_kernel_input_is_one_exchange_on_the_cell_keys(spark, name,
+                                                              cell):
+    import __spark_entry__ as entrymod
+    df = entrymod.queries()[name](spark, SF_DIR)
+    assert sum("Exchange " in ln for ln in _kernel_subtree(df)) == 1
+    assert _input_exchange(df) == ("hashpartitioning", cell)
