@@ -11,6 +11,12 @@ decode(encode(ts, v)) == (ts, v) bit-exact — property-tested. Used as the
 blob payload of the rollup sink (one blob per (id, tier, chunk_start)).
 The reference has no compressed storage (SURVEY.md §2.1 S4); this implements
 the north rule's storage format from the public paper.
+
+One codec per role: the blob store encodes and decodes whole Arrow
+batches through :func:`gorilla_encode_multi` / :func:`gorilla_decode_multi`;
+:func:`gorilla_encode` / :func:`gorilla_decode` are the plain per-blob walks
+(the tests' oracle, and the batch decoder's route for huge blobs). Both
+encoders write the same bytes for the same series.
 """
 
 from __future__ import annotations
@@ -62,23 +68,6 @@ class _BitWriter:
         return out
 
 
-class _BitReader:
-    __slots__ = ("data", "pos")
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-
-    def read(self, bits: int) -> int:
-        # O(bits/8) slice extraction instead of per-bit looping
-        start = self.pos >> 3
-        end = (self.pos + bits + 7) >> 3
-        chunk = int.from_bytes(self.data[start:end], "big")
-        tail = (end << 3) - (self.pos + bits)
-        self.pos += bits
-        return (chunk >> tail) & ((1 << bits) - 1)
-
-
 def _clz64(x: int) -> int:
     return 64 - x.bit_length() if x else 64
 
@@ -100,7 +89,16 @@ def _bitlen64(x: np.ndarray) -> np.ndarray:
 
 
 def _pack_tokens_buf(vals: np.ndarray, widths: np.ndarray) -> np.ndarray:
-    """_pack_tokens returning the uint8 buffer (no bytes copy)."""
+    """Pack variable-width bit tokens (each <= 32 bits) MSB-first into a
+    uint8 buffer.
+
+    Vectorized: cumulative bit offsets place every token; each token is
+    left-shifted to its byte-aligned end and OR-merged byte-wise into the
+    buffer (np.bitwise_or.at handles boundary bytes shared by two tokens).
+    A shifted token spans <= ceil((32+7)/8) = 5 bytes. Zero-width tokens
+    are inert (they advance no bits and write no bytes), so callers may
+    leave unused slots in place instead of filtering.
+    """
     widths64 = widths.astype(np.int64)
     end = np.cumsum(widths64)
     total = int(end[-1]) if len(end) else 0
@@ -122,30 +120,32 @@ def _pack_tokens_buf(vals: np.ndarray, widths: np.ndarray) -> np.ndarray:
     return buf
 
 
-def _pack_tokens(vals: np.ndarray, widths: np.ndarray) -> bytes:
-    """Pack variable-width bit tokens (each <= 32 bits) MSB-first.
+def gorilla_encode(ts: np.ndarray, values: np.ndarray) -> bytes:
+    """Encode int64 timestamps (sorted) + float64 values into a Gorilla blob.
 
-    Vectorized: cumulative bit offsets place every token; each token is
-    left-shifted to its byte-aligned end and OR-merged byte-wise into the
-    buffer (np.bitwise_or.at handles boundary bytes shared by two tokens).
-    A shifted token spans <= ceil((32+7)/8) = 5 bytes. Zero-width tokens
-    are inert (they advance no bits and write no bytes), so callers may
-    leave unused slots in place instead of filtering.
+    A per-point walk through one bit writer. The value-window policy is
+    blob-global: one '11' header with the tightest window covering every
+    nonzero XOR, then '10' reuse — unlike the paper's shrink-fit rule it
+    needs no sequential window state; any policy is valid Gorilla, the
+    decoder follows the control bits (paper §4.1.2 explicitly leaves the
+    reuse heuristic to the encoder). The blob writers encode through
+    :func:`gorilla_encode_multi`, which writes the same bytes; this walk
+    shares no code with it and is the tests' oracle for it.
     """
-    return _pack_tokens_buf(vals, widths).tobytes()
+    ts = np.asarray(ts, dtype=np.int64)
+    values = np.asarray(values, dtype=np.float64)
+    n = len(ts)
+    if len(values) != n:
+        raise ValueError(
+            f"ts/values length mismatch: {n} vs {len(values)}")
+    header = _MAGIC + struct.pack(">I", n)
+    if n == 0:
+        return header
+    header += struct.pack(">q", int(ts[0]))
+    header += struct.pack(">Q", int(values[:1].view(np.uint64)[0]))
+    if n == 1:
+        return header
 
-
-# Below this length the ~0.4 ms fixed cost of the vectorized path (25+
-# numpy dispatches on tiny arrays) exceeds the per-point loop entirely;
-# measured crossover ~150 points on this host.
-_SMALL_N = 192
-
-
-def _encode_small(header: bytes, ts: np.ndarray, values: np.ndarray) -> bytes:
-    """Per-point encode loop — faster than the vectorized path for short
-    series (daily-tier blobs are often < 100 points at fine chunking).
-    Same blob-global value window as the vectorized path, so both paths
-    (and gorilla_encode_multi) write the same bytes for the same series."""
     w = _BitWriter()
     deltas = np.diff(ts)
     dods = np.diff(np.concatenate(([np.int64(0)], deltas)))
@@ -166,14 +166,13 @@ def _encode_small(header: bytes, ts: np.ndarray, values: np.ndarray) -> bytes:
             w.write(dod & ((1 << 64) - 1), 64)
     bits = values.view(np.uint64)
     xors = (bits[1:] ^ bits[:-1]).tolist()
-    # blob-global window (same policy as the vectorized path — see
-    # gorilla_encode docstring): one pre-pass finds the tightest window
-    # covering every nonzero XOR, the stream is then one '11' + N×'10'.
+    # blob-global window: one pre-pass finds the tightest window covering
+    # every nonzero XOR, the stream is then one '11' + N×'10'
     lead_g, trail_g = 64, 64
     for x in xors:
         if x:
             lead = _clz64(x)
-            lead_g = min(lead_g, 31 if lead > 31 else lead)
+            lead_g = min(lead_g, 31 if lead > 31 else lead)  # 6b lead field cap
             trail_g = min(trail_g, (x & -x).bit_length() - 1)
     mean_g = 64 - lead_g - trail_g
     first = True
@@ -190,104 +189,6 @@ def _encode_small(header: bytes, ts: np.ndarray, values: np.ndarray) -> bytes:
             w.write(0b10, 2)
         w.write(x >> trail_g, mean_g)
     return header + w.getvalue()
-
-
-def gorilla_encode(ts: np.ndarray, values: np.ndarray) -> bytes:
-    """Encode int64 timestamps (sorted) + float64 values into a Gorilla blob.
-
-    Long series: fully vectorized (no per-point Python) — delta-of-delta
-    classes via np.select, XOR lead/trail via vectorized bit-length, one
-    variable-width token pack at the end. The value-window policy is
-    blob-global: one '11' header with the tightest window covering every
-    nonzero XOR, then '10' reuse — unlike the paper's shrink-fit rule it
-    needs no sequential window state; any policy is valid Gorilla, the
-    decoder follows the control bits (paper §4.1.2 explicitly leaves the
-    reuse heuristic to the encoder). Short series (< _SMALL_N) dispatch to
-    the per-point loop, which beats numpy's fixed dispatch cost there and
-    writes the same bytes.
-    """
-    ts = np.asarray(ts, dtype=np.int64)
-    values = np.asarray(values, dtype=np.float64)
-    n = len(ts)
-    if len(values) != n:
-        raise ValueError(
-            f"ts/values length mismatch: {n} vs {len(values)}")
-    header = _MAGIC + struct.pack(">I", n)
-    if n == 0:
-        return header
-    header += struct.pack(">q", int(ts[0]))
-    header += struct.pack(">Q", int(values[:1].view(np.uint64)[0]))
-    if n == 1:
-        return header
-    if n < _SMALL_N:
-        return _encode_small(header, ts, values)
-
-    m = n - 1
-    # ---- timestamp tokens: dod class prefix + payload (64b split 32+32)
-    deltas = np.diff(ts)
-    dods = np.empty(m, dtype=np.int64)
-    dods[0] = deltas[0]
-    np.subtract(deltas[1:], deltas[:-1], out=dods[1:])
-    cls = np.select(
-        [dods == 0,
-         (dods >= -63) & (dods <= 64),
-         (dods >= -255) & (dods <= 256),
-         (dods >= -2047) & (dods <= 2048)],
-        [0, 1, 2, 3], default=4)
-    du = dods.view(np.uint64)  # two's complement bits
-    tv = np.zeros((m, 3), dtype=np.uint64)
-    tw = np.zeros((m, 3), dtype=np.uint8)
-    tv[:, 0] = np.array([0b0, 0b10, 0b110, 0b1110, 0b1111],
-                        dtype=np.uint64)[cls]
-    tw[:, 0] = np.array([1, 2, 3, 4, 4], dtype=np.uint8)[cls]
-    # biased payloads wrap correctly in two's-complement uint64 arithmetic
-    tv[:, 1] = np.select(
-        [cls == 1, cls == 2, cls == 3, cls == 4],
-        [(du + np.uint64(63)) & np.uint64(0x7F),
-         (du + np.uint64(255)) & np.uint64(0x1FF),
-         (du + np.uint64(2047)) & np.uint64(0xFFF),
-         du >> np.uint64(32)],
-        default=np.uint64(0))
-    tw[:, 1] = np.array([0, 7, 9, 12, 32], dtype=np.uint8)[cls]
-    tv[:, 2] = du & np.uint64(0xFFFFFFFF)
-    tw[:, 2] = np.where(cls == 4, 32, 0).astype(np.uint8)
-
-    # ---- value tokens: blob-global window (one '11' header, then '10'
-    # reuse for every later nonzero XOR). The window is the tightest
-    # (lead, trail) covering ALL nonzero XORs, so every payload fits by
-    # construction. Chosen over the paper's shrink-fit because the decoder
-    # can then batch the whole value stream as fixed-width tokens
-    # (_decode_values_vec) — any window policy is valid Gorilla, the
-    # decoder follows the control bits (paper §4.1.2).
-    bits = values.view(np.uint64)
-    xors = bits[1:] ^ bits[:-1]
-    nz = xors != 0
-    idxnz = np.flatnonzero(nz)
-    vv = np.zeros((m, 4), dtype=np.uint64)
-    vw = np.zeros((m, 4), dtype=np.uint8)
-    vw[:, 0] = np.where(nz, 2, 1).astype(np.uint8)
-    if len(idxnz):
-        xnz = xors[idxnz]
-        bl = _bitlen64(xnz)
-        lead_g = int(min(int(np.min(64 - bl)), 31))  # 6b lead field cap
-        low = xnz & (~xnz + np.uint64(1))            # x & -x
-        trail_g = int(np.min(_bitlen64(low))) - 1
-        mean_g = 64 - lead_g - trail_g
-        first = idxnz[0]
-        vv[nz, 0] = np.uint64(0b10)
-        vv[first, 0] = np.uint64(0b11)
-        vw[first, 1] = 12
-        vv[first, 1] = np.uint64((lead_g << 6) | (mean_g - 1))
-        mb = xors >> np.uint64(trail_g)     # fits in mean_g bits by design
-        vw[nz, 2] = max(mean_g - 32, 0)
-        vv[:, 2] = mb >> np.uint64(32)
-        vw[nz, 3] = min(mean_g, 32)
-        vv[:, 3] = mb & np.uint64(0xFFFFFFFF)
-
-    allw = np.concatenate([tw.ravel(), vw.ravel()])
-    allv = np.concatenate([tv.ravel(), vv.ravel()])
-    used = allw > 0
-    return header + _pack_tokens(allv[used], allw[used])
 
 
 def gorilla_encode_multi(ts: np.ndarray, values: np.ndarray,
@@ -475,9 +376,10 @@ def _next_set_bit(arr: np.ndarray, b: int) -> int:
         step = min(step * 2, 1 << 20)
     return len(arr) << 3
 
-
-def _decode_ts_slow(r: "_BitReader", ts: np.ndarray, start: int, delta: int):
-    """General delta-of-delta walk from ts[start-1] with running ``delta``.
+def _decode_ts(data: bytes, pos: int, ts: np.ndarray) -> int:
+    """Delta-of-delta walk filling ts[1:] from ts[0]; ``data`` is the token
+    stream padded with >= 10 zero bytes, ``pos`` its start bit. Returns the
+    bit position after the last timestamp token (the value stream's start).
 
     Runs of '0' dod tokens (stable cadence — the dominant layout after a
     tier rollup, including regular-with-gaps series between the gaps) are
@@ -486,13 +388,12 @@ def _decode_ts_slow(r: "_BitReader", ts: np.ndarray, start: int, delta: int):
     reads (peek the 4-bit class prefix once per point — the method-dispatch
     version ran ~2x slower on irregular series).
     """
-    data = bytes(r.data) + b"\x00" * 10
     arr = np.frombuffer(data, dtype=np.uint8)
-    pos = r.pos
     from_bytes = int.from_bytes
-    t = int(ts[start - 1])
+    t = int(ts[0])
+    delta = 0
     n = len(ts)
-    i = start
+    i = 1
     while i < n:
         s = pos >> 3
         if data[s] & (0xFF >> (pos & 7)) == 0 and data[s + 1] == 0:
@@ -534,11 +435,18 @@ def _decode_ts_slow(r: "_BitReader", ts: np.ndarray, start: int, delta: int):
         t += delta
         ts[i] = t
         i += 1
-    r.pos = pos
+    return pos
 
 
 def gorilla_decode(blob: bytes):
-    """Decode a blob → (ts int64 array, values float64 array)."""
+    """Decode a blob → (ts int64 array, values float64 array).
+
+    One timestamp walk, then one value walk; both follow the control bits,
+    so any encoder window policy decodes. A header count that walks past
+    the blob's bytes raises ValueError, as in :func:`gorilla_decode_multi`,
+    the batch decoder; this per-blob path serves its huge-blob route and
+    the tests.
+    """
     if blob[:4] != _MAGIC:
         raise ValueError("bad gorilla magic")
     (n,) = struct.unpack(">I", blob[4:8])
@@ -553,80 +461,37 @@ def gorilla_decode(blob: bytes):
     if n == 1:
         return ts, vals_bits.view(np.float64)
 
-    r = _BitReader(blob[24:])
-    # Regular cadence (the daily/hourly tier layout) is one '0'-dod run
-    # after the first token — _decode_ts_slow batch-fills it arithmetically;
-    # irregular stretches fall back to its scalar walk per token.
-    _decode_ts_slow(r, ts, 1, 0)
-
-    # value stream: small blobs → scalar walk (numpy fixed costs dominate
-    # under ~_SMALL_N points); large blobs → run-batched vectorized decode
-    data = bytes(r.data) + b"\x00" * 16  # pad: end-of-stream peeks read full width
-    if n < _SMALL_N:
-        _decode_values_scalar(data, r.pos, vals_bits, 1, int(v0_bits), 65, 0)
-    else:
-        _decode_values_vec(data, r.pos, vals_bits, n)
+    stream = bytes(blob[24:])
+    data = stream + b"\x00" * 16  # pad: end-of-stream peeks read full width
+    try:
+        pos = _decode_ts(data, 0, ts)
+        pos = _decode_values_vec(data, pos, vals_bits, n)
+    except (IndexError, OverflowError, ValueError):
+        # a walk ran past the pad, or read a '10' before any window
+        pos = len(data) << 3
+    if pos > len(stream) << 3:
+        raise ValueError("gorilla stream overruns its blob "
+                         "(corrupt header count)")
     return ts, vals_bits.view(np.float64)
 
 
-def _decode_values_scalar(data: bytes, pos: int, out: np.ndarray, start: int,
-                          prev: int, prev_lead: int, prev_mean: int):
-    """Per-point value-stream walk from out[start] with window state given.
-
-    Follows ANY encoder window policy (shrink-fit, exact-match, global).
-    Inlined bit reads: method dispatch and per-point np.uint64() construction
-    measured ~2x of the decode cost.
-    """
-    n = len(out)
-    from_bytes = int.from_bytes
-    for i in range(start, n):
-        # peek 2 control bits without advancing
-        s = pos >> 3
-        chunk = from_bytes(data[s:s + 2], "big")
-        ctrl = (chunk >> (14 - (pos & 7))) & 3
-        if ctrl < 2:  # '0x' → repeat previous value
-            pos += 1
-            out[i] = prev
-            continue
-        if ctrl == 2:  # '10' → reuse previous window
-            pos += 2
-            k = prev_mean
-            e = (pos + k + 7) >> 3
-            chunk = from_bytes(data[pos >> 3:e], "big")
-            mbits = (chunk >> ((e << 3) - (pos + k))) & ((1 << k) - 1)
-            pos += k
-            prev ^= mbits << (64 - prev_lead - prev_mean)
-        else:  # '11' → new window: 6b lead + 6b (meaningful-1) + bits
-            pos += 2
-            e = (pos + 12 + 7) >> 3
-            chunk = from_bytes(data[pos >> 3:e], "big")
-            hdr = (chunk >> ((e << 3) - (pos + 12))) & 0xFFF
-            pos += 12
-            lead = hdr >> 6
-            mean = (hdr & 63) + 1
-            e = (pos + mean + 7) >> 3
-            chunk = from_bytes(data[pos >> 3:e], "big")
-            mbits = (chunk >> ((e << 3) - (pos + mean))) & ((1 << mean) - 1)
-            pos += mean
-            prev ^= mbits << (64 - lead - mean)
-            prev_lead, prev_mean = lead, mean
-        out[i] = prev
-
-
 def _decode_values_vec(data: bytes, pos: int, out: np.ndarray, n: int):
-    """Run-batched value-stream decode: O(runs) numpy calls, no per-point
-    Python on the common path.
+    """Value-stream walk filling out[1:n] from out[0]; ``data`` is padded
+    with >= 16 zero bytes, ``pos`` is the stream's start bit. Returns the
+    bit position after the last value token.
 
-    Exploits the stream structure rather than a fixed policy: a run of '0'
-    control bits is literally a run of 0 *bits* at token boundaries (found
-    with one searchsorted into the set-bit index), and consecutive '10'
-    tokens under a stable window are fixed-width (2+mean bits), so their
-    control bits sit at an arithmetic progression — one strided compare
-    finds the run length, one gather+shift extracts all payloads, and
-    np.bitwise_xor.accumulate chains the values. Blobs written by this
-    module's global-window encoder decode in O(1) runs; '11' window changes
-    are handled scalar, and a stream dominated by them (old shrink-fit
-    blobs) bails out to _decode_values_scalar after 24 window changes.
+    Every token is decoded one at a time ('0' repeat, '10' window reuse,
+    '11' new window) with inlined bit reads, except two kinds of run that
+    the stream's structure makes cheap to batch. A run of >= 9 '0' tokens
+    is literally a run of 0 bits at a token boundary: one galloping byte
+    scan finds its end and one slice fill writes it. After a streak of 24
+    '10' tokens under a stable window, the following '10' tokens are
+    fixed-width (2+mean bits), so their control bits sit at an arithmetic
+    progression: one strided compare finds the run length, one
+    gather+shift extracts all payloads, and np.bitwise_xor.accumulate
+    chains the values. Blobs written by this module's global-window
+    encoders are one '11' then '10'/'0' tokens, so a long blob decodes in
+    a few batches; a blob of 90 points or fewer never batches a '10' run.
     """
     arr = np.frombuffer(data, dtype=np.uint8)
     B = len(arr) << 3
@@ -728,14 +593,14 @@ def _decode_values_vec(data: bytes, pos: int, out: np.ndarray, n: int):
             prev ^= mbits << (64 - prev_lead - prev_mean)
             out[i] = prev
             i += 1
+    return pos
 
 
 # ---------------------------------------------------------------------------
-# Cross-blob vectorized decode. gorilla_decode costs ~100 us of FIXED
-# Python/numpy overhead per blob (reader objects, buffer pads, per-point
-# scalar walks under _SMALL_N) — at tier-blob sizes of ~40-200 points the
-# overhead IS the decode (measured 0.35 Mpts/s single-thread over the
-# sf0.1 blob table). The multi decoder amortizes it across every blob of
+# Cross-blob vectorized decode. gorilla_decode pays a fixed Python/numpy
+# setup per blob and walks a short blob token by token in Python — at
+# tier-blob sizes of ~40-200 points that overhead IS the decode (~0.1 ms
+# per 40-point blob). The multi decoder amortizes it across every blob of
 # an Arrow batch: per-blob headers parse as strided vector ops, and the
 # token streams advance in LOCKSTEP — each loop iteration decodes ONE
 # token for EVERY still-active blob with ~40 vector ops, so Python

@@ -18,10 +18,12 @@ from pyspark.sql import DataFrame, Window
 
 __all__ = ["aggregate_pheno", "assign_season", "detect_forages", "fit_curves"]
 
-def _with_rescale_cols(filled: DataFrame, joined: DataFrame,
-                       rescale: tuple | None) -> DataFrame:
-    """Attach the GLOBAL rescale (fit_curve.R:112 — over the whole filled
-    table, NOT per id) as constant columns ``_g0``/``_gr``.
+def _cycle_slices(filled: DataFrame, cycles: DataFrame,
+                  rescale: tuple | None) -> DataFrame:
+    """The curve fits' input: ``filled`` (id, date, value) joined to
+    ``cycles`` on id and sliced to date ∈ [begin, end) (fit_curve.R:146),
+    with the GLOBAL rescale (fit_curve.R:112 — over the whole filled
+    table, NOT per id) attached as constant columns ``_g0``/``_gr``.
 
     Known rescale → two literals. Unknown → a broadcast single-row aggregate
     crossJoin, so the whole plan stays one lazy DAG with no driver-side
@@ -31,6 +33,9 @@ def _with_rescale_cols(filled: DataFrame, joined: DataFrame,
     the fill→smooth lineage. Callers holding committed stage-table stats
     (catalog) can pass ``rescale=(gmin, gmax - gmin)`` and skip both.
     """
+    joined = filled.select("id", "date", "value").join(cycles, "id")
+    joined = joined.filter((F.col("date") >= F.col("begin"))
+                           & (F.col("date") < F.col("end")))
     if rescale is not None:
         return joined.withColumn("_g0", F.lit(float(rescale[0]))) \
                      .withColumn("_gr", F.lit(float(rescale[1])))
@@ -223,11 +228,8 @@ def fit_curves(filled: DataFrame, cycles: DataFrame, fit="gu",
     from ..kernels.dlog import fit_with_fallback
     from .grouped import grouped_apply
 
-    joined = filled.select("id", "date", "value").join(
-        cycles.select("id", "year", "cycle", "begin", "end"), "id")
-    joined = joined.filter((F.col("date") >= F.col("begin"))
-                           & (F.col("date") < F.col("end")))
-    joined = _with_rescale_cols(filled, joined, rescale)
+    joined = _cycle_slices(
+        filled, cycles.select("id", "year", "cycle", "begin", "end"), rescale)
 
     def _fn(pdf: pd.DataFrame) -> pd.DataFrame:
         g0, gr = float(pdf["_g0"].iloc[0]), float(pdf["_gr"].iloc[0])

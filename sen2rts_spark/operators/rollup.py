@@ -25,8 +25,57 @@ ROLLUP_SCHEMA = ("id string, bucket_start timestamp, count bigint, "
                  "last_ts timestamp, last_value double, value double")
 
 
-def _finish(df: DataFrame) -> DataFrame:
-    return df.withColumn("value", F.col("vwsum") / F.col("wsum"))
+def weighted_obs(obs: DataFrame, id_col: str, ts_col: str, value_col: str,
+                 qa_col: str, *extra) -> DataFrame:
+    """(id, ts, v, w, *extra) with weight w = qa + 1e-9 (A1; null qa
+    weighs 1e-9); rows with a null value are dropped."""
+    w = F.coalesce(F.col(qa_col).cast("double"), F.lit(0.0)) + F.lit(1e-9)
+    return obs.select(
+        F.col(id_col).alias("id"),
+        F.col(ts_col).alias("ts"),
+        F.col(value_col).cast("double").alias("v"),
+        w.alias("w"),
+        *extra,
+    ).filter(F.col("v").isNotNull())
+
+
+def raw_partials() -> list:
+    """The rollup partials of a group of weighted_obs rows."""
+    return [
+        F.count(F.lit(1)).alias("count"),
+        F.sum("w").alias("wsum"),
+        F.sum(F.col("v") * F.col("w")).alias("vwsum"),
+        F.min("v").alias("vmin"),
+        F.max("v").alias("vmax"),
+        F.max("ts").alias("last_ts"),
+        F.max_by("v", "ts").alias("last_value"),
+    ]
+
+
+def fold_partials() -> list:
+    """The rollup partials of a group of partials rows (the exact
+    associative fold)."""
+    return [
+        F.sum("count").alias("count"),
+        F.sum("wsum").alias("wsum"),
+        F.sum("vwsum").alias("vwsum"),
+        F.min("vmin").alias("vmin"),
+        F.max("vmax").alias("vmax"),
+        F.max("last_ts").alias("last_ts"),
+        F.max_by("last_value", "last_ts").alias("last_value"),
+    ]
+
+
+def bucket_cols() -> list:
+    """ROLLUP_SCHEMA's columns but ``value``, selected from a
+    ``groupBy(id, window AS win)`` aggregate of partials."""
+    return ["id", F.col("win.start").alias("bucket_start"), "count", "wsum",
+            "vwsum", "vmin", "vmax", "last_ts", "last_value"]
+
+
+def bucket_value():
+    """The bucket value: the qa-weighted mean (A1) of the partials."""
+    return (F.col("vwsum") / F.col("wsum")).alias("value")
 
 
 def rollup_raw(obs: DataFrame, tier: str = "hourly",
@@ -43,53 +92,24 @@ def rollup_raw(obs: DataFrame, tier: str = "hourly",
     the next tier's keys). Use when obs flows straight into a tier chain
     and/or the Gorilla sink; see extract_obs for the cardinality caveat."""
     secs = TIER_SECONDS[tier]
-    w = F.coalesce(F.col(qa_col).cast("double"), F.lit(0.0)) + F.lit(1e-9)
-    sel = (
-        obs.select(
-            F.col(id_col).alias("id"),
-            F.col(ts_col).alias("ts"),
-            F.col(value_col).cast("double").alias("v"),
-            w.alias("w"),
-        )
-        .filter(F.col("v").isNotNull())
-    )
+    sel = weighted_obs(obs, id_col, ts_col, value_col, qa_col)
     if partition_by_id:
         sel = sel.repartition(partition_by_id, "id")
-    out = (
+    return (
         sel.groupBy("id", F.window("ts", f"{secs} seconds").alias("win"))
-        .agg(
-            F.count(F.lit(1)).alias("count"),
-            F.sum("w").alias("wsum"),
-            F.sum(F.col("v") * F.col("w")).alias("vwsum"),
-            F.min("v").alias("vmin"),
-            F.max("v").alias("vmax"),
-            F.max("ts").alias("last_ts"),
-            F.max_by("v", "ts").alias("last_value"),
-        )
-        .select("id", F.col("win.start").alias("bucket_start"), "count",
-                "wsum", "vwsum", "vmin", "vmax", "last_ts", "last_value")
-    )
-    return _finish(out)
+        .agg(*raw_partials())
+        .select(*bucket_cols())
+        .select("*", bucket_value()))
 
 
 def rollup_tier(prev: DataFrame, tier: str) -> DataFrame:
     """Fold a finer tier into a coarser one (exact associative re-agg)."""
     secs = TIER_SECONDS[tier]
-    out = (
+    return (
         prev.groupBy("id", F.window("bucket_start", f"{secs} seconds").alias("win"))
-        .agg(
-            F.sum("count").alias("count"),
-            F.sum("wsum").alias("wsum"),
-            F.sum("vwsum").alias("vwsum"),
-            F.min("vmin").alias("vmin"),
-            F.max("vmax").alias("vmax"),
-            F.max("last_ts").alias("last_ts"),
-            F.max_by("last_value", "last_ts").alias("last_value"),
-        )
-        .select("id", F.col("win.start").alias("bucket_start"), "count",
-                "wsum", "vwsum", "vmin", "vmax", "last_ts", "last_value")
-    )
-    return _finish(out)
+        .agg(*fold_partials())
+        .select(*bucket_cols())
+        .select("*", bucket_value()))
 
 
 def rollup_sketch(obs: DataFrame, tier: str = "daily",
@@ -152,15 +172,7 @@ def rollup_incremental(existing: DataFrame, new_obs: DataFrame,
     merged = (
         affected.unionByName(delta.drop("value"), allowMissingColumns=True)
         .groupBy("id", "bucket_start")
-        .agg(
-            F.sum("count").alias("count"),
-            F.sum("wsum").alias("wsum"),
-            F.sum("vwsum").alias("vwsum"),
-            F.min("vmin").alias("vmin"),
-            F.max("vmax").alias("vmax"),
-            F.max("last_ts").alias("last_ts"),
-            F.max_by("last_value", "last_ts").alias("last_value"),
-        )
+        .agg(*fold_partials())
     )
-    return untouched.drop("value").unionByName(merged).withColumn(
-        "value", F.col("vwsum") / F.col("wsum"))
+    return untouched.drop("value").unionByName(merged).select(
+        "*", bucket_value())

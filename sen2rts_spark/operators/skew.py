@@ -12,6 +12,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from .rollup import (bucket_cols, bucket_value, fold_partials, raw_partials,
+                     weighted_obs)
+
 __all__ = ["salted_rollup_raw", "domain_of"]
 
 
@@ -25,31 +28,12 @@ def salted_rollup_raw(obs: DataFrame, tier_seconds: int, salt_n: int = 16,
     """Rollup with per-(id, salt) partial aggregation before the final
     combine — two shuffles, but the first is uniform even when one id
     dominates the input."""
-    w = F.coalesce(F.col(qa_col).cast("double"), F.lit(0.0)) + F.lit(1e-9)
-    salted = obs.select(
-        F.col(id_col).alias("id"),
-        F.col(ts_col).alias("ts"),
-        F.col(value_col).cast("double").alias("v"),
-        w.alias("w"),
-        F.pmod(F.hash(ts_col), F.lit(salt_n)).alias("salt"),
-    ).filter(F.col("v").isNotNull())
+    salted = weighted_obs(obs, id_col, ts_col, value_col, qa_col,
+                          F.pmod(F.hash(ts_col), F.lit(salt_n)).alias("salt"))
     partial = (
         salted.groupBy("id", "salt",
                        F.window("ts", f"{tier_seconds} seconds").alias("win"))
-        .agg(F.count(F.lit(1)).alias("count"), F.sum("w").alias("wsum"),
-             F.sum(F.col("v") * F.col("w")).alias("vwsum"),
-             F.min("v").alias("vmin"), F.max("v").alias("vmax"),
-             F.max("ts").alias("last_ts"),
-             F.max_by("v", "ts").alias("last_value"))
+        .agg(*raw_partials())
     )
-    final = (
-        partial.groupBy("id", "win")
-        .agg(F.sum("count").alias("count"), F.sum("wsum").alias("wsum"),
-             F.sum("vwsum").alias("vwsum"), F.min("vmin").alias("vmin"),
-             F.max("vmax").alias("vmax"), F.max("last_ts").alias("last_ts"),
-             F.max_by("last_value", "last_ts").alias("last_value"))
-        .select("id", F.col("win.start").alias("bucket_start"), "count",
-                "wsum", "vwsum", "vmin", "vmax", "last_ts", "last_value",
-                (F.col("vwsum") / F.col("wsum")).alias("value"))
-    )
-    return final
+    return partial.groupBy("id", "win").agg(*fold_partials()) \
+        .select(*bucket_cols(), bucket_value())

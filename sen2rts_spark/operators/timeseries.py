@@ -183,14 +183,8 @@ def extract_pheno(filled: DataFrame, cycles: DataFrame, fit="gu",
     the RD date from the SD metric (extract_pheno.R:178 — an upstream quirk
     we do NOT reproduce; RD here is the recession date itself).
     """
-    joined = filled.select("id", "date", "value").join(cycles, "id")
-    joined = joined.filter((F.col("date") >= F.col("begin"))
-                           & (F.col("date") < F.col("end")))
-    # global rescale as constant columns: literals when known, else a
-    # broadcast single-row aggregate (lazy — no plan-time .first(); the
-    # persist inside bounds the double consumption of `filled`)
-    from .pheno_tools import _with_rescale_cols
-    joined = _with_rescale_cols(filled, joined, rescale)
+    from .pheno_tools import _cycle_slices
+    joined = _cycle_slices(filled, cycles, rescale)
 
     if method in ("trs", "derivatives"):
         schema = PHENO_SCHEMA

@@ -47,9 +47,6 @@ def spread(df: DataFrame, *keys: str) -> DataFrame:
     exchange moves only the scanned bytes (MBs here) and uses an EXPLICIT
     partition count, engine width (1 task/core, see below), so AQE does not
     coalesce it back to one partition.
-    On a store whose layout already provides >= engine-width splits this
-    exchange is pure overhead — disable with SPARK_GRAFT_INPUT_SPREAD=0
-    (scale knob, local default on).
 
     Float note: spreading a table that feeds a float aggregation changes
     which rows share a partial aggregate, i.e. the summation order. That is
@@ -77,9 +74,6 @@ def spread(df: DataFrame, *keys: str) -> DataFrame:
     to ONE partition, which serialized the per-group Python calls (pair
     kernel at sf0.1: 1.10 -> 0.62 s).
     """
-    import os
-    if os.environ.get("SPARK_GRAFT_INPUT_SPREAD", "1") == "0":
-        return df
     sc = df.sparkSession.sparkContext
     n = sc.defaultParallelism
     if keys:

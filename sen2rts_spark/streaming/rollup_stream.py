@@ -12,7 +12,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from ..operators.rollup import TIER_SECONDS
+from ..operators.rollup import (TIER_SECONDS, bucket_cols, bucket_value,
+                                raw_partials, weighted_obs)
 
 __all__ = ["stream_rollup", "stream_dedup_exact"]
 
@@ -28,30 +29,12 @@ def stream_rollup(stream: DataFrame, tier: str = "hourly",
     a live table, append for a log after watermark expiry).
     """
     secs = TIER_SECONDS[tier]
-    w = F.coalesce(F.col(qa_col).cast("double"), F.lit(0.0)) + F.lit(1e-9)
     return (
-        stream.select(
-            F.col(id_col).alias("id"),
-            F.col(ts_col).alias("ts"),
-            F.col(value_col).cast("double").alias("v"),
-            w.alias("w"),
-        )
-        .filter(F.col("v").isNotNull())
+        weighted_obs(stream, id_col, ts_col, value_col, qa_col)
         .withWatermark("ts", watermark)
         .groupBy("id", F.window("ts", f"{secs} seconds").alias("win"))
-        .agg(
-            F.count(F.lit(1)).alias("count"),
-            F.sum("w").alias("wsum"),
-            F.sum(F.col("v") * F.col("w")).alias("vwsum"),
-            F.min("v").alias("vmin"),
-            F.max("v").alias("vmax"),
-            F.max("ts").alias("last_ts"),
-            F.max_by("v", "ts").alias("last_value"),
-        )
-        .select("id", F.col("win.start").alias("bucket_start"), "count",
-                "wsum", "vwsum", "vmin", "vmax", "last_ts", "last_value",
-                (F.col("vwsum") / F.col("wsum")).alias("value"))
-    )
+        .agg(*raw_partials())
+        .select(*bucket_cols(), bucket_value()))
 
 
 def stream_rollup_sketch(stream: DataFrame, tier: str = "hourly",

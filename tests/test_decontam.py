@@ -51,15 +51,17 @@ def test_decontaminate_matches_python(spark):
     assert all(d % _DECONTAM_MOD != 0 for d in got)  # eval docs never flagged
 
 
-def test_ngram_rows_zero_shuffle_and_short_docs(spark, monkeypatch):
-    """The gram subtree must stay exchange-free (the scale contract: each
-    doc's grams are assembled inside its own row; the only optional
-    exchange is the env-gated input spread for single-row-group scans) and
-    a doc shorter than n words must vanish."""
-    monkeypatch.setenv("SPARK_GRAFT_INPUT_SPREAD", "0")
+def test_ngram_rows_zero_shuffle_and_short_docs(spark):
+    """The gram subtree must stay shuffle-free past the input spread (the
+    scale contract: each doc's grams are assembled inside its own row, so
+    its only exchange is the spread's hash of the raw text rows on doc_id
+    at engine width) and a doc shorter than n words must vanish."""
     ng = _ngram_rows(spark, SF_DIR, _DECONTAM_N)
     plan = ng._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan
+    width = spark.sparkContext.defaultParallelism
+    assert plan.count("Exchange") == 1, plan
+    assert re.search(rf"Exchange hashpartitioning\(doc_id#\d+L?, {width}\)",
+                     plan), plan
     short = spark.createDataFrame(
         [(1, "only four words here"), (2, "one two three four five six")],
         "doc_id long, text string")

@@ -68,3 +68,80 @@ def test_decode_fast_path_regular_cadence():
         rt, rv = gorilla_decode(gorilla_encode(ts, vals))
         assert (rt == ts).all()
         assert (rv == vals).all()
+
+
+def _pin_groups():
+    """A fixed seeded batch: regular, irregular, class-4 dod, NaN/±0.0/inf
+    and constant-value groups at ten lengths from 1 to 2,048 points."""
+    rng = np.random.default_rng(20240601)
+    groups = []
+    for n in (1, 2, 3, 40, 191, 192, 193, 366, 1000, 2048):
+        for kind in range(5):
+            if kind == 0:      # regular daily cadence, smooth values
+                ts = np.arange(n, dtype=np.int64) * 86400 + 1_577_836_800
+                vals = np.round(np.sin(np.arange(n) / 9.0), 4)
+            elif kind == 1:    # irregular cadence, noisy values
+                ts = np.cumsum(rng.integers(1, 5000, n)) - 10**6
+                vals = rng.normal(0, 1e3, n)
+            elif kind == 2:    # class-4 (64-bit) delta-of-deltas
+                ts = np.cumsum(rng.integers(1, 10**7, n))
+                vals = rng.standard_normal(n)
+            elif kind == 3:    # NaN, ±0.0 and inf payloads
+                ts = np.cumsum(rng.integers(1, 100, n))
+                vals = rng.normal(0, 1, n)
+                vals[rng.random(n) < 0.2] = np.nan
+                vals[rng.random(n) < 0.1] = 0.0
+                vals[rng.random(n) < 0.1] = -0.0
+                vals[rng.random(n) < 0.05] = np.inf
+            else:              # constant values: no '11' window token
+                ts = np.arange(n, dtype=np.int64) * 3600
+                vals = np.full(n, 0.3)
+            groups.append((np.asarray(ts, np.int64),
+                           np.asarray(vals, np.float64)))
+    return groups
+
+
+def test_format_pinned():
+    """The on-disk blob format is fixed: the batched encoder's buffer for a
+    fixed batch hashes to a literal, and the per-blob encoder writes the
+    same bytes for every group. A change to either encoder that moves a
+    single bit of a stored blob fails here."""
+    import hashlib
+
+    from sen2rts_spark.kernels.gorilla import gorilla_encode_multi
+    groups = _pin_groups()
+    sizes = [len(g[0]) for g in groups]
+    starts = np.concatenate(([0], np.cumsum(sizes)[:-1]))
+    data, off = gorilla_encode_multi(np.concatenate([g[0] for g in groups]),
+                                     np.concatenate([g[1] for g in groups]),
+                                     starts)
+    assert len(data) == 190102
+    assert hashlib.sha256(data.tobytes()).hexdigest() == \
+        "5885111a2e5f62c137172d882d53d05cac52b2e00180b9a26d0af3082ef6ea22"
+    for g, (ts, vals) in enumerate(groups):
+        assert data[off[g]:off[g + 1]].tobytes() == gorilla_encode(ts, vals)
+
+
+def test_decode_rejects_overrun_count():
+    """A corrupt header count must raise the typed overrun error, not
+    decode the zero pad as extra points — on the per-blob decoder and on
+    gorilla_decode_multi's route for blobs above _MULTI_MAX_POINTS."""
+    import pytest
+
+    from sen2rts_spark.kernels.gorilla import (_MULTI_MAX_POINTS,
+                                               gorilla_decode_multi)
+    good = gorilla_encode(np.arange(6, dtype=np.int64) * 7,
+                          np.array([1.0, 2.0, 1.5, 1.5, 3.0, 2.5]))
+    for count in (7, 60, 5000):
+        bad = bytearray(good)
+        bad[4:8] = count.to_bytes(4, "big")
+        with pytest.raises(ValueError, match="overrun"):
+            gorilla_decode(bytes(bad))
+    n = _MULTI_MAX_POINTS + 10
+    big = bytearray(gorilla_encode(np.arange(n, dtype=np.int64) * 3600,
+                                   np.sin(np.arange(n) / 10.0)))
+    for count in (n + 1, n + 50):
+        big[4:8] = count.to_bytes(4, "big")
+        with pytest.raises(ValueError, match="overrun"):
+            gorilla_decode_multi(np.frombuffer(bytes(big), np.uint8),
+                                 np.array([0, len(big)]))

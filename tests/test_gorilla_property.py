@@ -1,9 +1,9 @@
 """Property tests for the Gorilla codec: roundtrip over adversarial inputs.
 
-Hypothesis drives both encoder paths (per-point for n < 192, vectorized
-above) across NaN/Inf payloads, negative and duplicate-free timestamps,
-constant runs and sign flips — decode(encode(x)) must be bit-exact (NaN
-compared on the uint64 view, so payload bits count too).
+Hypothesis drives the per-blob encoder at every length up to 500 points
+across NaN/Inf payloads, negative and duplicate-free timestamps, constant
+runs and sign flips — decode(encode(x)) must be bit-exact (NaN compared on
+the uint64 view, so payload bits count too).
 """
 
 import numpy as np
@@ -104,9 +104,9 @@ def test_multi_roundtrip_mixed_groups(seed, ngroups):
 
 
 def test_multi_byte_identical_to_single_for_large_groups():
-    # same blob-global window policy as both gorilla_encode paths -> same
-    # bytes, short groups (per-point scalar path, n < 192) included: the
-    # blob writers rely on it to replace per-blob gorilla_encode calls
+    # same blob-global window policy as gorilla_encode -> same bytes at
+    # every group size: the blob writers rely on it to replace per-blob
+    # gorilla_encode calls
     rng = np.random.default_rng(3)
     groups = []
     for n in (1, 2, 40, 191, 192, 366, 2048):
@@ -150,7 +150,7 @@ def test_decode_multi_equals_scalar(seed, nblobs):
     """Lockstep decoder == per-blob decoder, bit-exact, over mixed blob
     classes: empty/single-point blobs, all-repeat values, NaN payload bits,
     irregular and regular cadences, class-4 (64-bit) delta-of-deltas,
-    and BOTH encoder paths (scalar < _SMALL_N, vectorized above)."""
+    and blobs of 0 to 400 points."""
     rng = np.random.default_rng(seed)
     blobs, series = [], []
     for i in range(nblobs):
