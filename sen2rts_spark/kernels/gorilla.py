@@ -204,11 +204,11 @@ def gorilla_encode_multi(ts: np.ndarray, values: np.ndarray,
     Token policy is gorilla_encode's blob-global value window applied per
     group, so every blob is byte-identical to ``gorilla_encode(group)``, at
     any group size (property-tested). The point of this entry is the blob
-    writers' hot path (``gorilla_sink.blob_batch``): the ~25-dispatch
-    numpy fixed cost that made per-blob encode ~0.4 ms is paid once per
-    *batch* here — dod classes, XOR windows (per-group minimum.reduceat),
-    and ONE global bit-pack with a <=7-bit per-group alignment pad so every
-    blob starts byte-aligned in the shared buffer. No per-group Python.
+    writers' hot path (``gorilla_sink.blob_batch``, which calls it with at
+    most 65,536 points): dod classes, XOR windows (per-group
+    minimum.reduceat), and ONE global bit-pack with a <=7-bit per-group
+    alignment pad so every blob starts byte-aligned in the shared buffer.
+    No per-group Python.
     """
     ts = np.ascontiguousarray(ts, dtype=np.int64)
     values = np.ascontiguousarray(values, dtype=np.float64)

@@ -11,13 +11,16 @@ group into ONE blob while leaving already-compact groups untouched
 byte-for-byte (so re-running it is idempotent and a planned-but-skipped
 group costs nothing).
 
-Scale shape: one hash shuffle on the group key (the window count that
-splits fragmented groups from singletons), then singletons flow through
-unchanged — no decode, no re-encode — and only fragments enter the
-vectorized decode→merge→re-encode mapInArrow pass. At 100 TB the pass is
-bounded by the fragmented fraction of the store, not the store size, and
-each group's output blob is chunk-bounded exactly like the sink's
-(operators/gorilla_sink.py).
+Scale shape: one pass. A numbered hash repartition on the group key
+(``grouped.partition_count``, the sink's 3 tasks/core; AQE does not
+coalesce a numbered repartition), a within-partition sort, and one
+mapInArrow walk over whole group runs: singleton runs pass through
+byte-for-byte (no decode, no re-encode), multi-fragment runs go through
+the vectorized decode→merge→re-encode. The input is scanned once and
+shuffled once. Each group's output blob is chunk-bounded exactly like the
+sink's (operators/gorilla_sink.py), and the re-encode runs in slices of at
+most 65,536 points, so a task's memory does not grow with its batch of
+merged groups.
 
 Merge policy: fragments of a group must hold DISJOINT bucket_starts — the
 append path only ever adds new buckets. A duplicate bucket across
@@ -34,14 +37,14 @@ compaction is part of the graft's retention-service surface.
 from __future__ import annotations
 
 import numpy as np
-import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+import pyarrow as pa
+from pyspark.sql import DataFrame
 
 # gorilla_encode_multi is called through blob_batch; it stays a module
 # attribute because perfbench's traced runs wrap it here by name
 from ..kernels.gorilla import gorilla_decode_multi, gorilla_encode_multi  # noqa: F401
-from .gorilla_sink import BLOB_SCHEMA, _blob_buffers, blob_batch
-from .grouped import arrow_runs
+from .gorilla_sink import BLOB_ARROW, BLOB_SCHEMA, _blob_buffers, blob_batch
+from .grouped import arrow_runs, partition_count
 
 __all__ = ["compact_blobs"]
 
@@ -59,33 +62,39 @@ def compact_blobs(blobs: DataFrame) -> DataFrame:
     the merged points, so the envelope prune (tier_read_window_prune)
     stays exact after compaction.
 
-    Writing the result: repartition to the sink's standard 3-tasks/core
-    sizing (or your store's target file size) before ``.write`` — the
-    output of the union is small enough post-merge that AQE otherwise
-    coalesces it into few large files and READ parallelism collapses
-    (measured 2.2× slower reads; BENCH/BASELINE.md round-8 compaction).
+    Writing the result: the output already has the sink's 3 tasks/core,
+    hash-partitioned on the group key, and AQE cannot coalesce the
+    numbered repartition, so ``.write`` it as is (or repartition to your
+    store's target file size). A store written in fewer, larger files
+    reads slower (measured 2.2×; BENCH/BASELINE.md round-8 compaction).
     The wall-clock read win is largest for micro-fragments (daily appends:
     1.4× + 26× fewer index rows); weekly-sized fragments already decode at
     amortized cost via the lockstep kernel, so there the payoff is the
     blob-index reduction (envelope scan/filter/shuffle rows), not decode.
     """
     group = ["id", "tier", "chunk_start"]
-    tagged = blobs.withColumn(
-        "_nfrag", F.count(F.lit(1)).over(Window.partitionBy(*group)))
-    single = tagged.filter(F.col("_nfrag") == 1).drop("_nfrag")
-    # the window's hash partitioning already collocates each group; only a
-    # within-partition sort is needed to make groups contiguous for the
-    # streaming merge (same no-second-exchange shape as the sink's
-    # clustered=True path)
-    frag = (tagged.filter(F.col("_nfrag") > 1).drop("_nfrag")
-            .sortWithinPartitions(*group, "min_ts"))
+    arranged = (blobs.select(*BLOB_ARROW.names)
+                .repartition(partition_count(blobs.sparkSession), *group)
+                .sortWithinPartitions(*group, "min_ts"))
 
     def _merge(batches):
-        # per batch of whole groups (contiguous after the sort above): ONE
-        # vectorized decode of every fragment, one stable time sort of the
-        # points within their group, ONE vectorized re-encode
+        # per batch of whole groups (contiguous after the sort above):
+        # singletons go out as they came; the fragments take ONE vectorized
+        # decode, one stable time sort of the points within their group,
+        # and the sink's bounded re-encode
         for batch, starts in arrow_runs(batches, group):
-            dat, offs = _blob_buffers(batch)
+            nblob = np.diff(np.append(starts, batch.num_rows))
+            multi = nblob > 1
+            if not multi.all():
+                # Spark hands timestamps over UTC-zoned, blob_batch writes
+                # them naive: one stream carries one schema
+                yield batch.take(starts[~multi]).cast(BLOB_ARROW)
+            if not multi.any():
+                continue
+            frag = batch.filter(pa.array(np.repeat(multi, nblob)))
+            nblob = nblob[multi]
+            starts = np.cumsum(nblob) - nblob
+            dat, offs = _blob_buffers(frag)
             counts, ts, vals = gorilla_decode_multi(dat, offs)
             sizes = np.add.reduceat(counts, starts)
             gid = np.repeat(np.arange(len(starts)), sizes)
@@ -94,15 +103,14 @@ def compact_blobs(blobs: DataFrame) -> DataFrame:
             dup = np.flatnonzero((ts[1:] == ts[:-1]) & (gid[1:] == gid[:-1]))
             if len(dup):
                 row = starts[gid[dup[0]]]
-                key = [batch.column(k)[row].as_py() for k in group]
+                key = [frag.column(k)[row].as_py() for k in group]
                 raise ValueError(
                     f"duplicate bucket across fragments of (id={key[0]}, "
                     f"tier={key[1]}, chunk={key[2]}): upserts go through "
                     f"the catalog's idempotent bucket overwrite, not blob "
                     f"appends — refusing to pick a winner")
-            yield blob_batch(*(batch.column(k).take(starts) for k in group),
-                             ts * 1_000_000, vals,
-                             np.cumsum(sizes) - sizes)
+            yield from blob_batch(
+                *(frag.column(k).take(starts) for k in group),
+                ts * 1_000_000, vals, np.cumsum(sizes) - sizes)
 
-    merged = frag.mapInArrow(_merge, BLOB_SCHEMA)
-    return single.unionByName(merged)
+    return arranged.mapInArrow(_merge, BLOB_SCHEMA)

@@ -22,13 +22,26 @@ from pyspark.sql import DataFrame
 # perfbench's traced runs wrap ``gorilla_sink.gorilla_encode`` by name
 from ..kernels.gorilla import (gorilla_decode_multi, gorilla_encode,  # noqa: F401
                                gorilla_encode_multi)
-from .grouped import _PARTS_PER_CORE, arrow_runs
+from .grouped import arrow_runs, partition_count
 
 __all__ = ["encode_blobs", "decode_blobs", "decode_blobs_agg", "blob_batch",
-           "BLOB_SCHEMA"]
+           "BLOB_SCHEMA", "BLOB_ARROW"]
 
 BLOB_SCHEMA = ("id string, tier string, chunk_start timestamp, blob binary, "
                "count int, min_ts timestamp, max_ts timestamp")
+
+# the Arrow schema of every batch ``blob_batch`` yields; Spark reads naive
+# timestamps as UTC micros
+BLOB_ARROW = pa.schema([
+    ("id", pa.string()), ("tier", pa.string()),
+    ("chunk_start", pa.timestamp("us")), ("blob", pa.binary()),
+    ("count", pa.int32()), ("min_ts", pa.timestamp("us")),
+    ("max_ts", pa.timestamp("us")),
+])
+
+# points per gorilla_encode_multi call: its scratch arrays take ~700 B per
+# point, so one call over a whole batch of merged groups peaked at ~1 GB
+_ENCODE_MAX_POINTS = 65_536
 
 
 def encode_blobs(tier_df: DataFrame, tier: str, chunk_days: int = 366,
@@ -63,9 +76,8 @@ def encode_blobs(tier_df: DataFrame, tier: str, chunk_days: int = 366,
         "chunk", F.window("bucket_start", f"{chunk_secs} seconds")["start"])
     arranged = with_chunk.select("id", "chunk", "bucket_start", "value")
     if not clustered:
-        parts = _PARTS_PER_CORE * \
-            tier_df.sparkSession.sparkContext.defaultParallelism
-        arranged = arranged.repartition(parts, "id", "chunk")
+        arranged = arranged.repartition(
+            partition_count(tier_df.sparkSession), "id", "chunk")
     arranged = arranged.sortWithinPartitions("id", "chunk", "bucket_start")
 
     def _stream(batches):
@@ -80,39 +92,48 @@ def encode_blobs(tier_df: DataFrame, tier: str, chunk_days: int = 366,
                 # NaN, Spark orders it largest) — fail loudly at write time
                 raise ValueError("NaN value in rollup tier; the Gorilla "
                                  "sink stores non-NaN series only")
-            yield blob_batch(batch.column("id").take(starts),
-                             [tier] * len(starts),
-                             batch.column("chunk").take(starts),
-                             ts_us, vals, starts)
+            yield from blob_batch(batch.column("id").take(starts),
+                                  [tier] * len(starts),
+                                  batch.column("chunk").take(starts),
+                                  ts_us, vals, starts)
 
     return arranged.mapInArrow(_stream, schema=BLOB_SCHEMA)
 
 
 def blob_batch(ids, tiers, chunks, ts_us, vals, starts):
-    """One ``BLOB_SCHEMA`` record batch holding one Gorilla blob per group.
+    """Yield ``BLOB_ARROW`` record batches holding one Gorilla blob per group.
 
     ``ids``/``tiers``/``chunks`` are the groups' keys (one entry per group,
     ``chunks`` as timestamps); ``ts_us``/``vals`` hold every group's points
     back to back, time-sorted within a group, and ``starts`` is each
-    group's first index. All blobs come from ONE ``gorilla_encode_multi``
-    call and share its buffer; ``count``/``min_ts``/``max_ts`` are the
-    groups' point counts and first/last ``ts_us``.
+    group's first index. Groups are encoded in slices of whole groups of at
+    most ``_ENCODE_MAX_POINTS`` points (a larger group goes alone), one
+    ``gorilla_encode_multi`` call and one record batch per slice; a slice's
+    blobs share its buffer. ``count``/``min_ts``/``max_ts`` are the groups'
+    point counts and first/last ``ts_us``.
     """
-    dat, offs = gorilla_encode_multi(ts_us // 1_000_000, vals, starts)
-    last = np.append(starts[1:], len(ts_us)) - 1
-    blob = pa.Array.from_buffers(
-        pa.binary(), len(starts),
-        [None, pa.py_buffer(offs.astype(np.int32)), pa.py_buffer(dat)])
-    return pa.record_batch([
-        pa.array(ids, pa.string()),
-        pa.array(tiers, pa.string()),
-        pa.array(chunks, pa.timestamp("us")),
-        blob,
-        pa.array(last - starts + 1, pa.int32()),
-        pa.array(ts_us[starts], pa.timestamp("us")),
-        pa.array(ts_us[last], pa.timestamp("us")),
-    ], names=["id", "tier", "chunk_start", "blob", "count", "min_ts",
-              "max_ts"])
+    ends = np.append(starts[1:], len(ts_us))
+    g0 = 0
+    while g0 < len(starts):
+        # whole groups up to the cap; a group over it goes alone
+        g1 = max(g0 + 1, int(np.searchsorted(
+            ends, starts[g0] + _ENCODE_MAX_POINTS, side="right")))
+        s, e = starts[g0:g1], ends[g0:g1]
+        dat, offs = gorilla_encode_multi(ts_us[s[0]:e[-1]] // 1_000_000,
+                                         vals[s[0]:e[-1]], s - s[0])
+        blob = pa.Array.from_buffers(
+            pa.binary(), len(s),
+            [None, pa.py_buffer(offs.astype(np.int32)), pa.py_buffer(dat)])
+        yield pa.record_batch([
+            pa.array(ids[g0:g1], pa.string()),
+            pa.array(tiers[g0:g1], pa.string()),
+            pa.array(chunks[g0:g1], pa.timestamp("us")),
+            blob,
+            pa.array(e - s, pa.int32()),
+            pa.array(ts_us[s], pa.timestamp("us")),
+            pa.array(ts_us[e - 1], pa.timestamp("us")),
+        ], schema=BLOB_ARROW)
+        g0 = g1
 
 
 def _blob_buffers(batch):

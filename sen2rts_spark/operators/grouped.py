@@ -45,13 +45,19 @@ from pyspark.sql.pandas.types import (
     _check_series_localize_timestamps, to_arrow_schema)
 from pyspark.sql.types import StructType
 
-__all__ = ["grouped_apply", "run_starts", "arrow_runs"]
+__all__ = ["grouped_apply", "run_starts", "arrow_runs", "partition_count"]
 
 # 3 tasks/core (standard sizing) — straggler/steal mitigation; groups are
 # small relative to partitions so the extra splits don't fragment runs.
-# The one partition-count rule of the grouped kernels, the Gorilla sink and
-# the fused rollup pipeline's exchange.
 _PARTS_PER_CORE = 3
+
+
+def partition_count(spark) -> int:
+    """The one partition-count rule of the grouped kernels, the Gorilla
+    sink, the fused rollup pipeline's exchange and compaction: 3 tasks per
+    core. A numbered repartition plans as ``REPARTITION_BY_NUM``, which AQE
+    does not coalesce."""
+    return _PARTS_PER_CORE * spark.sparkContext.defaultParallelism
 
 
 def grouped_apply(df: DataFrame, keys: list[str], fn: Callable, schema: str,
@@ -65,9 +71,8 @@ def grouped_apply(df: DataFrame, keys: list[str], fn: Callable, schema: str,
     than per row (module docstring). ``fn`` may return None or an empty
     frame for a group that yields no rows.
     """
-    parts = _PARTS_PER_CORE * df.sparkSession.sparkContext.defaultParallelism
     partition = df.repartitionByRange if by_range else df.repartition
-    arranged = partition(parts, *keys) \
+    arranged = partition(partition_count(df.sparkSession), *keys) \
         .sortWithinPartitions(*(keys + (order or [])))
     out_schema = to_arrow_schema(StructType.fromDDL(schema))
     # resolved with the plan, as Catalyst resolves its time-zone-aware casts

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 
 from .extract import extract_obs
 from .gorilla_sink import encode_blobs
-from .grouped import _PARTS_PER_CORE
+from .grouped import partition_count
 from .rollup import rollup_raw
 
 __all__ = ["rollup_gorilla_pipeline"]
@@ -34,10 +34,7 @@ def rollup_gorilla_pipeline(pages: DataFrame, tier: str = "daily",
                             fused: bool = True) -> DataFrame:
     """pages → blob table for ``tier``, ready to write (one blob per
     (id, chunk)). The single fused exchange has the sink's 3 tasks/core."""
-    parts = None
-    if fused:
-        sc = pages.sparkSession.sparkContext
-        parts = _PARTS_PER_CORE * sc.defaultParallelism
+    parts = partition_count(pages.sparkSession) if fused else None
     obs = extract_obs(pages, partition_by_id=parts).select(
         "id", F.col("date").cast("timestamp").alias("ts"), "value", "qa")
     tier_df = rollup_raw(obs, tier)

@@ -1,10 +1,16 @@
 """compact_blobs: fragmented groups merge to one blob, singletons pass
-through byte-identical, duplicate buckets fail loudly, reads unchanged."""
+through byte-identical, duplicate buckets fail loudly, reads unchanged;
+the one plan shape and the writer's bounded encode calls."""
+
+import re
 
 import numpy as np
+import pyarrow as pa
 import pyspark.sql.functions as F
 import pytest
 
+from sen2rts_spark.kernels.gorilla import gorilla_encode
+from sen2rts_spark.operators import gorilla_sink
 from sen2rts_spark.operators.compaction import compact_blobs
 from sen2rts_spark.operators.gorilla_sink import decode_blobs, encode_blobs
 
@@ -68,6 +74,18 @@ def test_compaction_merges_and_preserves_values(spark):
                    | (F.col("max_ts") != F.col("hi2"))))
     assert env.count() == 0
 
+    # the groups that were one blob already come out byte for byte
+    cols = ["blob", "count", "min_ts", "max_ts"]
+    before = {}
+    for r in fragged.collect():
+        before.setdefault((r["id"], r["chunk_start"]), []).append(r)
+    after = {(r["id"], r["chunk_start"]): r for r in compacted.collect()}
+    singles = [k for k, rows in before.items() if len(rows) == 1]
+    assert singles and len(singles) < len(before), \
+        "fixture must mix singleton and fragmented groups"
+    for k in singles:
+        assert [after[k][c] for c in cols] == [before[k][0][c] for c in cols]
+
 
 def test_singletons_pass_through_byte_identical(spark):
     tier = _tier(spark, n_ids=10, days=30)
@@ -118,25 +136,64 @@ def test_duplicate_bucket_raises(spark):
         compact_blobs(dup).collect()
 
 
-def test_no_second_exchange_before_merge(spark):
-    """The fragment branch reuses the window's hash exchange: between the
-    merge MapInArrow and the Window node below it the plan holds only
-    narrow ops (Sort/Filter/Project), never another Exchange."""
+def test_one_exchange_no_window_no_union(spark, tmp_path):
+    """One pass over a scanned store: a single numbered hash exchange on the
+    group key at the sink's 3 tasks/core, no window count and no union of a
+    singleton branch with a merge branch."""
     tier = _tier(spark, n_ids=4, days=20)
-    fragged = _split_encode(spark, tier, cut_day=10, chunk_days=45)
-    plan = (compact_blobs(fragged)._jdf.queryExecution()
+    path = str(tmp_path / "frag")
+    _split_encode(spark, tier, cut_day=10, chunk_days=45) \
+        .write.parquet(path)
+    plan = (compact_blobs(spark.read.parquet(path))._jdf.queryExecution()
             .executedPlan().toString())
-    lines = plan.splitlines()
-    # the merge MapInArrow is the one whose child Sort orders by min_ts
-    # (the encode stage's MapInArrow sorts by bucket_start only)
-    mi = next(i for i, ln in enumerate(lines)
-              if "MapInArrow" in ln
-              and any("Sort" in nxt and "min_ts" in nxt
-                      for nxt in lines[i + 1:i + 3]))
-    wi = next(i for i, ln in enumerate(lines)
-              if i > mi and "Window" in ln)
-    between = "\n".join(lines[mi + 1:wi])
-    assert "Exchange" not in between, between
+    exchanges = [ln for ln in plan.splitlines() if "Exchange " in ln]
+    assert len(exchanges) == 1, plan
+    parts = 3 * spark.sparkContext.defaultParallelism
+    assert (f"hashpartitioning(id, tier, chunk_start, {parts})"
+            in re.sub(r"#\d+", "", exchanges[0])), exchanges[0]
+    assert "Window" not in plan and "Union" not in plan, plan
+
+
+def test_blob_batch_bounds_points_per_encode_call(monkeypatch):
+    """Every gorilla_encode_multi call of the one blob writer holds at most
+    _ENCODE_MAX_POINTS points, except a lone group larger than that, and
+    every blob equals the per-blob walk's blob of its group."""
+    cap = gorilla_sink._ENCODE_MAX_POINTS
+    rng = np.random.default_rng(11)
+    sizes = np.full(241, 624)
+    sizes[100] = cap + 4_000  # one group over the cap, mid-stream
+    starts = np.cumsum(sizes) - sizes
+    gid = np.repeat(np.arange(len(sizes)), sizes)
+    ts_us = (1_704_067_200 + 3600 * (np.arange(len(gid)) - starts[gid])) \
+        * 1_000_000
+    vals = np.round(rng.normal(10, 3, len(gid)), 3)
+    calls = []
+    real = gorilla_sink.gorilla_encode_multi
+
+    def spy(ts, values, group_starts):
+        calls.append((len(ts), len(group_starts)))
+        return real(ts, values, group_starts)
+
+    monkeypatch.setattr(gorilla_sink, "gorilla_encode_multi", spy)
+    ids = [f"s{g}" for g in range(len(sizes))]
+    chunks = pa.array(np.full(len(sizes), 1_704_067_200_000_000),
+                      pa.timestamp("us"))
+    out = pa.Table.from_batches(list(gorilla_sink.blob_batch(
+        ids, ["hourly"] * len(sizes), chunks, ts_us, vals, starts)))
+
+    assert sum(n for n, _ in calls) == len(gid)
+    assert all(n <= cap or g == 1 for n, g in calls), calls
+    assert (sizes[100], 1) in calls
+    assert out.column("id").to_pylist() == ids
+    assert out.column("count").to_pylist() == sizes.tolist()
+    ends = starts + sizes
+    for g, blob in enumerate(out.column("blob").to_pylist()):
+        s, e = starts[g], ends[g]
+        assert blob == gorilla_encode(ts_us[s:e] // 1_000_000, vals[s:e])
+    assert out.column("min_ts").cast(pa.int64()).to_pylist() == \
+        ts_us[starts].tolist()
+    assert out.column("max_ts").cast(pa.int64()).to_pylist() == \
+        ts_us[ends - 1].tolist()
 
 
 def test_group_straddles_arrow_batches(spark):
