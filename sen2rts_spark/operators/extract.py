@@ -69,6 +69,8 @@ def extract_obs(pages: DataFrame, fun: str = "mean",
     rows twice more). Leave None where heavy duplication makes map-side
     combining on the full group key shrink the shuffle instead."""
     txt = extract_text(F.col("html"))
+    # try_cast: a missing or unparsable field reads NULL (the weighted
+    # mean's na.rm below) where an ANSI cast would fail the whole job
     parsed = pages.select(
         F.col("url").alias("id"),
         F.to_date("warc_ts").alias("date"),
@@ -78,10 +80,10 @@ def extract_obs(pages: DataFrame, fun: str = "mean",
         F.regexp_extract("text_x", r"source=(\S+)", 1).alias("orbit"),
         F.regexp_extract("text_x", r"sensor=(\S+)", 1).alias("sensor"),
         F.regexp_extract("text_x", r"ndvi=([-0-9.,eE]+)", 1).alias("metric_s"),
-        F.regexp_extract("text_x", r"class=(\d+)", 1).cast("int").alias("qclass"),
-        F.regexp_extract("text_x", r"cld=(\d+)", 1).cast("int").alias("cld"),
+        F.regexp_extract("text_x", r"class=(\d+)", 1).try_cast("int").alias("qclass"),
+        F.regexp_extract("text_x", r"cld=(\d+)", 1).try_cast("int").alias("cld"),
     ).withColumn(
-        "value0", F.regexp_replace("metric_s", ",", "").cast("double")
+        "value0", F.regexp_replace("metric_s", ",", "").try_cast("double")
     ).withColumn(
         "w", combine_weights(scl_weight(F.col("qclass")), cld_weight(F.col("cld")))
     )

@@ -10,12 +10,20 @@ with ``arrow_runs``: each batch of whole runs is converted to pandas once,
 ``fn`` is called on each run's slice, and the results go back as one Arrow
 batch per input batch.
 
-Placement: hash partitioning by default, which suits kernels whose cost
-follows the row count (smooth, fill, cut_cycles). Operators whose cost is
-per group and large, the curve fits, ask for range partitioning instead.
-Its bounds come from a row sample, so while groups of similar size number
-no more than the partitions, each group gets a partition of its own: a
-handful of cycles run in as many tasks instead of sharing a hash bucket.
+Placement: hash partitioning by default, at ``engine_width``, one task
+per core. It suits kernels whose cost follows the row count (smooth, fill,
+cut_cycles, the pair kernels), where a task is mostly fixed cost: worker
+dispatch and Arrow conversion, ~75 ms of task time for a trivial Python
+task against ~14 ms for a JVM one (4 vCPU), so more, smaller tasks only
+add overhead. Hashed on ``id``, the exchange is ``pmod(murmur3(id), n)``,
+the same hash as the catalog's ``bucket = pmod(hash(id), 32)``: when ``n``
+divides the bucket count, every bucket's rows share one task, and a stage
+commit downstream writes one file per bucket. Operators whose cost is per
+group and large, the curve fits, ask for range partitioning instead, at
+``partition_count``. Its bounds come from a row sample, so while groups of
+similar size number no more than the partitions, each group gets a
+partition of its own: a handful of cycles run in as many tasks instead of
+sharing a hash bucket.
 
 Correctness: either partitioning colocates each group in one partition;
 sortWithinPartitions makes each group a contiguous run; ``arrow_runs``
@@ -45,19 +53,30 @@ from pyspark.sql.pandas.types import (
     _check_series_localize_timestamps, to_arrow_schema)
 from pyspark.sql.types import StructType
 
-__all__ = ["grouped_apply", "run_starts", "arrow_runs", "partition_count"]
+__all__ = ["grouped_apply", "run_starts", "arrow_runs", "partition_count",
+           "engine_width"]
 
-# 3 tasks/core (standard sizing) — straggler/steal mitigation; groups are
-# small relative to partitions so the extra splits don't fragment runs.
+# 3 tasks/core (standard sizing) for the stages that keep it: straggler and
+# steal mitigation where a task's cost is its own work, not its dispatch.
+# A range placement's sampled bounds also give a handful of cycles a task
+# each only with spare partitions: with the fits at 1/core, perfbench's
+# traced extract_pheno (4 cycles, 4 vCPU) took 4.41 s against 3.89 s
+# (median of 3).
 _PARTS_PER_CORE = 3
 
 
+def engine_width(spark) -> int:
+    """One task per core (``defaultParallelism``): the width of the grouped
+    kernels' hash placement and of ``queries.spread``. A numbered
+    repartition plans as ``REPARTITION_BY_NUM``, which AQE does not
+    coalesce."""
+    return spark.sparkContext.defaultParallelism
+
+
 def partition_count(spark) -> int:
-    """The one partition-count rule of the grouped kernels, the Gorilla
-    sink, the fused rollup pipeline's exchange and compaction: 3 tasks per
-    core. A numbered repartition plans as ``REPARTITION_BY_NUM``, which AQE
-    does not coalesce."""
-    return _PARTS_PER_CORE * spark.sparkContext.defaultParallelism
+    """3 tasks per core: the range-placed fits of ``grouped_apply``, the
+    Gorilla sink, the fused rollup pipeline's exchange and compaction."""
+    return _PARTS_PER_CORE * engine_width(spark)
 
 
 def grouped_apply(df: DataFrame, keys: list[str], fn: Callable, schema: str,
@@ -71,12 +90,13 @@ def grouped_apply(df: DataFrame, keys: list[str], fn: Callable, schema: str,
     than per row (module docstring). ``fn`` may return None or an empty
     frame for a group that yields no rows.
     """
-    partition = df.repartitionByRange if by_range else df.repartition
-    arranged = partition(partition_count(df.sparkSession), *keys) \
+    spark = df.sparkSession
+    arranged = (df.repartitionByRange(partition_count(spark), *keys)
+                if by_range else df.repartition(engine_width(spark), *keys)) \
         .sortWithinPartitions(*(keys + (order or [])))
     out_schema = to_arrow_schema(StructType.fromDDL(schema))
     # resolved with the plan, as Catalyst resolves its time-zone-aware casts
-    tz = df.sparkSession.conf.get("spark.sql.session.timeZone")
+    tz = spark.conf.get("spark.sql.session.timeZone")
     ts_out = [f.name for f in out_schema
               if pa.types.is_timestamp(f.type) and f.type.tz]
 

@@ -14,6 +14,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from .operators.grouped import engine_width
+
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
@@ -45,8 +47,8 @@ def spread(df: DataFrame, *keys: str) -> DataFrame:
     at one task regardless of core count. Guide §2.5: "input skew: one huge
     unsplittable file — repartition immediately after the read". The
     exchange moves only the scanned bytes (MBs here) and uses an EXPLICIT
-    partition count, engine width (1 task/core, see below), so AQE does not
-    coalesce it back to one partition.
+    partition count, ``grouped.engine_width`` (1 task/core, see below), so
+    AQE does not coalesce it back to one partition.
 
     Float note: spreading a table that feeds a float aggregation changes
     which rows share a partial aggregate, i.e. the summation order. That is
@@ -65,17 +67,18 @@ def spread(df: DataFrame, *keys: str) -> DataFrame:
     uniform because the key cardinality vastly exceeds the partition count,
     and sort-free.
 
-    Partition count is ENGINE WIDTH (1 task/core), not the session's
-    3-tasks/core shuffle sizing: every consumer of this exchange is an
-    Arrow/Python kernel stage whose cost is dominated by per-task dispatch +
-    Arrow conversion, not by straggler smoothing — measured 3/core → 1/core:
+    Partition count is the engine width, whose one rule lives in
+    ``grouped.engine_width`` (shared with the grouped kernels' hash
+    placement), not the session's 3-tasks/core shuffle sizing: every
+    consumer of this exchange is an Arrow/Python kernel stage whose cost is
+    dominated by per-task dispatch + Arrow conversion, not by straggler
+    smoothing — measured 3/core → 1/core:
     minhash_lsh_candidates 1.72 -> 1.15 s at sf1.0 and 1.35 -> 0.69 s at
     sf0.1. The explicit count also stops AQE coalescing a small kernel input
     to ONE partition, which serialized the per-group Python calls (pair
     kernel at sf0.1: 1.10 -> 0.62 s).
     """
-    sc = df.sparkSession.sparkContext
-    n = sc.defaultParallelism
+    n = engine_width(df.sparkSession)
     if keys:
         return df.repartition(n, *keys)
     return df.repartition(n)

@@ -387,3 +387,49 @@ def test_commit_runs_only_its_data_write(spark, tmp_path):
     commit = jobs("catalog-commit", lambda: cat.write_stage(df, "t"))
     assert bare >= 1 and commit == bare
     df.unpersist()
+
+
+def test_series_stage_commit_writes_one_file_per_bucket(spark, tmp_path,
+                                                         monkeypatch):
+    """A series kernel hashes its input on id into one task per core, and
+    the catalog buckets on the same murmur3 hash: when the task count
+    divides the bucket count, each bucket's rows share one task, so the
+    commit writes exactly one data file per bucket. Pinned at
+    defaultParallelism 4 (4 tasks, 32 buckets). The ids are checked to put
+    one bucket's rows in two of 12 hash partitions, so a 3-tasks-per-core
+    placement would split that bucket into two files."""
+    import datetime
+    from collections import defaultdict
+
+    from pyspark import SparkContext
+
+    from sen2rts_spark.operators import timeseries
+    from sen2rts_spark.sources.catalog import Catalog
+
+    monkeypatch.setattr(SparkContext, "defaultParallelism",
+                        property(lambda sc: 4))
+    ids = [f"s{i}" for i in range(40)]
+    hashes = [r["h"] for r in spark.createDataFrame(
+        [(i,) for i in ids], "id string").select(F.hash("id").alias("h"))
+        .collect()]
+    parts_of_bucket = defaultdict(set)
+    for h in hashes:
+        parts_of_bucket[h % 32].add(h % 12)
+    assert any(len(p) > 1 for p in parts_of_bucket.values())
+
+    day = datetime.date(2020, 1, 1)
+    obs = spark.createDataFrame(
+        [(i, day + datetime.timedelta(days=5 * k), "000", "2A", 0.5, 1.0)
+         for i in ids for k in range(3)],
+        "id string, date date, orbit string, sensor string, value double, "
+        "qa double")
+    cat = Catalog(spark, str(tmp_path))
+    res = cat.write_stage(timeseries.smooth(obs), "smoothed")
+    assert res["rows"] == len(ids) * 3
+
+    root = cat.table_path("smoothed")
+    files = {d: [f for f in os.listdir(os.path.join(root, d))
+                 if f.endswith(".parquet")]
+             for d in os.listdir(root) if d.startswith("bucket=")}
+    assert len(files) == len(parts_of_bucket)
+    assert all(len(f) == 1 for f in files.values()), files

@@ -11,6 +11,7 @@ import re
 import pandas as pd
 import pyspark.sql.functions as F
 
+from sen2rts_spark.operators.grouped import engine_width
 from sen2rts_spark.queries_docs import (_DECONTAM_MOD, _DECONTAM_N,
                                         _ngram_rows, q_decontaminate_ngram)
 
@@ -58,7 +59,7 @@ def test_ngram_rows_zero_shuffle_and_short_docs(spark):
     at engine width) and a doc shorter than n words must vanish."""
     ng = _ngram_rows(spark, SF_DIR, _DECONTAM_N)
     plan = ng._jdf.queryExecution().executedPlan().toString()
-    width = spark.sparkContext.defaultParallelism
+    width = engine_width(spark)
     assert plan.count("Exchange") == 1, plan
     assert re.search(rf"Exchange hashpartitioning\(doc_id#\d+L?, {width}\)",
                      plan), plan

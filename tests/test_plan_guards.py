@@ -111,9 +111,10 @@ def test_connected_components_is_one_python_pass(spark):
 
 
 # Placement of the grouped kernels. The series stages cost per row and keep
-# the id hash partitioning; the curve fits cost seconds per cycle, so their
-# input exchange is a range partitioning on the cycle key, which gives each
-# of a handful of cycles its own task instead of a shared hash bucket.
+# the id hash partitioning, one task per core (engine_width); the curve fits
+# cost seconds per cycle, so their input exchange is a range partitioning on
+# the cycle key at 3 tasks per core (partition_count), which gives each of a
+# handful of cycles its own task instead of a shared hash bucket.
 
 def _kernel_subtree(df):
     """Plan lines from the outermost grouped kernel down."""
@@ -123,16 +124,18 @@ def _kernel_subtree(df):
 
 
 def _input_exchange(df):
-    """(partitioning, key columns) of the exchange feeding the kernel."""
+    """(partitioning, key columns, partition count) of the exchange feeding
+    the kernel."""
     ex = next(ln for ln in _kernel_subtree(df) if "Exchange " in ln)
-    kind, args = re.search(r"Exchange (\w+)\((.*)\)", ex).groups()
-    return kind, re.findall(r"(\w+)#\d+", args.split(", REPARTITION")[0])
+    kind, args, n = re.search(r"Exchange (\w+)\((.*), (\d+)\)", ex).groups()
+    return kind, re.findall(r"(\w+)#\d+", args), int(n)
 
 
 def test_fit_operators_range_partition_on_cycle_key(spark):
     import datetime
 
     from sen2rts_spark.operators import pheno_tools, timeseries
+    from sen2rts_spark.operators.grouped import engine_width, partition_count
 
     day = datetime.date(2020, 1, 1)
     obs = spark.createDataFrame(
@@ -143,8 +146,10 @@ def test_fit_operators_range_partition_on_cycle_key(spark):
     filled = timeseries.fill(smoothed)
     cycles = timeseries.cut_cycles(filled)
     for df in (smoothed, filled, cycles):
-        assert _input_exchange(df) == ("hashpartitioning", ["id"])
-    key = ("rangepartitioning", ["id", "year", "cycle"])
+        assert _input_exchange(df) == ("hashpartitioning", ["id"],
+                                       engine_width(spark))
+    key = ("rangepartitioning", ["id", "year", "cycle"],
+           partition_count(spark))
     assert _input_exchange(timeseries.extract_pheno(
         filled, cycles, rescale=(0.0, 1.0))) == key
     assert _input_exchange(pheno_tools.fit_curves(
@@ -179,6 +184,9 @@ def test_range_placement_gives_each_cycle_its_own_task(spark):
 def test_pair_kernel_input_is_one_exchange_on_the_cell_keys(spark, name,
                                                               cell):
     import __spark_entry__ as entrymod
+    from sen2rts_spark.operators.grouped import engine_width
+
     df = entrymod.queries()[name](spark, SF_DIR)
     assert sum("Exchange " in ln for ln in _kernel_subtree(df)) == 1
-    assert _input_exchange(df) == ("hashpartitioning", cell)
+    assert _input_exchange(df) == ("hashpartitioning", cell,
+                                   engine_width(spark))

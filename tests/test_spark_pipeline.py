@@ -100,6 +100,30 @@ def test_pages_text_invariant_and_extract(spark):
         assert 0.0 <= r["qa"] <= 1.0
 
 
+def test_extract_obs_reads_unparsable_fields_as_null(spark):
+    """A page with no ``class=``/``cld=`` has no weight and yields no
+    observation; a page whose ``cld=`` does not parse keeps its value under
+    the class weight alone; neither fails the job (ANSI casts would)."""
+    from sen2rts_spark.operators.extract import extract_obs
+
+    def page(url, fields):
+        text = f"lang=en source=000 sensor=2A {fields}"
+        return (url, datetime.datetime(2020, 1, 2, 10),
+                f"<html><p>{text}</p></html>".encode(), text, "en")
+
+    pages = spark.createDataFrame([
+        page("u/full", "class=4 cld=10 ndvi=0.500000"),
+        page("u/bare", "ndvi=0.400000"),
+        page("u/badcld", "class=4 cld=x ndvi=0.300000"),
+    ], "url string, warc_ts timestamp, html binary, text string, "
+       "lang string")
+    got = {r["id"]: r for r in extract_obs(pages).collect()}
+    assert sorted(got) == ["u/badcld", "u/full"]
+    assert got["u/full"]["qa"] == pytest.approx(1.0 + 0.5 * (0.165 - 1.0))
+    assert got["u/badcld"]["value"] == pytest.approx(0.3)
+    assert got["u/badcld"]["qa"] == 1.0
+
+
 def test_rollup_tiers_exact(spark):
     from sen2rts_spark.operators.extract import extract_obs
     from sen2rts_spark.operators.rollup import rollup_raw, rollup_tier
