@@ -36,7 +36,7 @@ def _pages_path(repo_root: str, n_urls: int, n_slots: int) -> str:
     return os.path.join(repo_root, ".bench_cache", f"pages_{n_urls}x{n_slots}.parquet")
 
 
-# ---- host-health probes (same protocol as tools/scaling_bench.py:40-90) ----
+# ---- host-health probes ----
 # The sandbox host degrades in ~10-minute phases, sometimes WITHOUT visible
 # steal; recording a single-thread speed index + /proc/stat steal per rep
 # makes cross-round BENCH diffs attributable (host phase vs code change).
@@ -158,15 +158,14 @@ def ensure_pages(spark, repo_root: str, n_urls: int, n_slots: int) -> str:
 def bench_rollup_pipeline(spark, pages_path: str) -> tuple[float, int]:
     """The north metric: pages scan → extract → daily tier → Gorilla encode.
 
-    Fused single-exchange plan (operators/pipeline.py): on this ~1-obs-per-
-    group shape the default plan's three id-keyed shuffles move the same
-    rows three times; one id repartition of the parsed projection satisfies
-    every downstream clustering (plan-tested in test_fused_pipeline)."""
+    One exchange (operators/pipeline.py): extract's id repartition of the
+    parsed projection satisfies every downstream clustering (plan-tested in
+    test_ingest_plan)."""
     from sen2rts_spark.operators.pipeline import rollup_gorilla_pipeline
 
     t0 = time.time()
     pages = spark.read.parquet(pages_path)
-    blobs = rollup_gorilla_pipeline(pages, "daily", fused=True)
+    blobs = rollup_gorilla_pipeline(pages, "daily")
     n_points = blobs.agg(F.sum("count")).first()[0] or 0
     return time.time() - t0, int(n_points)
 
@@ -261,7 +260,8 @@ def ensure_fragged_blobs(spark, repo_root: str, n_ids: int) -> str:
     path = os.path.join(repo_root, ".bench_cache", f"fragblobs_{n_ids}.parquet")
     if not os.path.exists(path):
         from sen2rts_spark.operators.gorilla_sink import encode_blobs
-        parts = 3 * spark.sparkContext.defaultParallelism
+        from sen2rts_spark.operators.grouped import partition_count
+        parts = partition_count(spark)
         encode_blobs(_year_tier(spark, n_ids), "hourly", chunk_days=1) \
             .withColumn("chunk_start",
                         F.window("min_ts", f"{28 * 86400} seconds")["start"]) \
@@ -276,10 +276,11 @@ def ensure_compacted_blobs(spark, repo_root: str, frag_path: str,
                         f"compactblobs_{n_ids}.parquet")
     if not os.path.exists(path):
         from sen2rts_spark.operators.compaction import compact_blobs
+        from sen2rts_spark.operators.grouped import partition_count
         # same 3-tasks/core file layout as the fragmented store: without
         # it AQE coalesces the compacted write into ~1/3 the files and the
         # read comparison measures layout, not compaction (measured 2.2x)
-        parts = 3 * spark.sparkContext.defaultParallelism
+        parts = partition_count(spark)
         compact_blobs(spark.read.parquet(frag_path)).repartition(parts) \
             .write.mode("overwrite").parquet(path)
     return path

@@ -6,11 +6,15 @@ per-polygon zonal loop, a single lazy DAG over the pages scan:
 
     scan pages → strip tags (per-row invariant: text byte-identical)
     → parse metric / quality class / cloud pct (regexp, JVM)
-    → decode weights (C5-C7) → groupBy(url, date) weighted aggregate (A1-A3)
+    → decode weights (C5-C7) → Exchange hashpartitioning(id)
+    → groupBy(url, date) weighted aggregate (A1-A3)
 
 Everything is a Catalyst expression — predicate pushdown / column pruning
-reach the parquet scan; the only shuffle is the (url, date) aggregation,
-which AQE coalesces. No Python executes per row.
+reach the parquet scan. The one shuffle is a numbered hash repartition of
+the parsed projection on ``id`` (``grouped.partition_count``, which AQE
+does not coalesce); it satisfies this aggregate and every id-keyed stage
+downstream (rollup tiers, the Gorilla sink), so the whole ingest chain
+runs on it. No Python executes per row.
 """
 
 from __future__ import annotations
@@ -19,6 +23,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from ..functions.quality import cld_weight, combine_weights, scl_weight
+from .grouped import partition_count
 
 __all__ = ["extract_text", "extract_obs", "OBS_SCHEMA"]
 
@@ -50,24 +55,21 @@ def extract_text(html_col) -> F.Column:
         .otherwise("")
 
 
-def extract_obs(pages: DataFrame, fun: str = "mean",
-                partition_by_id: int | None = None) -> DataFrame:
+def extract_obs(pages: DataFrame, fun: str = "mean") -> DataFrame:
     """pages → obs_raw(id, date, orbit, sensor, value, qa).
 
     ``fun``: 'mean' (qa-weighted mean, extract_s2ts.R:406 weighted.mean) or
     'best' (mean of observations tied at max weight, :406).
 
-    ``partition_by_id``: hash-repartition the PARSED projection (~70 B/row,
-    not the raw html) on ``id`` into this many partitions before the
-    aggregate. HashPartitioning(id) satisfies the ClusteredDistribution of
-    this groupBy AND of every downstream id-keyed stage (rollup tiers,
-    Gorilla encode), so the whole extract→rollup→encode chain runs on this
-    ONE exchange instead of three (plan-tested: test_fused_pipeline).
-    Worth it when group cardinality ≈ row count (the web-crawl dedup shape,
-    ~1 obs per (id, date) group — map-side partial agg has nothing to
-    combine, so the default plan's per-groupBy exchanges move the same
-    rows twice more). Leave None where heavy duplication makes map-side
-    combining on the full group key shrink the shuffle instead."""
+    The parsed projection (~70 B/row, not the raw html) is hash-partitioned
+    on ``id`` into ``partition_count`` partitions before the aggregate.
+    HashPartitioning(id) satisfies the ClusteredDistribution of this
+    groupBy and of every downstream id-keyed stage (rollup tiers, the
+    Gorilla sink), so the extract→rollup→encode chain runs on this one
+    exchange (plan-tested: test_ingest_plan). On the web-crawl shape (~1
+    obs per (id, date) group) a map-side partial aggregate before it would
+    have nothing to combine. All rows of one id land in one task, so a hot
+    id is not spread."""
     txt = extract_text(F.col("html"))
     # try_cast: a missing or unparsable field reads NULL (the weighted
     # mean's na.rm below) where an ANSI cast would fail the whole job
@@ -86,10 +88,8 @@ def extract_obs(pages: DataFrame, fun: str = "mean",
         "value0", F.regexp_replace("metric_s", ",", "").try_cast("double")
     ).withColumn(
         "w", combine_weights(scl_weight(F.col("qclass")), cld_weight(F.col("cld")))
-    )
-    if partition_by_id:
-        parsed = parsed.drop("text_x", "metric_s", "qclass", "cld") \
-            .repartition(partition_by_id, "id")
+    ).drop("text_x", "metric_s", "qclass", "cld") \
+        .repartition(partition_count(pages.sparkSession), "id")
 
     grp = parsed.groupBy("id", "date", "orbit", "sensor")
     if fun == "mean":

@@ -44,16 +44,20 @@ BLOB_ARROW = pa.schema([
 _ENCODE_MAX_POINTS = 65_536
 
 
-def encode_blobs(tier_df: DataFrame, tier: str, chunk_days: int = 366,
-                 clustered: bool = False) -> DataFrame:
+def encode_blobs(tier_df: DataFrame, tier: str,
+                 chunk_days: int = 366) -> DataFrame:
     """Rollup tier → one Gorilla blob per (id, chunk_days window).
 
-    Hash-partitioned on (id, chunk), sorted within partitions, then a single
-    mapInArrow pass walks whole (id, chunk) runs with ``grouped.arrow_runs``
-    and encodes each batch of runs with one ``blob_batch`` call — no
-    per-group Python, one Arrow batch out per batch of runs (one Python
-    call per group, as ``groupBy().applyInPandas`` makes, was ~15x slower
-    at 3000 series).
+    Hash-partitioned on ``id`` at ``partition_count``, sorted within
+    partitions, then a single mapInArrow pass walks whole (id, chunk) runs
+    with ``grouped.arrow_runs`` and encodes each batch of runs with one
+    ``blob_batch`` call — no per-group Python, one Arrow batch out per
+    batch of runs (one Python call per group, as
+    ``groupBy().applyInPandas`` makes, was ~15x slower at 3000 series).
+    Behind ``extract_obs`` → ``rollup_raw`` the input already has this
+    exact ``hashpartitioning(id, partition_count)``, and Spark's
+    EnsureRequirements drops the repartition (plan-tested): the whole
+    ingest chain keeps extract's one exchange and only the sort runs here.
 
     Contract: ``value`` must be non-NaN — the write job fails loudly on NaN
     (since r6) because NaN silently diverges the ``decode_blobs_agg``
@@ -61,24 +65,13 @@ def encode_blobs(tier_df: DataFrame, tier: str, chunk_days: int = 366,
     decode+groupBy plan (Spark orders NaN largest). Rollup tiers are
     count>0 means over raw observations, so NaN never occurs in the
     supported pipeline; callers feeding arbitrary series must filter first.
-
-    ``clustered=True``: the caller guarantees ``tier_df`` is already
-    hash-partitioned on ``id`` (e.g. via rollup_raw/extract_obs
-    ``partition_by_id``) — skip this sink's repartition so the whole
-    extract→rollup→encode chain keeps its single upstream exchange; only
-    the within-partition sort runs here. All rows of an id share a
-    partition under any id-subset partitioning, so every (id, chunk) group
-    is intact; correctness is byte-identical (tested) — only the exchange
-    is elided.
     """
     chunk_secs = chunk_days * 86400
-    with_chunk = tier_df.withColumn(
-        "chunk", F.window("bucket_start", f"{chunk_secs} seconds")["start"])
-    arranged = with_chunk.select("id", "chunk", "bucket_start", "value")
-    if not clustered:
-        arranged = arranged.repartition(
-            partition_count(tier_df.sparkSession), "id", "chunk")
-    arranged = arranged.sortWithinPartitions("id", "chunk", "bucket_start")
+    arranged = tier_df.withColumn(
+        "chunk", F.window("bucket_start", f"{chunk_secs} seconds")["start"]) \
+        .select("id", "chunk", "bucket_start", "value") \
+        .repartition(partition_count(tier_df.sparkSession), "id") \
+        .sortWithinPartitions("id", "chunk", "bucket_start")
 
     def _stream(batches):
         # mapInArrow: numpy views of the Arrow columns — the Arrow→pandas

@@ -74,8 +74,8 @@ def engine_width(spark) -> int:
 
 
 def partition_count(spark) -> int:
-    """3 tasks per core: the range-placed fits of ``grouped_apply``, the
-    Gorilla sink, the fused rollup pipeline's exchange and compaction."""
+    """3 tasks per core: the range-placed fits of ``grouped_apply``,
+    ``extract_obs``'s ingest exchange, the Gorilla sink and compaction."""
     return _PARTS_PER_CORE * engine_width(spark)
 
 

@@ -6,8 +6,10 @@ vwsum), min/max, and last-by-timestamp fold losslessly, so
 ``daily(hourly(raw)) ≡ daily(raw)`` (property-tested). The qa-weighted bucket
 value reproduces the reference's A1 weighted mean (extract_s2ts.R:402-411).
 
-All tiers are plain ``groupBy(id, window(ts, tier))`` — map-side partial
-aggregation + one shuffle per tier; AQE coalesces post-shuffle partitions.
+All tiers are plain ``groupBy(id, window(ts, tier))``. Over an input
+already hash-partitioned on ``id`` (``extract_obs``'s exchange) every tier
+aggregates in place, with no shuffle; over any other input each tier runs
+a map-side partial aggregate and one shuffle on its (id, window) keys.
 """
 
 from __future__ import annotations
@@ -80,23 +82,16 @@ def bucket_value():
 
 def rollup_raw(obs: DataFrame, tier: str = "hourly",
                ts_col: str = "ts", id_col: str = "id",
-               value_col: str = "value", qa_col: str = "qa",
-               partition_by_id: int | None = None) -> DataFrame:
+               value_col: str = "value", qa_col: str = "qa") -> DataFrame:
     """Raw observations → first tier. Weight = qa + 1e-9 (A1).
 
-    ``partition_by_id``: hash-repartition the 4-column projection on ``id``
-    first — HashPartitioning(id) satisfies this groupBy's clustering AND
-    every coarser tier's, so a whole hourly→daily→weekly chain re-aggregates
-    exchange-free after this one shuffle (the default plan shuffles once per
-    tier because each tier's (id, window) partitioning is not a subset of
-    the next tier's keys). Use when obs flows straight into a tier chain
-    and/or the Gorilla sink; see extract_obs for the cardinality caveat."""
+    Behind ``extract_obs`` this groupBy, and every coarser
+    ``rollup_tier`` over it, reuses extract's hash partitioning on ``id``:
+    a whole hourly→daily→weekly chain adds no exchange (plan-tested)."""
     secs = TIER_SECONDS[tier]
-    sel = weighted_obs(obs, id_col, ts_col, value_col, qa_col)
-    if partition_by_id:
-        sel = sel.repartition(partition_by_id, "id")
     return (
-        sel.groupBy("id", F.window("ts", f"{secs} seconds").alias("win"))
+        weighted_obs(obs, id_col, ts_col, value_col, qa_col)
+        .groupBy("id", F.window("ts", f"{secs} seconds").alias("win"))
         .agg(*raw_partials())
         .select(*bucket_cols())
         .select("*", bucket_value()))

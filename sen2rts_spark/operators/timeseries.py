@@ -64,7 +64,15 @@ def smooth(obs: DataFrame, min_qa: float = 0.2, noise_dir: str = "low",
            sg_polynom: int = 2, sg_n: int = 3,
            max_extrapolation: float = 0.1, filter_type: str = "savgol",
            whittaker_lambda: float = 100.0) -> DataFrame:
-    """obs_raw → obs_smoothed (adds rawval; value = smoothed or NULL)."""
+    """obs_raw → obs_smoothed (adds rawval; value = smoothed or NULL).
+
+    ``filter_type`` is 'savgol' or 'whittaker' and ``noise_dir`` 'low',
+    'high' or 'undefined' (smooth_s2ts.R); anything else raises here, on
+    the driver, since the kernel's errors become NULL series."""
+    if filter_type not in ("savgol", "whittaker"):
+        raise ValueError(f"unknown filter_type {filter_type!r}")
+    if noise_dir not in ("low", "high", "undefined"):
+        raise ValueError(f"unknown noise_dir {noise_dir!r}")
 
     def _fn(pdf: pd.DataFrame) -> pd.DataFrame:
         days = _days_from_dates(pdf["date"])

@@ -13,6 +13,7 @@ from sen2rts_spark.kernels.gorilla import gorilla_encode
 from sen2rts_spark.operators import gorilla_sink
 from sen2rts_spark.operators.compaction import compact_blobs
 from sen2rts_spark.operators.gorilla_sink import decode_blobs, encode_blobs
+from sen2rts_spark.operators.grouped import partition_count
 
 
 def _tier(spark, n_ids=40, days=60, seed=7):
@@ -148,7 +149,7 @@ def test_one_exchange_no_window_no_union(spark, tmp_path):
             .executedPlan().toString())
     exchanges = [ln for ln in plan.splitlines() if "Exchange " in ln]
     assert len(exchanges) == 1, plan
-    parts = 3 * spark.sparkContext.defaultParallelism
+    parts = partition_count(spark)
     assert (f"hashpartitioning(id, tier, chunk_start, {parts})"
             in re.sub(r"#\d+", "", exchanges[0])), exchanges[0]
     assert "Window" not in plan and "Union" not in plan, plan

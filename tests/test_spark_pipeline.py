@@ -124,6 +124,27 @@ def test_extract_obs_reads_unparsable_fields_as_null(spark):
     assert got["u/badcld"]["qa"] == 1.0
 
 
+def test_smooth_rejects_unknown_options_before_any_job(spark):
+    """A misspelled filter_type or noise_dir raises on the driver; in the
+    kernel it would fall back to Savitzky-Golay or skip spike removal."""
+    from sen2rts_spark.operators.extract import OBS_SCHEMA
+    from sen2rts_spark.operators.timeseries import smooth
+
+    obs = spark.createDataFrame(
+        [("a", datetime.date(2020, 1, 1), "o", "s", 0.5, 1.0)], OBS_SCHEMA)
+    sc = spark.sparkContext
+    sc.setJobGroup("smooth-options", "bad smooth options")
+    try:
+        with pytest.raises(ValueError, match="filter_type 'whitaker'"):
+            smooth(obs, filter_type="whitaker")
+        with pytest.raises(ValueError, match="noise_dir 'lo'"):
+            smooth(obs, noise_dir="lo")
+        assert sc.statusTracker().getJobIdsForGroup("smooth-options") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
 def test_rollup_tiers_exact(spark):
     from sen2rts_spark.operators.extract import extract_obs
     from sen2rts_spark.operators.rollup import rollup_raw, rollup_tier

@@ -1,10 +1,10 @@
 """Per-stage 4-vs-16 scaling profile of the headline rollup pipeline.
 
 Runs each pipeline prefix at two parallelism levels in child processes
-(same protocol as scaling_bench.py: own JVM per level, warmed, interleaved)
-and prints per-stage wall + pairwise efficiency, so the stage that LOSES
-efficiency at 4x width is identified by measurement instead of guesswork
-(VERDICT r7 task 1 lever a).
+(one JVM per level, warmed, levels interleaved) and prints per-stage wall
++ pairwise efficiency, so the stage that LOSES efficiency at 4x width
+is identified by measurement instead of guesswork (VERDICT r7 task 1
+lever a).
 
 Usage: python tools/stage_profile.py [n_urls] [lo,hi]
 """
@@ -27,7 +27,6 @@ from sen2rts_spark.session import get_spark, prewarm_python_workers
 from sen2rts_spark.operators.extract import extract_obs
 from sen2rts_spark.operators.rollup import rollup_raw
 from sen2rts_spark.operators.gorilla_sink import encode_blobs
-from sen2rts_spark.operators.pipeline import rollup_gorilla_pipeline
 
 cores = int(sys.argv[1]); pages_path = sys.argv[2]
 spark = get_spark("stageprof-%%d" %% cores, cores=cores)
@@ -45,17 +44,15 @@ STAGES = {
         F.col("url").alias("id"), F.to_date("warc_ts").alias("date"),
         F.decode("html", "UTF-8").alias("t")).select(
         F.sum(F.length("t")).alias("s")).first(),
-    # full extract_obs (adds the (id,date,orbit,sensor) groupBy shuffle)
+    # full extract_obs (adds the id repartition, the pipeline's one
+    # exchange, and the (id,date,orbit,sensor) aggregate after it)
     "extract_obs": lambda: obs().agg(F.sum("value")).first(),
-    # + rollup groupBy (second shuffle)
+    # + rollup groupBy (no exchange: reuses extract's id partitioning)
     "rollup": lambda: rollup_raw(obs(), "daily").agg(
         F.sum("count")).first(),
-    # + encode (repartition + sort + mapInArrow python)
+    # + encode (sort + mapInArrow python; its repartition is dropped):
+    # the whole pipeline, as operators/pipeline.py composes it
     "full": lambda: encode_blobs(rollup_raw(obs(), "daily"), "daily").agg(
-        F.sum("count")).first(),
-    # fused single-exchange plan (operators/pipeline.py)
-    "full_fused": lambda: rollup_gorilla_pipeline(
-        spark.read.parquet(pages_path), "daily", fused=True).agg(
         F.sum("count")).first(),
 }
 for fn in STAGES.values():
@@ -114,7 +111,7 @@ def main():
                 return json.loads(ln)["sec"]
 
     reps = int(os.environ.get("REPS", "2"))
-    stages = ["scan_parse", "extract_obs", "rollup", "full", "full_fused"]
+    stages = ["scan_parse", "extract_obs", "rollup", "full"]
     rows = []
     for stage in stages:
         for _ in range(reps):
