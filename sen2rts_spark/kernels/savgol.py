@@ -10,14 +10,20 @@ border replicates w_savgol.R:149 exactly, where ``last_coeffs`` is stored at
 ``i == length(x) - half_window - 1`` while combining the last ``window`` y
 values).
 
-This runs inside pandas UDFs (one call per series) — no per-row Python.
+This runs inside grouped_apply kernels (one call per series) — no
+per-row Python.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-__all__ = ["w_savgol"]
+__all__ = ["w_savgol", "ShortSeriesError"]
+
+
+class ShortSeriesError(ValueError):
+    """The series has fewer points than the filter window: degenerate
+    input, unlike a bad parameter."""
 
 
 def w_savgol(y: np.ndarray, x: np.ndarray, q: np.ndarray | None = None,
@@ -36,7 +42,7 @@ def w_savgol(y: np.ndarray, x: np.ndarray, q: np.ndarray | None = None,
     if window % 2 == 0:
         raise ValueError("window must be odd")
     if n < window:
-        raise ValueError("data size must be >= window size")
+        raise ShortSeriesError("data size must be >= window size")
     if polynom >= window:
         raise ValueError("polynom must be < window")
 

@@ -5,7 +5,7 @@ estimated from the exact cubic through the first/last four points), as used by
 the reference's gap filler (/root/reference/R/fill_s2ts.R:120-125). R's
 ``spline`` drops NA pairs (regularize.values) — callers must pass valid knots.
 
-Pure numpy; runs inside pandas UDFs per series.
+Pure numpy; runs inside grouped_apply kernels, one call per series.
 """
 
 from __future__ import annotations

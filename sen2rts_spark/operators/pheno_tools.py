@@ -1,6 +1,6 @@
 """Cycle/pheno post-processing operators: aggregate_pheno, assign_season,
 detect_forages, fit_curves — all plain DataFrame ops except the per-cycle
-curve fit (pandas kernel).
+curve fit (a numpy ``grouped_apply`` kernel).
 
 References:
 - aggregate_pheno  /root/reference/R/aggregate_pheno.R:56-137
@@ -12,7 +12,6 @@ References:
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
@@ -231,19 +230,16 @@ def fit_curves(filled: DataFrame, cycles: DataFrame, fit="gu",
     joined = _cycle_slices(
         filled, cycles.select("id", "year", "cycle", "begin", "end"), rescale)
 
-    def _fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        g0, gr = float(pdf["_g0"].iloc[0]), float(pdf["_gr"].iloc[0])
-        vals = pdf["value"].to_numpy(dtype=np.float64)
-        relval = (vals - g0) / gr
-        fitted = fit_with_fallback(relval, fit)
+    def _fn(run: dict) -> dict | None:
+        g0, gr = float(run["_g0"][0]), float(run["_gr"][0])
+        fitted = fit_with_fallback((run["value"] - g0) / gr, fit)
         if fitted is None:
             return None
-        return pd.DataFrame({
-            "id": pdf["id"].iloc[0], "year": int(pdf["year"].iloc[0]),
-            "cycle": int(pdf["cycle"].iloc[0]), "date": pdf["date"].to_numpy(),
-            "value_fitted": g0 + fitted["predicted"] * gr,
-            "fit_method": fitted["method"],
-        })
+        return {"id": run["id"], "year": run["year"], "cycle": run["cycle"],
+                "date": run["date"],
+                "value_fitted": g0 + fitted["predicted"] * gr,
+                "fit_method": np.full(len(run["date"]), fitted["method"],
+                                      dtype=object)}
 
     return grouped_apply(
         joined, ["id", "year", "cycle"], _fn,

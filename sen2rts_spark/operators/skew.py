@@ -12,6 +12,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from .grouped import partition_count
 from .rollup import (bucket_cols, bucket_value, fold_partials, raw_partials,
                      weighted_obs)
 
@@ -27,12 +28,18 @@ def salted_rollup_raw(obs: DataFrame, tier_seconds: int, salt_n: int = 16,
                       value_col: str = "value", qa_col: str = "qa") -> DataFrame:
     """Rollup with per-(id, salt) partial aggregation before the final
     combine — two shuffles, but the first is uniform even when one id
-    dominates the input."""
+    dominates the input.
+
+    The first shuffle is an explicit repartition on ``(id, salt)``: an
+    input already hash-partitioned on ``id`` (``extract_obs``) satisfies
+    the ``(id, salt, window)`` grouping as it stands, so without it Spark
+    plans no exchange there and a hot id stays in one task."""
     salted = weighted_obs(obs, id_col, ts_col, value_col, qa_col,
                           F.pmod(F.hash(ts_col), F.lit(salt_n)).alias("salt"))
     partial = (
-        salted.groupBy("id", "salt",
-                       F.window("ts", f"{tier_seconds} seconds").alias("win"))
+        salted.repartition(partition_count(obs.sparkSession), "id", "salt")
+        .groupBy("id", "salt",
+                 F.window("ts", f"{tier_seconds} seconds").alias("win"))
         .agg(*raw_partials())
     )
     return partial.groupBy("id", "win").agg(*fold_partials()) \

@@ -9,22 +9,23 @@ series; the only shuffle is the hash partition on id, reused stage to stage.
 Scale note: a series must be colocated for its kernel, so per-series stages
 cannot be salted — series length is bounded instead by rolling up to the
 daily tier BEFORE smoothing (SURVEY.md §4.3). Kernel errors on degenerate
-series (e.g. shorter than the SG window) yield NULL smoothed values rather
-than failing the task (deviation from the reference, which errors the run).
+series (shorter than the SG window) yield NULL smoothed values rather than
+failing the task (deviation from the reference, which errors the run); any
+other kernel error, a bad parameter among them, fails it.
+
+Kernels read and write numpy columns (``grouped_apply``): dates cross as
+int days since 1970-01-01, the kernels' own unit.
 """
 
 from __future__ import annotations
 
-import datetime as _dt
-
 import numpy as np
-import pandas as pd
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from ..kernels.cycles import cut_cycles_series
 from ..kernels.dlog import fit_with_fallback
 from ..kernels.pheno import pheno_deriv, pheno_gu, pheno_kl, pheno_trs
+from ..kernels.savgol import ShortSeriesError
 from ..kernels.series import fill_series, smooth_series
 
 __all__ = ["smooth", "fill", "cut_cycles", "extract_pheno", "SMOOTH_SCHEMA",
@@ -47,18 +48,6 @@ PHENO_KL_SCHEMA = (CYCLES_SCHEMA +
                    ", Greenup date, Maturity date, Senescence date, "
                    "Dormancy date")
 
-_EPOCH = _dt.date(1970, 1, 1)
-
-
-def _days_from_dates(s: pd.Series) -> np.ndarray:
-    return np.array([(d - _EPOCH).days if d is not None else -1
-                     for d in s], dtype=np.int64)
-
-
-def _dates_from_days(days) -> list:
-    return [_EPOCH + _dt.timedelta(days=int(d)) for d in days]
-
-
 def smooth(obs: DataFrame, min_qa: float = 0.2, noise_dir: str = "low",
            spike: float = 0.25, spike_window: int = 5, sg_daywindow: int = 15,
            sg_polynom: int = 2, sg_n: int = 3,
@@ -68,48 +57,35 @@ def smooth(obs: DataFrame, min_qa: float = 0.2, noise_dir: str = "low",
 
     ``filter_type`` is 'savgol' or 'whittaker' and ``noise_dir`` 'low',
     'high' or 'undefined' (smooth_s2ts.R); anything else raises here, on
-    the driver, since the kernel's errors become NULL series."""
+    the driver, before any job: the kernel would fall back to
+    Savitzky-Golay or skip spike removal."""
     if filter_type not in ("savgol", "whittaker"):
         raise ValueError(f"unknown filter_type {filter_type!r}")
     if noise_dir not in ("low", "high", "undefined"):
         raise ValueError(f"unknown noise_dir {noise_dir!r}")
 
-    def _fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        days = _days_from_dates(pdf["date"])
+    def _fn(run: dict) -> dict:
+        days, value, qa = run["date"], run["value"], run["qa"]
+        sensor, orbit = run["sensor"], run["orbit"]
         try:
             out = smooth_series(
-                days,
-                pdf["value"].to_numpy(dtype=np.float64),
-                pdf["qa"].to_numpy(dtype=np.float64) if "qa" in pdf else None,
-                pdf["sensor"].to_numpy(dtype=object),
-                pdf["orbit"].to_numpy(dtype=object),
+                days, value, qa, sensor, orbit,
                 min_qa=min_qa, noise_dir=noise_dir, spike=spike,
                 spike_window=spike_window, sg_daywindow=sg_daywindow,
                 sg_polynom=sg_polynom, sg_n=sg_n,
                 max_extrapolation=max_extrapolation,
                 filter_type=filter_type, whittaker_lambda=whittaker_lambda,
             )
-        except Exception:
-            # degenerate series (too short / all-NaN): keep rows, NULL smooth
-            srt = np.lexsort((pdf["orbit"].to_numpy(dtype=object),
-                              pdf["sensor"].to_numpy(dtype=object), days))
-            out = {
-                "days": days[srt],
-                "sensor": pdf["sensor"].to_numpy(dtype=object)[srt],
-                "orbit": pdf["orbit"].to_numpy(dtype=object)[srt],
-                "qa": pdf["qa"].to_numpy(dtype=np.float64)[srt],
-                "rawval": pdf["value"].to_numpy(dtype=np.float64)[srt],
-                "value": np.full(len(days), np.nan),
-            }
-        return pd.DataFrame({
-            "id": pdf["id"].iloc[0],
-            "date": _dates_from_days(out["days"]),
-            "orbit": out["orbit"],
-            "sensor": out["sensor"],
-            "value": out["value"],
-            "qa": out["qa"],
-            "rawval": out["rawval"],
-        })
+        except ShortSeriesError:
+            # fewer points than the SG window: keep rows, NULL smooth (a
+            # singular window solve falls back to pinv inside w_savgol)
+            srt = np.lexsort((orbit, sensor, days))
+            out = {"days": days[srt], "sensor": sensor[srt],
+                   "orbit": orbit[srt], "qa": qa[srt],
+                   "rawval": value[srt], "value": np.full(len(days), np.nan)}
+        return {"id": run["id"], "date": out["days"], "orbit": out["orbit"],
+                "sensor": out["sensor"], "value": out["value"],
+                "qa": out["qa"], "rawval": out["rawval"]}
 
     from .grouped import grouped_apply
     return grouped_apply(obs, ["id"], _fn, SMOOTH_SCHEMA)
@@ -120,30 +96,18 @@ def fill(smoothed: DataFrame, frequency: str = "daily",
          max_extrapolation: float = 0.1) -> DataFrame:
     """obs_smoothed → obs_filled (regular grid + interpolated flag)."""
 
-    def _fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        days = _days_from_dates(pdf["date"])
+    def _fn(run: dict) -> dict:
         out = fill_series(
-            days,
-            pdf["value"].to_numpy(dtype=np.float64),
-            pdf["sensor"].to_numpy(dtype=object),
-            pdf["orbit"].to_numpy(dtype=object),
-            passthrough={
-                "qa": pdf["qa"].to_numpy(dtype=object),
-                "rawval": pdf["rawval"].to_numpy(dtype=object),
-            },
+            run["date"], run["value"], run["sensor"], run["orbit"],
+            passthrough={"qa": run["qa"], "rawval": run["rawval"]},
             frequency=frequency, max_na_days=max_na_days,
             max_extrapolation=max_extrapolation,
         )
-        return pd.DataFrame({
-            "id": pdf["id"].iloc[0],
-            "date": _dates_from_days(out["days"]),
-            "orbit": out["orbit"],
-            "sensor": out["sensor"],
-            "value": out["value"],
-            "qa": pd.array(out["qa"], dtype="Float64"),
-            "rawval": pd.array(out["rawval"], dtype="Float64"),
-            "interpolated": out["interpolated"],
-        })
+        return {"id": np.repeat(run["id"][:1], len(out["days"])),
+                "date": out["days"], "orbit": out["orbit"],
+                "sensor": out["sensor"], "value": out["value"],
+                "qa": out["qa"], "rawval": out["rawval"],
+                "interpolated": out["interpolated"]}
 
     from .grouped import grouped_apply
     return grouped_apply(smoothed, ["id"], _fn, FILL_SCHEMA)
@@ -152,21 +116,13 @@ def fill(smoothed: DataFrame, frequency: str = "daily",
 def cut_cycles(filled: DataFrame, **params) -> DataFrame:
     """obs_filled → cycles (one row per detected cycle)."""
 
-    def _fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        days = _days_from_dates(pdf["date"])
-        rows = cut_cycles_series(days, pdf["value"].to_numpy(dtype=np.float64),
-                                 **params)
+    def _fn(run: dict) -> dict | None:
+        rows = cut_cycles_series(run["date"], run["value"], **params)
         if not rows:
             return None
-        return pd.DataFrame({
-            "id": pdf["id"].iloc[0],
-            "year": [r["year"] for r in rows],
-            "cycle": [r["cycle"] for r in rows],
-            "begin": _dates_from_days([r["begin"] for r in rows]),
-            "end": _dates_from_days([r["end"] for r in rows]),
-            "maxval": _dates_from_days([r["maxval"] for r in rows]),
-            "weight": [r["weight"] for r in rows],
-        })
+        cols = {k: [r[k] for r in rows]
+                for k in ("year", "cycle", "begin", "end", "maxval", "weight")}
+        return {"id": np.repeat(run["id"][:1], len(rows)), **cols}
 
     from .grouped import grouped_apply
     return grouped_apply(filled, ["id"], _fn, CYCLES_SCHEMA)
@@ -215,19 +171,11 @@ def extract_pheno(filled: DataFrame, cycles: DataFrame, fit="gu",
     else:
         raise ValueError(f"unknown method {method!r}")
 
-    def _fn(pdf: pd.DataFrame) -> pd.DataFrame:
+    def _fn(run: dict) -> dict:
         # groups arrive sorted by date (grouped_apply order=["date"])
-        g0, gr = float(pdf["_g0"].iloc[0]), float(pdf["_gr"].iloc[0])
-        vals = pdf["value"].to_numpy(dtype=np.float64)
-        relval = (vals - g0) / gr
+        g0, gr = float(run["_g0"][0]), float(run["_gr"][0])
+        relval = (run["value"] - g0) / gr
         fitted = fit_with_fallback(relval, fit)
-        base = {
-            "id": pdf["id"].iloc[0], "year": int(pdf["year"].iloc[0]),
-            "cycle": int(pdf["cycle"].iloc[0]),
-            "begin": pdf["date"].iloc[0], "end": pdf["date"].iloc[-1],
-            "maxval": pdf["maxval"].iloc[0],
-            "weight": float(pdf["weight"].iloc[0]),
-        }
         if fitted is None:
             m = {k: float("nan")
                  for k in (*date_metrics, *value_metrics, *raw_metrics,
@@ -240,27 +188,19 @@ def extract_pheno(filled: DataFrame, cycles: DataFrame, fit="gu",
             m = pheno_gu(fitted["predicted"])
         else:
             m = pheno_kl(fitted["predicted"])
-        begin = base["begin"]
-        if hasattr(begin, "date"):
-            begin = begin.date() if not isinstance(begin, _dt.date) else begin
-
-        def _to_date(v):
-            if v is None or (isinstance(v, float) and np.isnan(v)):
-                return None
-            return begin + _dt.timedelta(days=int(round(v)) - 1)
-
-        row = dict(base)
-        for k in date_metrics:
-            row[k] = _to_date(m[k])
+        begin = run["date"][0]
+        row = {k: run[k][:1] for k in ("id", "year", "cycle", "maxval",
+                                       "weight")}
+        row.update(begin=[begin], end=run["date"][-1:])
+        for k in date_metrics:  # 1-based day of the cycle → int days
+            row[k] = [None if np.isnan(m[k]) else begin + int(round(m[k])) - 1]
         for k in value_metrics:
-            row[k] = g0 + m[k] * gr
+            row[k] = [g0 + m[k] * gr]
         for k in raw_metrics:
-            row[k] = m[k]
+            row[k] = [m[k]]
         for k in int_metrics:
-            row[k] = None if np.isnan(m[k]) else int(m[k])
-        return pd.DataFrame([row])[cols]
-
-    cols = [f.strip().split()[0] for f in schema.split(",")]
+            row[k] = [None if np.isnan(m[k]) else int(m[k])]
+        return row
 
     from .grouped import grouped_apply
     # one fit costs seconds whatever the cycle's length: range placement

@@ -337,7 +337,6 @@ def _day_diff_gcd(e: DataFrame) -> DataFrame:
     """(user_id, g): the GCD of each user's positive day gaps between
     consecutive events, one ``np.gcd.reduce`` per user."""
     import numpy as np
-    import pandas as pd
 
     from .operators.grouped import grouped_apply
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -345,9 +344,9 @@ def _day_diff_gcd(e: DataFrame) -> DataFrame:
     d = e.select("user_id", (day - F.lag(day).over(w)).alias("dd")) \
         .filter(F.col("dd").isNotNull() & (F.col("dd") > 0))
 
-    def _fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        g = int(np.gcd.reduce(pdf["dd"].to_numpy(dtype=np.int64)))
-        return pd.DataFrame([{"user_id": pdf["user_id"].iloc[0], "g": g}])
+    def _fn(run: dict) -> dict:
+        return {"user_id": run["user_id"][:1],
+                "g": [np.gcd.reduce(run["dd"].astype(np.int64))]}
 
     return grouped_apply(d, ["user_id"], _fn, "user_id bigint, g bigint")
 

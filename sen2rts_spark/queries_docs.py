@@ -702,17 +702,17 @@ def _pair_sims_kernel(thr, extra_cols=()):
     un-rounded sims — the caller rounds in Catalyst exactly as before). Null
     embeddings are dropped up front: they can only produce null sims, which
     the former per-pair filter dropped too."""
-    def _fn(pdf):
-        pdf = pdf[pdf["embedding"].notna()]
-        ids = pdf["vec_id"].to_numpy()
+    def _fn(run):
+        has = np.array([e is not None for e in run["embedding"]], dtype=bool)
+        ids = run["vec_id"][has]
         if len(ids) < 2:
             return None
-        E = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+        E = np.stack(run["embedding"][has]).astype(np.float64)
         va, vb, sim = _pairwise_cosine_block(ids, E, thr)
         out = {"va": va, "vb": vb, "sim": sim}
         for c in extra_cols:
-            out[c] = np.full(len(va), pdf[c].iloc[0])
-        return pd.DataFrame(out)
+            out[c] = np.repeat(run[c][:1], len(va))
+        return out
     return _fn
 
 

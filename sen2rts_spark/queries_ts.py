@@ -8,7 +8,6 @@ operators/gorilla_sink.py, operators/timeseries.py) over the driver's
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 
@@ -1219,8 +1218,6 @@ def q_savgol_quartic_residual(spark, sf_dir):
     c + 1e-6*((k-75)^4 - 72/7) at every interior point — off by 1.03e-5
     (>> the 1e-6 rounding) for a pass-through kernel; the real kernel
     agrees to ~1e-14 (w_savgol.R:77-180 semantics)."""
-    import pandas as pd
-
     from .kernels.savgol import w_savgol
     from .operators.grouped import grouped_apply
     ids = load(spark, sf_dir, "events") \
@@ -1231,14 +1228,12 @@ def q_savgol_quartic_residual(spark, sf_dir):
     ser = grid.select(F.col("uid").cast("string").alias("id"),
                       F.col("k"), val.alias("value"))
 
-    def _fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        kk = pdf["k"].to_numpy(dtype=np.float64)
-        sm = w_savgol(pdf["value"].to_numpy(dtype=np.float64), kk,
-                      None, window=7, polynom=2)
+    def _fn(run: dict) -> dict:
+        kk = run["k"].astype(np.float64)
+        sm = w_savgol(run["value"], kk, None, window=7, polynom=2)
         keep = (kk >= 3) & (kk <= 146)  # interior: full centered windows
-        return pd.DataFrame({"id": pdf["id"].iloc[0],
-                             "k": pdf["k"].to_numpy()[keep],
-                             "smoothed": sm[keep]})
+        return {"id": run["id"][keep], "k": run["k"][keep],
+                "smoothed": sm[keep]}
 
     out = grouped_apply(ser, ["id"], _fn,
                         "id string, k bigint, smoothed double", order=["k"])

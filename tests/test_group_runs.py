@@ -1,12 +1,11 @@
 """The group-run walker ``arrow_runs`` and its users (``grouped_apply``, the
 Gorilla sink) see every group whole and exactly once, whatever the Arrow
-batch boundaries; ``grouped_apply`` hands its kernel what
-``applyInPandas`` would."""
+batch boundaries; ``grouped_apply`` hands its kernel numpy columns with
+``mapInPandas``'s null rules and dates and timestamps as ints."""
 
 import datetime
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyspark.sql.functions as F
 from hypothesis import given, settings
@@ -18,7 +17,6 @@ from sen2rts_spark.operators.grouped import (arrow_runs, grouped_apply,
                                              run_starts)
 
 _BATCH_KEY = "spark.sql.execution.arrow.maxRecordsPerBatch"
-_TZ_KEY = "spark.sql.session.timeZone"
 
 
 def _with_conf(spark, conf, thunk):
@@ -71,10 +69,10 @@ def test_arrow_runs_yields_each_run_whole_once(runs, cuts):
     assert got == want
 
 
-def test_grouped_apply_equals_apply_in_pandas(spark):
+def test_grouped_apply_hands_fn_numpy_runs(spark):
     # 3 rows per Arrow batch: group (a, 0) spans more than two batches
     rng = np.random.default_rng(11)
-    t0 = datetime.datetime(2021, 3, 14, 1, 30)
+    secs0 = 1_615_685_400  # 2021-03-14 01:30 UTC
     rows = []
     for g in ("a", "b", "c"):
         for k in range(4):
@@ -83,54 +81,65 @@ def test_grouped_apply_equals_apply_in_pandas(spark):
                 t = int(t)
                 rows.append((g, k, t, float(rng.normal()),
                              datetime.date(2020, 1, 1 + t),
-                             t0 + datetime.timedelta(hours=t),
-                             [float(t), 0.5], t * 7))
+                             secs0 + 3600 * t, [float(t), 0.5], t * 7))
     rows[0] = rows[0][:6] + (None, None)  # one null array, one null bigint
     # null keys group as in GROUP BY: a null int key (NaN in numpy) and a
     # null string key each make one group, across batches
     for g, k, n in (("c", None, 5), (None, 3, 4)):
-        rows += [(g, k, t, 0.5 * t, datetime.date(2020, 2, 1 + t), t0,
+        rows += [(g, k, t, 0.5 * t, datetime.date(2020, 2, 1 + t), secs0,
                   [1.0], t) for t in range(n)]
     df = spark.createDataFrame(
-        rows, "g string, k int, t int, v double, d date, ts timestamp, "
-              "a array<float>, m bigint")
+        rows, "g string, k int, t int, v double, d date, secs long, "
+              "a array<float>, m bigint") \
+        .withColumn("ts", F.timestamp_seconds("secs"))
     schema = ("g string, k int, n long, t0 int, wsum double, d_last date, "
-              "d_type string, ts0 timestamp, ts_hour int, ts_dtype string, "
-              "a_nulls int, a_sum double, m_nulls int, m_max long")
+              "d_days int, d_kind string, ts0 timestamp, ts_us long, "
+              "a_nulls int, a_sum double, m_nulls int, m_max long, "
+              "nan_out double")
+    names = [f.split()[0] for f in schema.split(", ")]
 
-    def fn(pdf):  # order-sensitive; no rows for k == 1 (None), k == 2 (empty)
-        if pdf["k"].iloc[0] == 1:
+    def fn(run):  # order-sensitive; no rows for k == 1 (None), k == 2 (empty)
+        if run["k"][0] == 1:
             return None
-        if pdf["k"].iloc[0] == 2:
-            return pd.DataFrame()
-        return pd.DataFrame({
-            "g": [pdf["g"].iloc[0]], "k": [pdf["k"].iloc[0]],
-            "n": [len(pdf)], "t0": [pdf["t"].iloc[0]],
-            "wsum": [float((np.arange(len(pdf)) * pdf["v"].to_numpy()).sum())],
-            "d_last": [pdf["d"].iloc[-1]],
-            "d_type": [type(pdf["d"].iloc[-1]).__name__],
-            "ts0": [pdf["ts"].iloc[0]], "ts_hour": [pdf["ts"].iloc[0].hour],
-            "ts_dtype": [str(pdf["ts"].dtype)],
-            "a_nulls": [int(pdf["a"].isna().sum())],
-            "a_sum": [float(sum(x.sum() for x in pdf["a"] if x is not None))],
-            "m_nulls": [int(pdf["m"].isna().sum())], "m_max": [pdf["m"].max()]})
+        if run["k"][0] == 2:
+            return {name: [] for name in names}
+        m = run["m"]
+        return {
+            "g": run["g"][:1], "k": run["k"][:1], "n": [len(run["t"])],
+            "t0": run["t"][:1],
+            "wsum": [float((np.arange(len(run["v"])) * run["v"]).sum())],
+            "d_last": run["d"][-1:], "d_days": run["d"][-1:],
+            "d_kind": [run["d"].dtype.kind], "ts0": run["ts"][:1],
+            "ts_us": run["ts"][:1],
+            "a_nulls": [sum(x is None for x in run["a"])],
+            "a_sum": [float(sum(x.sum() for x in run["a"] if x is not None))],
+            "m_nulls": [int(np.isnan(m).sum()) if m.dtype.kind == "f" else 0],
+            "m_max": [np.nanmax(m)], "nan_out": [np.nan]}
 
-    def run():
-        got = grouped_apply(df, ["g", "k"], fn, schema, order=["t"]).collect()
-        # applyInPandas takes no None: the empty frame stands in for it
-        want = df.groupBy("g", "k").applyInPandas(
-            lambda pdf: fn(pdf.sort_values("t", kind="stable"))
-            if pdf["k"].iloc[0] != 1 else pd.DataFrame(), schema)
-        return got, want.collect()
+    got = _with_conf(spark, {_BATCH_KEY: 3}, lambda: grouped_apply(
+        df, ["g", "k"], fn, schema, order=["t"]).collect())
 
-    # a zone with a DST jump inside the timestamps' range
-    got, want = _with_conf(spark, {_BATCH_KEY: 3, _TZ_KEY: "America/New_York"},
-                           run)
-    assert len(got) == 8
-    assert sorted(map(tuple, got), key=repr) == \
-        sorted(map(tuple, want), key=repr)
-    assert {r.ts_dtype for r in got} == {"datetime64[ns]"}
-    assert {r.d_type for r in got} == {"date"}
+    groups = {}
+    for r in rows:
+        groups.setdefault((r[0], r[1]), []).append(r)
+    want = []
+    for (g, k), rs in groups.items():
+        if k in (1, 2):
+            continue
+        rs.sort(key=lambda r: r[2])
+        last = rs[-1][4]
+        want.append((
+            g, k, len(rs), rs[0][2],
+            float((np.arange(len(rs)) * np.array([r[3] for r in rs])).sum()),
+            last,
+            (last - datetime.date(1970, 1, 1)).days, "i",
+            datetime.datetime.fromtimestamp(rs[0][5]), rs[0][5] * 10**6,
+            sum(r[6] is None for r in rs),
+            sum(sum(r[6]) for r in rs if r[6] is not None),
+            sum(r[7] is None for r in rs),
+            max(r[7] for r in rs if r[7] is not None), None))
+    assert len(got) == len(want) == 8
+    assert sorted(map(tuple, got), key=repr) == sorted(want, key=repr)
     assert sum(r.a_nulls for r in got) == sum(r.m_nulls for r in got) == 1
 
 

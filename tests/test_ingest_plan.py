@@ -18,6 +18,7 @@ from sen2rts_spark.operators.gorilla_sink import encode_blobs
 from sen2rts_spark.operators.grouped import partition_count
 from sen2rts_spark.operators.pipeline import rollup_gorilla_pipeline
 from sen2rts_spark.operators.rollup import rollup_raw, rollup_tier
+from sen2rts_spark.operators.skew import salted_rollup_raw
 from sen2rts_spark.sources.pages import synth_pages
 
 
@@ -75,3 +76,13 @@ def test_encode_blobs_adds_one_exchange_only_where_needed(spark, tmp_path):
     path = str(tmp_path / "tier")
     tier.write.parquet(path)
     _assert_one_id_exchange(encode_blobs(spark.read.parquet(path), "daily"))
+
+
+def test_salted_rollup_exchanges_on_id_and_salt_behind_extract(spark):
+    # extract's hashpartitioning(id) already satisfies groupBy(id, salt,
+    # window): only an explicit exchange on (id, salt) spreads a hot id
+    pages = synth_pages(spark, n_urls=20, n_slots=20, partitions=4)
+    ex = _exchanges(salted_rollup_raw(_obs(pages), 86400))
+    n = partition_count(spark)
+    assert any(re.match(rf"hashpartitioning\(id#\d+, salt#\d+, {n}\)", e)
+               for e in ex), ex

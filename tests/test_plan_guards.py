@@ -157,7 +157,6 @@ def test_fit_operators_range_partition_on_cycle_key(spark):
 
 
 def test_range_placement_gives_each_cycle_its_own_task(spark):
-    import pandas as pd
     from pyspark import TaskContext
 
     from sen2rts_spark.operators.grouped import grouped_apply
@@ -167,9 +166,9 @@ def test_range_placement_gives_each_cycle_its_own_task(spark):
             for d in range(30)]
     df = spark.createDataFrame(rows, "id string, year int, cycle int, d int")
 
-    def fn(pdf):
-        return pd.DataFrame({"id": [pdf["id"].iloc[0]],
-                             "part": [TaskContext.get().partitionId()]})
+    def fn(run):
+        return {"id": run["id"][:1],
+                "part": [TaskContext.get().partitionId()]}
 
     out = grouped_apply(df, ["id", "year", "cycle"], fn,
                         "id string, part int", by_range=True).collect()

@@ -145,6 +145,27 @@ def test_smooth_rejects_unknown_options_before_any_job(spark):
         sc.setLocalProperty("spark.job.description", None)
 
 
+def test_smooth_nulls_only_series_shorter_than_the_window(spark):
+    """A 3-point series (window 5) keeps its rows with NULL values; a bad
+    parameter, polynom 5 on a one-orbit, one-sensor series (window 5 from
+    the default sg_daywindow=15), fails the job instead of reading as an
+    all-NULL series."""
+    from sen2rts_spark.operators.extract import OBS_SCHEMA
+    from sen2rts_spark.operators.timeseries import smooth
+
+    def obs(id_, n):  # on the 2A/022 passage days: no grid rows injected
+        return [(id_, EPOCH + datetime.timedelta(days=18000 + 10 * k), "022",
+                 "2A", 0.2 + 0.01 * k, 1.0) for k in range(n)]
+
+    short = smooth(spark.createDataFrame(obs("short", 3), OBS_SCHEMA),
+                   sg_polynom=5).collect()
+    assert [(r.value, r.rawval) for r in short] == \
+        [(None, 0.2 + 0.01 * k) for k in range(3)]
+    with pytest.raises(Exception, match="polynom must be < window"):
+        smooth(spark.createDataFrame(obs("long", 20), OBS_SCHEMA),
+               sg_polynom=5).collect()
+
+
 def test_rollup_tiers_exact(spark):
     from sen2rts_spark.operators.extract import extract_obs
     from sen2rts_spark.operators.rollup import rollup_raw, rollup_tier
