@@ -168,6 +168,10 @@ def cut_cycles_series(
         return []
 
     if value_type == "relative":
+        if not np.isfinite(value).any():
+            # nothing to rescale: fill's all-NaN output for a series
+            # shorter than its SG window, and nanmin would warn
+            return []
         vmin = np.nanmin(value)
         vrng = np.nanmax(value) - vmin
         relval = (value - vmin) / vrng if vrng > 0 else np.zeros_like(value)

@@ -32,8 +32,10 @@ _MAGIC = b"GTS1"
 
 # gorilla_decode_multi's lockstep walk iterates once per token of the
 # longest blob in a batch; above this point count a blob decodes faster
-# through the run-batched per-blob path (tier blobs are <= ~366 points,
-# so the multi path stays lockstep in the supported pipeline).
+# through the run-batched per-blob path. Daily blobs at the default
+# 366-day chunk hold <= 366 points and stay lockstep; hourly blobs at that
+# chunk (rollup_gorilla_pipeline(pages, "hourly")) hold up to 8,784, so a
+# full one takes the per-blob route.
 _MULTI_MAX_POINTS = 8192
 
 
@@ -86,38 +88,6 @@ def _bitlen64(x: np.ndarray) -> np.ndarray:
         blh = np.floor(np.log2(hi)) + 33.0   # -inf where hi == 0
         bll = np.floor(np.log2(lo)) + 1.0    # -inf where lo == 0
     return np.maximum(np.maximum(blh, bll), 0.0).astype(np.int64)
-
-
-def _pack_tokens_buf(vals: np.ndarray, widths: np.ndarray) -> np.ndarray:
-    """Pack variable-width bit tokens (each <= 32 bits) MSB-first into a
-    uint8 buffer.
-
-    Vectorized: cumulative bit offsets place every token; each token is
-    left-shifted to its byte-aligned end and OR-merged byte-wise into the
-    buffer (np.bitwise_or.at handles boundary bytes shared by two tokens).
-    A shifted token spans <= ceil((32+7)/8) = 5 bytes. Zero-width tokens
-    are inert (they advance no bits and write no bytes), so callers may
-    leave unused slots in place instead of filtering.
-    """
-    widths64 = widths.astype(np.int64)
-    end = np.cumsum(widths64)
-    total = int(end[-1]) if len(end) else 0
-    if total == 0:
-        return np.zeros(0, dtype=np.uint8)
-    start = end - widths64
-    shift = ((-end) % 8).astype(np.uint64)
-    shifted = vals.astype(np.uint64) << shift
-    first = start >> 3
-    last = ((end + ((-end) % 8)) >> 3) - 1
-    buf = np.zeros((total + 7) >> 3, dtype=np.uint8)
-    nbyte = last - first + 1
-    for j in range(5):
-        sel = nbyte > j
-        if not sel.any():
-            break
-        byte = (shifted[sel] >> np.uint64(8 * j)) & np.uint64(0xFF)
-        np.bitwise_or.at(buf, last[sel] - j, byte.astype(np.uint8))
-    return buf
 
 
 def gorilla_encode(ts: np.ndarray, values: np.ndarray) -> bytes:
@@ -191,6 +161,16 @@ def gorilla_encode(ts: np.ndarray, values: np.ndarray) -> bytes:
     return header + w.getvalue()
 
 
+# timestamp row token per dod class: prefix + biased payload; class 4's
+# 64-bit dod follows as its own token
+_TS_CODE = np.array([0b0, 0b10 << 7, 0b110 << 9, 0b1110 << 12, 0b1111],
+                    dtype=np.uint64)
+_TS_BIAS = np.array([0, 63, 255, 2047, 0], dtype=np.uint64)
+_TS_MASK = np.array([0, 0x7F, 0x1FF, 0xFFF, 0], dtype=np.uint64)
+_TS_WIDTH = np.array([1, 9, 12, 16, 4], dtype=np.int64)
+_MAGIC_WORD = np.uint64(int.from_bytes(_MAGIC, "big") << 32)  # + count
+
+
 def gorilla_encode_multi(ts: np.ndarray, values: np.ndarray,
                          starts: np.ndarray):
     """Encode MANY concatenated series in one vectorized pass.
@@ -205,10 +185,11 @@ def gorilla_encode_multi(ts: np.ndarray, values: np.ndarray,
     group, so every blob is byte-identical to ``gorilla_encode(group)``, at
     any group size (property-tested). The point of this entry is the blob
     writers' hot path (``gorilla_sink.blob_batch``, which calls it with at
-    most 65,536 points): dod classes, XOR windows (per-group
-    minimum.reduceat), and ONE global bit-pack with a <=7-bit per-group
-    alignment pad so every blob starts byte-aligned in the shared buffer.
-    No per-group Python.
+    most 65,536 points): dod classes and per-group XOR windows
+    (``minimum.reduceat``) give every token, header fields included, its
+    value and width (<= 64 bits); cumulative sums give its absolute bit
+    offset, each group's base rounded up to a byte; :func:`_pack` writes
+    them all into one word buffer. No per-group Python.
     """
     ts = np.ascontiguousarray(ts, dtype=np.int64)
     values = np.ascontiguousarray(values, dtype=np.float64)
@@ -219,32 +200,30 @@ def gorilla_encode_multi(ts: np.ndarray, values: np.ndarray,
         raise ValueError(f"ts/values length mismatch: {N} vs {len(values)}")
     if G == 0:
         return np.zeros(0, np.uint8), np.zeros(1, np.int64)
-    ends = np.append(starts[1:], N)
-    ns = ends - starts
+    ns = np.diff(starts, append=N)
     if np.any(ns <= 0):
         raise ValueError("empty group in starts")
-    ms = ns - 1                              # token rows per group
+    if int(ns.max()) >= 2 ** 32:
+        raise ValueError("group size >= 2**32 does not fit the u32 header "
+                         "count (matches gorilla_encode's struct.pack('>I'))")
     bits = values.view(np.uint64)
 
-    # ---- token-row geometry (one row per point except each group's first)
-    tok_mask = np.ones(N, dtype=bool)
-    tok_mask[starts] = False
-    tokidx = np.flatnonzero(tok_mask)        # point index of each token row
+    # ---- token rows: one per point except each group's first
+    ms = ns - 1
+    row = np.ones(N, dtype=bool)
+    row[starts] = False
+    tokidx = np.flatnonzero(row)             # point index of each row
     T = len(tokidx)
-    gid = np.repeat(np.arange(G), ms)        # group of each token row
-    tokstart = np.concatenate(([0], np.cumsum(ms)[:-1]))
-    k = np.arange(T) - tokstart[gid]         # local token index (0 = 2nd pt)
+    gid = np.repeat(np.arange(G), ms)        # group of each row
+    tokend = np.cumsum(ms)
+    tokstart = tokend - ms                   # first row of each group
+    ne = ms > 0                              # groups owning rows
 
-    # ---- timestamp tokens (same classes as gorilla_encode)
-    if T:
-        deltas = ts[tokidx] - ts[tokidx - 1]
-        dods = np.empty(T, dtype=np.int64)
-        dods[0] = 0
-        np.subtract(deltas[1:], deltas[:-1], out=dods[1:])
-        kz = k == 0                          # first token of its group
-        dods[kz] = deltas[kz]                # dod_1 := delta_1
-    else:
-        dods = np.zeros(0, np.int64)
+    # ---- timestamp rows: prefix+payload in one token (<= 16 bits); a
+    #      class-4 row is a '1111' token then one 64-bit dod token
+    deltas = ts[tokidx] - ts[tokidx - 1]
+    dods = np.diff(deltas, prepend=np.int64(0))
+    dods[tokstart[ne]] = deltas[tokstart[ne]]   # dod_1 := delta_1
     cls = np.select(
         [dods == 0,
          (dods >= -63) & (dods <= 64),
@@ -252,115 +231,85 @@ def gorilla_encode_multi(ts: np.ndarray, values: np.ndarray,
          (dods >= -2047) & (dods <= 2048)],
         [0, 1, 2, 3], default=4)
     du = dods.view(np.uint64)
-    tv = np.zeros((T, 3), dtype=np.uint64)
-    tw = np.zeros((T, 3), dtype=np.uint8)
-    tv[:, 0] = np.array([0b0, 0b10, 0b110, 0b1110, 0b1111],
-                        dtype=np.uint64)[cls]
-    tw[:, 0] = np.array([1, 2, 3, 4, 4], dtype=np.uint8)[cls]
-    tv[:, 1] = np.select(
-        [cls == 1, cls == 2, cls == 3, cls == 4],
-        [(du + np.uint64(63)) & np.uint64(0x7F),
-         (du + np.uint64(255)) & np.uint64(0x1FF),
-         (du + np.uint64(2047)) & np.uint64(0xFFF),
-         du >> np.uint64(32)],
-        default=np.uint64(0))
-    tw[:, 1] = np.array([0, 7, 9, 12, 32], dtype=np.uint8)[cls]
-    # zero-width slots are dropped before the pack (`used = allw > 0` below),
-    # so this masking is belt-and-suspenders: it keeps the value array
-    # well-defined for every slot even if the filter ever changes
-    tv[:, 2] = np.where(cls == 4, du & np.uint64(0xFFFFFFFF), np.uint64(0))
-    tw[:, 2] = np.where(cls == 4, 32, 0).astype(np.uint8)
+    tsv = _TS_CODE[cls] | ((du + _TS_BIAS[cls]) & _TS_MASK[cls])
+    tsw = _TS_WIDTH[cls]
+    big = cls == 4
 
-    # ---- value tokens: per-group global window via segment reductions
-    xors = bits[tokidx] ^ bits[tokidx - 1] if T else np.zeros(0, np.uint64)
+    # ---- value rows: per-group blob-global window via segment reductions;
+    #      a control token ('0' | '10' | '11'+lead+mean-1) then the payload
+    xors = bits[tokidx] ^ bits[tokidx - 1]
     nz = xors != 0
-    bl = _bitlen64(xors)                     # 0 where xor == 0
-    lead_cand = np.where(nz, np.minimum(64 - bl, 31), 64)
-    low = xors & (~xors + np.uint64(1))
-    trail_cand = np.where(nz, _bitlen64(low) - 1, 64)
-    fidx_cand = np.where(nz, np.arange(T), T)
-
+    lead_cand = np.where(nz, np.minimum(64 - _bitlen64(xors), 31), 64)
+    trail_cand = np.where(nz, _bitlen64(xors & (~xors + np.uint64(1))) - 1, 64)
     lead_g = np.full(G, 64, dtype=np.int64)
     trail_g = np.full(G, 64, dtype=np.int64)
     first_g = np.full(G, T, dtype=np.int64)
-    ne = ms > 0                              # groups owning token rows
     if ne.any():
         seg = tokstart[ne]
         lead_g[ne] = np.minimum.reduceat(lead_cand, seg)
         trail_g[ne] = np.minimum.reduceat(trail_cand, seg)
-        first_g[ne] = np.minimum.reduceat(fidx_cand, seg)
+        first_g[ne] = np.minimum.reduceat(np.where(nz, np.arange(T), T),
+                                          seg)
     has_nz = first_g < T
-    mean_g = np.where(has_nz, 64 - lead_g - trail_g, 0)
+    mean_g = 64 - lead_g - trail_g
+    fg = first_g[has_nz]                     # row of each '11' token
+    ctlv = np.where(nz, np.uint64(0b10), np.uint64(0))
+    ctlv[fg] = (np.uint64(0b11 << 12)
+                | (lead_g[has_nz].astype(np.uint64) << np.uint64(6))
+                | (mean_g[has_nz] - 1).astype(np.uint64))
+    ctlw = np.where(nz, 2, 1)
+    ctlw[fg] = 14
+    payw = mean_g[gid[nz]]
+    payv = xors[nz] >> trail_g[gid[nz]].astype(np.uint64)
+    vw = ctlw.copy()
+    vw[nz] += payw
 
-    lead_r = lead_g[gid]
-    trail_r = trail_g[gid].astype(np.uint64)
-    mean_r = mean_g[gid]
+    # ---- bit offsets: [24B header | ts rows | value rows] per group, each
+    #      group's base rounded up to a byte
+    tscum = np.concatenate(([0], np.cumsum(tsw + 64 * big)))
+    vcum = np.concatenate(([0], np.cumsum(vw)))
+    ts_g = tscum[tokend] - tscum[tokstart]
+    nbytes = (192 + ts_g + vcum[tokend] - vcum[tokstart] + 7) >> 3
+    offsets = np.concatenate(([0], np.cumsum(nbytes)))
+    base = offsets[:-1] << 3
+    tsoff = (base + 192 - tscum[tokstart])[gid] + tscum[:-1]
+    voff = (base + 192 + ts_g - vcum[tokstart])[gid] + vcum[:-1]
 
-    vv = np.zeros((T, 4), dtype=np.uint64)
-    vw = np.zeros((T, 4), dtype=np.uint8)
-    vw[:, 0] = np.where(nz, 2, 1).astype(np.uint8)
-    vv[nz, 0] = np.uint64(0b10)
-    fg = first_g[has_nz]                     # token row of each '11' header
-    vv[fg, 0] = np.uint64(0b11)
-    vw[fg, 1] = 12
-    vv[fg, 1] = ((lead_g[has_nz].astype(np.uint64) << np.uint64(6))
-                 | (mean_g[has_nz] - 1).astype(np.uint64))
-    mb = np.where(nz, xors >> trail_r, np.uint64(0))
-    vw[:, 2] = np.where(nz, np.maximum(mean_r - 32, 0), 0).astype(np.uint8)
-    vv[:, 2] = mb >> np.uint64(32)
-    vw[:, 3] = np.where(nz, np.minimum(mean_r, 32), 0).astype(np.uint8)
-    vv[:, 3] = mb & np.uint64(0xFFFFFFFF)
-    vv[~nz] = 0                              # zero-width slots must be 0
+    head = np.stack([_MAGIC_WORD | ns.astype(np.uint64),
+                     ts[starts].view(np.uint64), bits[starts]], axis=1)
+    words = _pack(
+        int(offsets[-1]),
+        (base[:, None] + np.array([0, 64, 128]), head, 64),
+        (tsoff, tsv, tsw),
+        (tsoff[big] + 4, du[big], 64),
+        (voff, ctlv, ctlw),
+        (voff[nz] + ctlw[nz], payv, payw))
+    return words.view(np.uint8)[:int(offsets[-1])], offsets
 
-    # ---- scatter into blob-major slot order:
-    #      [3m ts slots][4m value slots][1 alignment-pad slot] per group
-    slots = 7 * ms + 1
-    base = np.concatenate(([0], np.cumsum(slots)[:-1]))
-    S = int(base[-1] + slots[-1])
-    allv = np.zeros(S, dtype=np.uint64)
-    allw = np.zeros(S, dtype=np.uint8)
-    if T:
-        ts_dest = (base[gid] + 3 * k)[:, None] + np.arange(3)
-        allv[ts_dest.ravel()] = tv.ravel()
-        allw[ts_dest.ravel()] = tw.ravel()
-        v_dest = (base[gid] + 3 * ms[gid] + 4 * k)[:, None] + np.arange(4)
-        allv[v_dest.ravel()] = vv.ravel()
-        allw[v_dest.ravel()] = vw.ravel()
 
-    # per-group bit totals -> <=7-bit pad so each blob starts byte-aligned
-    roww = tw.sum(axis=1, dtype=np.int64) + vw.sum(axis=1, dtype=np.int64)
-    bits_g = np.zeros(G, dtype=np.int64)
-    if ne.any():
-        bits_g[ne] = np.add.reduceat(roww, tokstart[ne])
-    pad_w = (-bits_g) % 8
-    allw[base + 7 * ms] = pad_w.astype(np.uint8)
+def _pack(nbytes: int, *tokens) -> np.ndarray:
+    """Write ``(offset, value, width)`` token arrays MSB-first into a
+    big-endian word buffer of ``nbytes`` bytes (rounded up to 8).
 
-    # zero-width slots contribute no bits — drop them before the pack
-    # (3.4x fewer elements: ~2.1 real tokens per point vs 7 slots)
-    used = allw > 0
-    buf = _pack_tokens_buf(allv[used], allw[used])
-
-    # ---- assemble [24B header | token bytes] per group in one buffer
-    tokbytes = (bits_g + pad_w) >> 3
-    sizes = 24 + tokbytes
-    offsets = np.concatenate(([0], np.cumsum(sizes)))
-    out = np.zeros(int(offsets[-1]), dtype=np.uint8)
-    hdr = np.empty((G, 24), dtype=np.uint8)
-    hdr[:, :4] = np.frombuffer(_MAGIC, dtype=np.uint8)
-    if int(ns.max(initial=0)) >= 2 ** 32:
-        raise ValueError("group size >= 2**32 does not fit the u32 header "
-                         "count (matches gorilla_encode's struct.pack('>I'))")
-    hdr[:, 4:8] = ns.astype(">u4").view(np.uint8).reshape(G, 4)
-    hdr[:, 8:16] = ts[starts].astype(">i8").view(np.uint8).reshape(G, 8)
-    hdr[:, 16:24] = bits[starts].astype(">u8").view(np.uint8).reshape(G, 8)
-    hdr_dest = offsets[:-1, None] + np.arange(24)
-    out[hdr_dest.ravel()] = hdr.ravel()
-    if len(buf):
-        srccum = np.concatenate(([0], np.cumsum(tokbytes)[:-1]))
-        tok_dest = (np.arange(len(buf))
-                    + np.repeat(offsets[:-1] + 24 - srccum, tokbytes))
-        out[tok_dest] = buf
-    return out, offsets
+    A token holds 1..64 bits at absolute bit ``offset``; its value has no
+    bits above ``width``. It covers one word, or the tail of one and the
+    head of the next. Token bit ranges are disjoint, so ``np.add.at`` sums
+    equal ORs. Every shift count stays in 0..63 (a uint64 shift by 64 is
+    undefined in numpy).
+    """
+    off = np.concatenate([np.ravel(o) for o, _, _ in tokens])
+    val = np.concatenate([np.ravel(v) for _, v, _ in tokens])
+    w = np.concatenate([np.broadcast_to(w, np.shape(v)).ravel()
+                        for _, v, w in tokens])
+    over = (off & 63) + w - 64               # bits spilling into word + 1
+    spill = over > 0
+    words = np.zeros((nbytes + 7) >> 3, dtype=np.uint64)
+    np.add.at(words, off >> 6,
+              np.where(spill, val >> (over & 63).astype(np.uint64),
+                       val << (-over & 63).astype(np.uint64)))
+    np.add.at(words, (off[spill] >> 6) + 1,
+              val[spill] << (64 - over[spill]).astype(np.uint64))
+    return words.astype(">u8")
 
 
 def _next_set_bit(arr: np.ndarray, b: int) -> int:

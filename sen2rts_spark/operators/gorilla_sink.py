@@ -39,8 +39,9 @@ BLOB_ARROW = pa.schema([
     ("max_ts", pa.timestamp("us")),
 ])
 
-# points per gorilla_encode_multi call: its scratch arrays take ~700 B per
-# point, so one call over a whole batch of merged groups peaked at ~1 GB
+# points per gorilla_encode_multi call: its scratch arrays take ~385 B per
+# point, so one call over a whole batch of 2,520 merged groups x 624
+# points would peak at ~580 MiB; the cap holds a call near 24 MiB
 _ENCODE_MAX_POINTS = 65_536
 
 

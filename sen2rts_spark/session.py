@@ -1,8 +1,9 @@
 """SparkSession factory with scale-appropriate defaults.
 
-Tuned for the engine's workload: Arrow-batched pandas UDFs over
-``groupBy(url)``, AQE with skew-join handling, and shuffle partitioning
-proportional to cores (overridable for the bench's N vs 4N protocol).
+Tuned for the engine's workload: numpy kernels over whole series runs
+that ``grouped.grouped_apply`` hands them through ``mapInArrow``, AQE
+with skew-join handling, and shuffle partitioning proportional to cores
+(overridable for the bench's N vs 4N protocol).
 
 Python workers start through ``sen2rts_spark._daemon`` whenever they can
 import it: it takes Spark's pyspark/py4j archives off the workers'

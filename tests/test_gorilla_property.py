@@ -97,10 +97,14 @@ def test_multi_roundtrip_mixed_groups(seed, ngroups):
         vals[rng.random(n) < 0.1] = 0.0
         groups.append((ts, vals))
     for blob, (ts, vals) in zip(_multi_groups(groups), groups):
+        ts = np.asarray(ts, np.int64)
+        vals = np.asarray(vals, np.float64)
+        # byte-equal to the per-blob walk: a packer bit error the decoder
+        # would still accept fails here
+        assert blob == gorilla_encode(ts, vals)
         dts, dvals = gorilla_decode(blob)
-        assert np.array_equal(dts, np.asarray(ts, np.int64))
-        assert np.array_equal(dvals.view(np.uint64),
-                              np.asarray(vals, np.float64).view(np.uint64))
+        assert np.array_equal(dts, ts)
+        assert np.array_equal(dvals.view(np.uint64), vals.view(np.uint64))
 
 
 def test_multi_byte_identical_to_single_for_large_groups():
@@ -117,19 +121,40 @@ def test_multi_byte_identical_to_single_for_large_groups():
                                       np.asarray(vals, np.float64))
 
 
+def _floats(*bits):
+    return np.array(bits, dtype=np.uint64).view(np.float64)
+
+
 def test_multi_edge_groups():
     # single-point groups, constant-value groups (no '11' window token),
-    # and a group whose token bits land exactly on a byte boundary
+    # a group whose token bits land exactly on a byte boundary, and the
+    # token-width extremes: a 64-bit value window (XOR with bits 63 and 0
+    # set), a lead field capped at 31 (XOR below 2**32), a negative class-4
+    # dod, and a group whose tokens end exactly on a 64-bit word boundary
+    # (192 header bits + 9-bit first dod + 34 '0' dods + 33 '0' values +
+    # '11' window and 50 payload bits + '10' and 50 payload bits = 384)
     groups = [
         (np.array([5]), np.array([1.5])),
         (np.arange(10) * 3600, np.full(10, 2.25)),
         (np.array([0, 1]), np.array([1.0, 1.0])),
         (np.arange(256) * 86400, np.full(256, -0.0)),
+        (np.arange(3), _floats(0, (1 << 63) | 1, 0)),
+        (np.arange(4), _floats(1 << 40, (1 << 40) ^ 0xF00F, 1 << 40,
+                                    (1 << 40) | 7)),
+        (np.array([0, 10**7, 10**7 + 5, 2 * 10**7]),
+         np.array([1.0, 2.0, 3.0, 4.0])),
+        (np.arange(36), np.concatenate((np.zeros(34),
+                                        _floats(1 << 49, 1)))),
     ]
-    for blob, (ts, vals) in zip(_multi_groups(groups), groups):
+    blobs = _multi_groups(groups)
+    assert len(blobs[-1]) == 48
+    for blob, (ts, vals) in zip(blobs, groups):
+        ts = np.asarray(ts, np.int64)
+        vals = np.asarray(vals, np.float64)
+        assert blob == gorilla_encode(ts, vals)
         dts, dvals = gorilla_decode(blob)
-        assert np.array_equal(dts, np.asarray(ts, np.int64))
-        assert np.array_equal(dvals, np.asarray(vals, np.float64))
+        assert np.array_equal(dts, ts)
+        assert np.array_equal(dvals.view(np.uint64), vals.view(np.uint64))
 
 
 # ---- cross-blob vectorized decoder (gorilla_decode_multi) ------------------

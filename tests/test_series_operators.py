@@ -11,6 +11,7 @@ path), cloudy rows, null ``qa`` and a null value, over two seasons.
 
 import datetime
 import math
+import warnings
 
 import numpy as np
 import pytest
@@ -190,6 +191,19 @@ def test_smooth_fill_cut_cycles_equal_kernels(stages):
     assert all(r["value"] is None for r in smoothed["short"])
     assert any(r["qa"] is None for r in smoothed["multi"])
     assert {"multi", "single"} <= set(cycles)
+
+
+def test_cut_cycles_of_all_nan_series_is_silent():
+    """A series shorter than its SG window smooths to NULL, fills to an
+    all-NaN series, and cuts to no cycles without a RuntimeWarning."""
+    days = np.arange(3) * 10
+    filled = fill_series(days, np.full(3, math.nan),
+                         np.array(["2A"] * 3, dtype=object),
+                         np.array(["022"] * 3, dtype=object))
+    assert np.isnan(filled["value"]).all()
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert cut_cycles_series(filled["days"], filled["value"]) == []
 
 
 def test_extract_pheno_and_fit_curves_equal_kernels(stages):
