@@ -28,7 +28,7 @@ __all__ = ["gu_curve", "beck_curve", "elmore_curve", "klosterman_curve",
 
 def gu_curve(par: np.ndarray, t: np.ndarray) -> np.ndarray:
     y0, a1, a2, t01, t02, b1, b2, c1, c2 = par
-    with np.errstate(over="ignore", invalid="ignore"):
+    with np.errstate(over="ignore", invalid="ignore", divide="ignore"):
         return (y0
                 + a1 / (1.0 + np.exp(-(t - t01) / b1)) ** c1
                 - a2 / (1.0 + np.exp(-(t - t02) / b2)) ** c2)
@@ -169,7 +169,7 @@ def beck_curve(par: np.ndarray, t: np.ndarray) -> np.ndarray:
 def elmore_curve(par: np.ndarray, t: np.ndarray) -> np.ndarray:
     """Elmore et al. 2012 (7-param, linear 'greendown' slope m7)."""
     m1, m2, m3, m4, m5, m6, m7 = par
-    with np.errstate(over="ignore", invalid="ignore"):
+    with np.errstate(over="ignore", invalid="ignore", divide="ignore"):
         return m1 + (m2 - m7 * t) * (1.0 / (1.0 + np.exp((m3 - t) / m4))
                                      - 1.0 / (1.0 + np.exp((m5 - t) / m6)))
 

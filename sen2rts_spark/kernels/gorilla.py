@@ -658,8 +658,8 @@ def gorilla_decode_multi(data: np.ndarray, offsets: np.ndarray):
     PLEN = np.array([1, 2, 3, 4, 4], dtype=np.int64)
     PW = np.array([0, 7, 9, 12, 64], dtype=np.int64)
     BIAS = np.array([0, 63, 255, 2047, 0], dtype=np.int64)
-    # Corrupt-count containment (ADVICE r7) kept OFF the hot path:
-    # each retirement checks pos <= endbit below (the walk is
+    # Corrupt-count containment (ADVICE r7) kept OFF the hot path, in
+    # both walks below: each retirement checks pos <= endbit (the walk is
     # finite — `rem` bounds emissions), which catches counts that
     # over-read into the next blob or the pad. A runaway count on
     # the LAST blob can additionally run the _read64 gather past
@@ -713,14 +713,6 @@ def gorilla_decode_multi(data: np.ndarray, offsets: np.ndarray):
     mean = np.zeros(A, dtype=np.int64)    # 0 until the first '11' header
     outp = base[act0] + 1
     rem = counts[act0] - 1
-    # Corrupt-count containment (ADVICE r7) kept OFF the hot path:
-    # each retirement checks pos <= endbit below (the walk is
-    # finite — `rem` bounds emissions), which catches counts that
-    # over-read into the next blob or the pad. A runaway count on
-    # the LAST blob can additionally run the _read64 gather past
-    # the 16-byte pad before retiring; translate that IndexError
-    # into the same typed error. (A per-iteration pos>=endbit
-    # pre-read check cost 14-22% on decode-heavy bench rows.)
     try:
         while len(pos):
             u = _read64(swv8, pos)

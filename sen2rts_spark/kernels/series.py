@@ -75,16 +75,12 @@ def dop_grid(orbits, sensors, day_min: int, day_max: int):
 def rank_average(v: np.ndarray) -> np.ndarray:
     """R rank(ties.method='average') for a vector without NAs."""
     order = np.argsort(v, kind="stable")
+    # tie runs [start, end) of the sorted vector; each gets its mean rank
+    bounds = np.flatnonzero(np.diff(v[order]) != 0) + 1
+    starts = np.concatenate(([0], bounds))
+    ends = np.concatenate((bounds, [len(v)]))
     ranks = np.empty(len(v), dtype=np.float64)
-    sv = v[order]
-    i = 0
-    n = len(v)
-    # average rank per tie-run
-    boundaries = np.flatnonzero(np.diff(sv) != 0) + 1
-    starts = np.concatenate(([0], boundaries))
-    ends = np.concatenate((boundaries, [n]))
-    for s, e in zip(starts, ends):
-        ranks[order[s:e]] = (s + e + 1) / 2.0  # mean of ranks s+1..e
+    ranks[order] = np.repeat((starts + ends + 1) / 2, ends - starts)
     return ranks
 
 

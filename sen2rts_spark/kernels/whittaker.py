@@ -1,13 +1,15 @@
 """Weighted Whittaker-Eilers smoother (Eilers 2003, "A perfect smoother").
 
-Solves (W + λ D'D) z = W y with D the 2nd-difference operator, via a
-scipy-free banded Cholesky (the system is pentadiagonal SPD): O(n) per
-series, numpy-vectorized inner products. Complements the reference's SG
-filter per the north rule (SURVEY §2.10 — not present in the reference,
-public-knowledge implementation).
+Solves (W + λ D'D) z = W y with D the 2nd-difference operator. The system
+is pentadiagonal SPD, so one scipy-free banded Cholesky solves it in O(n)
+for every length; its recurrences run on Python floats (ARCHITECTURE item
+16). Complements the reference's SG filter per the north rule (SURVEY
+§2.10 — not present in the reference, public-knowledge implementation).
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 
@@ -15,279 +17,55 @@ __all__ = ["whittaker_smooth"]
 
 
 def _build_banded(w: np.ndarray, lam: float) -> np.ndarray:
-    """Lower-banded representation (3 diagonals) of W + lam * D2'D2."""
-    n = len(w)
-    # D2'D2 pentadiagonal coefficients
-    main = np.full(n, 6.0)
-    main[0] = main[-1] = 1.0
-    main[1] = main[-2] = 5.0
-    off1 = np.full(n - 1, -4.0)
-    off1[0] = off1[-1] = -2.0
-    off2 = np.full(n - 2, 1.0)
-    if n == 1:
-        main[:] = 0.0
-    elif n == 2:
-        main[:] = 1.0
-        off1[:] = -1.0
-    elif n == 3:
-        main[:] = [1.0, 4.0, 1.0]
-        off1[:] = [-2.0, -2.0]
-    ab = np.zeros((3, n))
-    ab[0] = w + lam * main
-    ab[1, : n - 1] = lam * off1
-    if n > 2:
-        ab[2, : n - 2] = lam * off2
+    """Lower-banded W + lam * D2'D2 (rows: diagonal, 1st and 2nd
+    sub-diagonal, zero-padded at the end) for n >= 3.
+
+    D2'D2 sums r'r over the n - 2 rows r = [1, -2, 1] of D2: each adds
+    [1, 4, 1] to the diagonal, [-2, -2] to the first sub-diagonal and 1 to
+    the second.
+    """
+    ones = np.ones(len(w) - 2)
+    ab = np.zeros((3, len(w)))
+    ab[0] = w + lam * np.convolve(ones, [1.0, 4.0, 1.0])
+    ab[1, :-1] = lam * np.convolve(ones, [-2.0, -2.0])
+    ab[2, :-2] = lam * ones
     return ab
 
 
 def _cholesky_banded_solve(ab: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Solve A x = b for SPD banded A (bandwidth 2), in-place Cholesky."""
-    n = ab.shape[1]
-    L = np.zeros_like(ab)
-    for j in range(n):
-        s = ab[0, j]
-        if j >= 1:
-            s -= L[1, j - 1] ** 2
-        if j >= 2:
-            s -= L[2, j - 2] ** 2
-        L[0, j] = np.sqrt(s)
-        if j + 1 < n:
-            t = ab[1, j]
-            if j >= 1:
-                t -= L[1, j - 1] * L[2, j - 1]
-            L[1, j] = t / L[0, j]
-        if j + 2 < n:
-            L[2, j] = ab[2, j] / L[0, j]
-    # forward substitution L y = b
-    y = np.zeros(n)
-    for i in range(n):
-        s = b[i]
-        if i >= 1:
-            s -= L[1, i - 1] * y[i - 1]
-        if i >= 2:
-            s -= L[2, i - 2] * y[i - 2]
-        y[i] = s / L[0, i]
-    # back substitution L' x = y
-    x = np.zeros(n)
-    for i in range(n - 1, -1, -1):
-        s = y[i]
-        if i + 1 < n:
-            s -= L[1, i] * x[i + 1]
-        if i + 2 < n:
-            s -= L[2, i] * x[i + 2]
-        x[i] = s / L[0, i]
-    return x
+    """Solve A x = b for SPD A given lower-banded (bandwidth 2) as ``ab``.
 
-
-# Below this length the scalar banded Cholesky is already ~sub-ms and the
-# substructured solver's block bookkeeping isn't worth it.
-_SUBSTRUCT_MIN_N = 256
-
-
-def _inv2(A: np.ndarray) -> np.ndarray:
-    """Batched closed-form inverse of (M, 2, 2) matrices (no LAPACK)."""
-    det = A[:, 0, 0] * A[:, 1, 1] - A[:, 0, 1] * A[:, 1, 0]
-    out = np.empty_like(A)
-    out[:, 0, 0] = A[:, 1, 1]
-    out[:, 1, 1] = A[:, 0, 0]
-    out[:, 0, 1] = -A[:, 0, 1]
-    out[:, 1, 0] = -A[:, 1, 0]
-    return out / det[:, None, None]
-
-
-def _block_tridiag_cr_solve(A: np.ndarray, B: np.ndarray,
-                            g: np.ndarray) -> np.ndarray:
-    """Solve a 2x2-block tridiagonal system by block cyclic reduction.
-
-    A: (M, 2, 2) diagonal blocks; B: (M, 2, 2) sub-diagonal coupling
-    (B[i] multiplies x_{i-1}; B[0] ignored); super-diagonal is B[i+1]^T
-    (the system is symmetric). g: (M, 2). log2(M) vectorized elimination
-    levels — every 2x2 op is a batched einsum, no per-block Python loop.
+    A = L L' with L's diagonal ``d`` and sub-diagonals ``e``, ``f``. The
+    factor and forward substitution (L y = b) share one pass, then one
+    back substitution (L' x = y). All three recurrences run on Python
+    floats: indexing numpy arrays per element costs several times the
+    arithmetic. ``** 2`` is C ``pow``, as on numpy scalars, where ``x * x``
+    can round differently. A non-positive pivot (A singular, e.g. fewer
+    than two positive weights) raises instead of returning inf/NaN.
     """
-    M = A.shape[0]
-    if M == 1:
-        return _inv2(A)[0] @ g[0]
-    # classic even/odd halving works on any M via recursion:
-    # eliminate ODD indices, recurse on EVEN ones.
-    C = np.zeros_like(B)                     # C[i] = S[i, i+1] = B[i+1]^T
-    C[:-1] = np.transpose(B[1:], (0, 2, 1))
-    odd = np.arange(1, M, 2)
-    even = np.arange(0, M, 2)
-    Ai = _inv2(A[odd])                       # (no, 2, 2)
-    # alpha_e = B_e A_{e-1}^{-1} for even e >= 1... even e couples to
-    # odd neighbours e-1 (via B[e]) and e+1 (via C[e]).
-    ne = len(even)
-    A2 = A[even].copy()
-    B2 = np.zeros((ne, 2, 2))
-    g2 = g[even].copy()
-    # left neighbour (odd index e-1) exists for all even e > 0
-    has_l = even > 0
-    li = (even[has_l] - 1) // 2              # position in odd array
-    alpha = np.einsum("kij,kjl->kil", B[even[has_l]], Ai[li])
-    A2[has_l] -= np.einsum("kij,kjl->kil", alpha, C[even[has_l] - 1])
-    g2[has_l] -= np.einsum("kij,kj->ki", alpha, g[even[has_l] - 1])
-    B2[has_l] = -np.einsum("kij,kjl->kil", alpha, B[even[has_l] - 1])
-    # right neighbour (odd index e+1) exists for even e < M-1
-    has_r = even < M - 1
-    ri = (even[has_r] + 1) // 2
-    gamma = np.einsum("kij,kjl->kil", C[even[has_r]], Ai[ri])
-    A2[has_r] -= np.einsum("kij,kjl->kil", gamma, B[even[has_r] + 1])
-    g2[has_r] -= np.einsum("kij,kj->ki", gamma, g[even[has_r] + 1])
-    # the super-diagonal coupling -gamma_e C_{e+1} equals B2 of the next
-    # even row transposed (system stays symmetric), so B2 alone carries
-    # the full reduced coupling — no separate C2 needed.
-    x2 = _block_tridiag_cr_solve(A2, B2, g2)
-    # back-substitute odd unknowns
-    x = np.empty((M, 2))
-    x[even] = x2
-    rhs_o = g[odd].copy()
-    rhs_o -= np.einsum("kij,kj->ki", B[odd], x[odd - 1])
-    has_r2 = odd < M - 1
-    rhs_o[has_r2] -= np.einsum("kij,kj->ki", C[odd[has_r2]],
-                               x[odd[has_r2] + 1])
-    x[odd] = np.einsum("kij,kj->ki", Ai, rhs_o)
-    return x
-
-
-def _substructured_solve(ab: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Solve A x = b for SPD pentadiagonal A via block substructuring.
-
-    Vectorizes the per-element Cholesky recurrences ACROSS blocks
-    (VERDICT r6 task 3: removes the last per-element Python loop class):
-    the series is cut into K interior blocks separated by width-2
-    separators (bandwidth 2 => interiors decouple given the separators).
-    All K interior solves run lockstep — each recurrence step is a
-    K-vector numpy op — then a small dense Schur system (2(K-1) unknowns,
-    block-tridiagonal, SPD) couples the separators. Standard
-    substructuring / SPIKE decomposition (public domain algorithm;
-    Polizzi & Sameh 2006). Loop length drops from 3n scalar steps to
-    ~3·(n/K) vector steps + one tiny dense solve.
-    """
-    n = ab.shape[1]
-    # block size ~ sqrt(n): balances lockstep loop length (m) against the
-    # reduced dense system (2(K-1))^3/3 flops.
-    m = max(24, int(np.sqrt(n) * 0.6))
-    K = max(2, (n + 2) // (m + 2))
-    interior_total = n - 2 * (K - 1)
-    base, rem = divmod(interior_total, K)
-    sizes = np.full(K, base, dtype=np.int64)
-    sizes[:rem] += 1
-    # The coupling-column writes below index local rows 0, 1 and last,
-    # last-1 unguarded — every block needs >= 4 interior rows. The m/K
-    # formulas above keep sizes >= 24 for all n >= _SUBSTRUCT_MIN_N, but
-    # fail loudly if a future re-tuning breaks that invariant (ADVICE r7).
-    assert sizes.min() >= 4, \
-        f"substructuring block too small ({sizes.min()}): retune m/K"
-    starts = np.zeros(K, dtype=np.int64)
-    for k in range(1, K):
-        starts[k] = starts[k - 1] + sizes[k - 1] + 2
-    seps = starts[:-1] + sizes[:-1]          # global index of each sep pair
-    m_max = int(sizes.max())
-
-    # ---- padded per-block banded representation + 5 RHS ----------------
-    # RHS columns: 0-1 left-sep coupling, 2-3 right-sep coupling, 4 = b.
-    # One-shot gather (no per-block Python loop): idx[k, j] = global index
-    # of local row j in block k; mask marks real (non-pad) rows.
-    j_grid = np.arange(m_max)
-    idx = starts[:, None] + j_grid[None, :]          # (K, m_max)
-    mask = j_grid[None, :] < sizes[:, None]
-    gidx = np.minimum(idx, n - 1)
-    diag = np.where(mask, ab[0, gidx], 1.0)
-    m1 = j_grid[None, :] < (sizes[:, None] - 1)      # off1 rows per block
-    off1 = np.where(m1, ab[1, gidx], 0.0)
-    m2 = j_grid[None, :] < (sizes[:, None] - 2)
-    off2 = np.where(m2, ab[2, gidx], 0.0)
-    rhs = np.zeros((K, m_max, 5))
-    rhs[:, :, 4] = np.where(mask, b[gidx], 0.0)
-    lc = np.zeros((K, m_max, 2))             # left-coupling columns A[I, sep]
-    rc = np.zeros((K, m_max, 2))             # right-coupling columns
-    ks = np.arange(1, K)                     # blocks with a left separator
-    lc[ks, 0, 0] = ab[2, starts[1:] - 2]
-    lc[ks, 0, 1] = ab[1, starts[1:] - 1]
-    lc[ks, 1, 1] = ab[2, starts[1:] - 1]     # sizes >= 24 > 1 always
-    ke = np.arange(0, K - 1)                 # blocks with a right separator
-    last = sizes[:-1] - 1
-    rc[ke, last, 0] = ab[1, seps - 1]
-    rc[ke, last, 1] = ab[2, seps - 1]
-    rc[ke, last - 1, 0] = ab[2, seps - 2]
-    rhs[:, :, 0:2] = lc
-    rhs[:, :, 2:4] = rc
-
-    # ---- lockstep banded Cholesky across the K blocks -------------------
-    L0 = np.ones((K, m_max))
-    L1 = np.zeros((K, m_max))
-    L2 = np.zeros((K, m_max))
-    for j in range(m_max):
-        s = diag[:, j].copy()
-        if j >= 1:
-            s -= L1[:, j - 1] ** 2
-        if j >= 2:
-            s -= L2[:, j - 2] ** 2
-        L0[:, j] = np.sqrt(s)
-        if j + 1 < m_max:
-            t = off1[:, j].copy()
-            if j >= 1:
-                t -= L1[:, j - 1] * L2[:, j - 1]
-            L1[:, j] = t / L0[:, j]
-        if j + 2 < m_max:
-            L2[:, j] = off2[:, j] / L0[:, j]
-    # forward substitution (5 RHS at once: (K, 5) per step)
-    yv = np.zeros_like(rhs)
-    for i in range(m_max):
-        s = rhs[:, i, :].copy()
-        if i >= 1:
-            s -= L1[:, i - 1, None] * yv[:, i - 1, :]
-        if i >= 2:
-            s -= L2[:, i - 2, None] * yv[:, i - 2, :]
-        yv[:, i, :] = s / L0[:, i, None]
-    xv = np.zeros_like(rhs)
-    for i in range(m_max - 1, -1, -1):
-        s = yv[:, i, :].copy()
-        if i + 1 < m_max:
-            s -= L1[:, i, None] * xv[:, i + 1, :]
-        if i + 2 < m_max:
-            s -= L2[:, i, None] * xv[:, i + 2, :]
-        xv[:, i, :] = s / L0[:, i, None]
-    xl = xv[:, :, 0:2]                       # A_k^{-1} Lc_k
-    xr = xv[:, :, 2:4]                       # A_k^{-1} Rc_k
-    xf = xv[:, :, 4]                         # A_k^{-1} f_k
-
-    # ---- assemble + solve the separator Schur system --------------------
-    # Block-tridiagonal, 2x2 blocks, symmetric:
-    #   S[k,k]   = A_SS_k - Rc_k' xr_k - Lc_{k+1}' xl_{k+1}
-    #   S[k,k+1] = -Lc_{k+1}' xr_{k+1}   (shared block k+1)
-    # Solved by vectorized block cyclic reduction (no LAPACK — this
-    # host's threaded OpenBLAS makes small dense solves 100x slower
-    # under contention, and CR keeps the whole kernel dispatch-bounded
-    # at O(log K) levels).
-    rtxr = np.einsum("kmi,kmj->kij", rc, xr)     # (K,2,2)
-    ltxl = np.einsum("kmi,kmj->kij", lc, xl)
-    ltxr = np.einsum("kmi,kmj->kij", lc, xr)
-    rtf = np.einsum("kmi,km->ki", rc, xf)        # (K,2)
-    ltf = np.einsum("kmi,km->ki", lc, xf)
-    Ad = np.empty((K - 1, 2, 2))
-    Ad[:, 0, 0] = ab[0, seps]
-    Ad[:, 1, 1] = ab[0, seps + 1]
-    Ad[:, 0, 1] = ab[1, seps]
-    Ad[:, 1, 0] = ab[1, seps]
-    Ad -= rtxr[:-1] + ltxl[1:]
-    Bs = np.zeros((K - 1, 2, 2))                 # Bs[k] = S[k, k-1]
-    Bs[1:] = -np.transpose(ltxr[1:K - 1], (0, 2, 1))
-    g2 = np.stack([b[seps], b[seps + 1]], axis=1) - rtf[:-1] - ltf[1:]
-    xs2 = _block_tridiag_cr_solve(Ad, Bs, g2)
-
-    # ---- recover interiors (vectorized scatter) --------------------------
-    xsl = np.zeros((K, 2))
-    xsl[1:] = xs2                            # left separator of block k
-    xsr = np.zeros((K, 2))
-    xsr[:-1] = xs2                           # right separator of block k
-    xi = (xf - np.einsum("kmi,ki->km", xl, xsl)
-          - np.einsum("kmi,ki->km", xr, xsr))
-    x = np.empty(n)
-    x[idx[mask]] = xi[mask]
-    x[seps] = xs2[:, 0]
-    x[seps + 1] = xs2[:, 1]
-    return x
+    d, e, f, y = [], [], [], []
+    # e[j-1], f[j-1], f[j-2], y[j-1], y[j-2]; zero before the first row
+    e1 = f1 = f2 = y1 = y2 = 0.0
+    for a0, a1, a2, bj in zip(*ab.tolist(), b.tolist()):
+        s = a0 - e1 ** 2 - f2 ** 2
+        if s <= 0.0:
+            raise ValueError("Whittaker system is not positive definite")
+        dj = math.sqrt(s)
+        yj = (bj - e1 * y1 - f2 * y2) / dj
+        ej = (a1 - e1 * f1) / dj
+        f2, f1, e1 = f1, a2 / dj, ej
+        y2, y1 = y1, yj
+        d.append(dj)
+        e.append(ej)
+        f.append(f1)
+        y.append(yj)
+    x = []
+    x1 = x2 = 0.0                       # x[i+1], x[i+2]
+    for dj, ej, fj, yj in zip(reversed(d), reversed(e), reversed(f),
+                              reversed(y)):
+        x2, x1 = x1, (yj - ej * x1 - fj * x2) / dj
+        x.append(x1)
+    return np.array(x[::-1])
 
 
 def whittaker_smooth(y: np.ndarray, w: np.ndarray | None = None,
@@ -305,7 +83,4 @@ def whittaker_smooth(y: np.ndarray, w: np.ndarray | None = None,
     y = np.where(nan, 0.0, y)
     if n < 3 or not np.any(w > 0):
         return np.where(nan, np.nan, y)
-    ab = _build_banded(w, lam)
-    if n >= _SUBSTRUCT_MIN_N:
-        return _substructured_solve(ab, w * y)
-    return _cholesky_banded_solve(ab, w * y)
+    return _cholesky_banded_solve(_build_banded(w, lam), w * y)

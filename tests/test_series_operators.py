@@ -19,7 +19,8 @@ import pytest
 from sen2rts_spark.kernels.cycles import cut_cycles_series
 from sen2rts_spark.kernels.dlog import fit_with_fallback
 from sen2rts_spark.kernels.pheno import pheno_gu, pheno_kl, pheno_trs
-from sen2rts_spark.kernels.series import fill_series, smooth_series
+from sen2rts_spark.kernels.series import (fill_series, rank_average,
+                                          smooth_series)
 from sen2rts_spark.operators import pheno_tools, timeseries
 from sen2rts_spark.operators.extract import OBS_SCHEMA
 
@@ -204,6 +205,18 @@ def test_cut_cycles_of_all_nan_series_is_silent():
     with warnings.catch_warnings():
         warnings.simplefilter("error")
         assert cut_cycles_series(filled["days"], filled["value"]) == []
+
+
+@pytest.mark.parametrize("levels", [1, 3, 20, 1000])
+def test_rank_average_is_mean_of_tied_ranks(levels):
+    """rank_average gives each value the mean of the 1-based ranks its tie
+    run covers (R's ties.method='average'), on tie-heavy vectors."""
+    rng = np.random.default_rng(levels)
+    for n in (0, 1, 2, 7, 160):
+        v = rng.integers(0, levels, n).astype(np.float64)
+        rank = np.argsort(np.argsort(v, kind="stable")) + 1.0
+        want = np.array([rank[v == x].mean() for x in v])
+        np.testing.assert_array_equal(rank_average(v), want)
 
 
 def test_extract_pheno_and_fit_curves_equal_kernels(stages):
