@@ -10,20 +10,17 @@ border replicates w_savgol.R:149 exactly, where ``last_coeffs`` is stored at
 ``i == length(x) - half_window - 1`` while combining the last ``window`` y
 values).
 
-This runs inside grouped_apply kernels (one call per series) — no
-per-row Python.
+This runs inside the ``smooth_series`` kernel (one call per series) — no
+per-row Python. A series shorter than its window never reaches it:
+``smooth_series`` returns it all-NaN first, so ``n < window`` here is a
+caller error like the others.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-__all__ = ["w_savgol", "ShortSeriesError"]
-
-
-class ShortSeriesError(ValueError):
-    """The series has fewer points than the filter window: degenerate
-    input, unlike a bad parameter."""
+__all__ = ["w_savgol"]
 
 
 def w_savgol(y: np.ndarray, x: np.ndarray, q: np.ndarray | None = None,
@@ -42,7 +39,7 @@ def w_savgol(y: np.ndarray, x: np.ndarray, q: np.ndarray | None = None,
     if window % 2 == 0:
         raise ValueError("window must be odd")
     if n < window:
-        raise ShortSeriesError("data size must be >= window size")
+        raise ValueError("data size must be >= window size")
     if polynom >= window:
         raise ValueError("polynom must be < window")
 

@@ -1,8 +1,10 @@
 """Per-series numpy kernels: theoretical-cadence grid, smoothing, gap filling.
 
 These are the numeric bodies the ``grouped_apply`` operators call (one call
-per url/series, vectorized inside — no per-row Python). Semantics re-create the
-reference pipeline:
+per url/series). Inside a call they work on arrays only: rows are matched
+by sort position (one stable ``lexsort`` of observed and grid rows, runs of
+equal keys), spans by ``searchsorted``; no per-row Python, no Python set or
+dict of row keys. Semantics re-create the reference pipeline:
 
 - ``dop_grid``      ~ s2_dop_simpl()        (/root/reference/R/s2_dop_simpl.R:21-70)
 - ``smooth_series`` ~ smooth_s2ts() body    (/root/reference/R/smooth_s2ts.R:60-239)
@@ -40,36 +42,27 @@ def _doybase(orbit: str) -> int:
         return sum(ord(ch) for ch in str(orbit)) % 10
 
 
-def dop_grid(orbits, sensors, day_min: int, day_max: int):
-    """Theoretical days-of-passage grid.
+def dop_grid(orbits: np.ndarray, sensors: np.ndarray, day_min: int,
+             day_max: int):
+    """Theoretical days-of-passage grid of the orbits and sensors seen
+    (arrays, repeats allowed).
 
-    Returns (days, sensor, orbit) arrays sorted by (date, sensor, orbit),
-    matching s2_dop_simpl's setorder(date, mission, orbit).
+    Each (sensor, orbit) pair passes on the days of one phase mod 10; one
+    mask over the day window finds every pair's days at once. Returns
+    (days, sensor, orbit) arrays sorted by (date, sensor, orbit), matching
+    s2_dop_simpl's setorder(date, mission, orbit).
     """
+    pairs = [(s, o, (_doybase(o) + off) % 10)
+             for s, off in (("2A", 0), ("2B", 5)) if s in sensors
+             for o in sorted(set(orbits.tolist()))]
     days_all = np.arange(day_min, day_max + 1, dtype=np.int64)
-    rows = []
-    bases = sorted({_doybase(o) for o in orbits})
-    orb_by_base = {}
-    for o in sorted(set(orbits)):
-        orb_by_base.setdefault(_doybase(o), []).append(o)
-    sensors = set(sensors)
-    for base in bases:
-        if "2A" in sensors:
-            for d in days_all[(days_all % 10) == base]:
-                for o in orb_by_base[base]:
-                    rows.append((int(d), "2A", o))
-        if "2B" in sensors:
-            for d in days_all[(days_all % 10) == (base + 5) % 10]:
-                for o in orb_by_base[base]:
-                    rows.append((int(d), "2B", o))
-    rows.sort()
-    if not rows:
-        return (np.empty(0, dtype=np.int64), np.empty(0, dtype=object),
-                np.empty(0, dtype=object))
-    days = np.array([r[0] for r in rows], dtype=np.int64)
-    sens = np.array([r[1] for r in rows], dtype=object)
-    orbs = np.array([r[2] for r in rows], dtype=object)
-    return days, sens, orbs
+    phase = np.array([p for _, _, p in pairs], dtype=np.int64)
+    pair, day = np.nonzero(days_all % 10 == phase[:, None])
+    days = days_all[day]
+    sens = np.array([s for s, _, _ in pairs], dtype=object)[pair]
+    orbs = np.array([o for _, o, _ in pairs], dtype=object)[pair]
+    order = np.lexsort((orbs, sens, days))
+    return days[order], sens[order], orbs[order]
 
 
 def rank_average(v: np.ndarray) -> np.ndarray:
@@ -82,6 +75,17 @@ def rank_average(v: np.ndarray) -> np.ndarray:
     ranks = np.empty(len(v), dtype=np.float64)
     ranks[order] = np.repeat((starts + ends + 1) / 2, ends - starts)
     return ranks
+
+
+def _average_ties(x: np.ndarray, y: np.ndarray):
+    """Average ``y`` over tied ``x`` (R's regularize.values): two orbits or
+    sensors can pass on one day, and interpolation needs distinct knots."""
+    uq, inv = np.unique(x, return_inverse=True)
+    if len(uq) == len(x):
+        return x, y
+    sums = np.zeros(len(uq)); cnts = np.zeros(len(uq))
+    np.add.at(sums, inv, y); np.add.at(cnts, inv, 1)
+    return uq, sums / cnts
 
 
 def smooth_series(
@@ -109,7 +113,9 @@ def smooth_series(
 
     Returns dict of output arrays aligned with the input rows (same length,
     original sort by (day, sensor, orbit)): ``value`` (smoothed, NaN where the
-    point was qa-filtered/spike-removed), ``rawval`` (original value).
+    point was qa-filtered/spike-removed), ``rawval`` (original value). When
+    no row survives the qa filter, or the merged series is shorter than the
+    SG window, every ``value`` is NaN (the reference errors the run instead).
     """
     order = np.lexsort((orbit, sensor, days))
     days = np.asarray(days)[order]
@@ -118,20 +124,21 @@ def smooth_series(
     orbit = np.asarray(orbit, dtype=object)[order]
     qa_arr = None if qa is None else np.asarray(qa, dtype=np.float64)[order]
     n_all = len(days)
+    out = {"days": days, "sensor": sensor, "orbit": orbit,
+           "qa": qa_arr, "rawval": value, "value": np.full(n_all, np.nan)}
 
-    if sg_n < 1:
-        sg_n = 1
+    # qa filter (smooth_s2ts.R:102-104); NA values and NA qa cannot survive
+    # the qa comparison in R
+    keep = ~np.isnan(value)
+    if qa_arr is not None:
+        keep &= qa_arr > min_qa
+    if not keep.any():
+        return out
 
     # relval on the full series (smooth_s2ts.R:98)
     vmin = np.nanmin(value)
     vrange = np.nanmax(value) - vmin
     relval = (value - vmin) / vrange if vrange > 0 else np.zeros_like(value)
-
-    # qa filter (smooth_s2ts.R:102-104)
-    keep = np.ones(n_all, dtype=bool) if qa_arr is None else qa_arr > min_qa
-    keep &= ~np.isnan(value)  # NA values cannot survive the qa comparison in R
-    if qa_arr is not None:
-        keep = np.where(np.isnan(qa_arr), False, keep)
 
     kidx = np.flatnonzero(keep)
 
@@ -155,59 +162,46 @@ def smooth_series(
                        ((right - center[:, None]) > spike).any(axis=1)
                 is_spike[shw : m - shw] |= flag
         kidx = kidx[~is_spike]
+    n_kept = len(kidx)
+    kdays, kvalue = days[kidx], value[kidx]
 
-    kdays = days[kidx]
-    kvalue = value[kidx]
-    kqa = None if qa_arr is None else qa_arr[kidx]
-    ksensor = sensor[kidx]
-    korbit = orbit[kidx]
-
-    if len(kidx) == 0:
-        return {
-            "days": days, "sensor": sensor, "orbit": orbit,
-            "qa": qa_arr, "rawval": value,
-            "value": np.full(n_all, np.nan),
-        }
-
-    # theoretical grid (smooth_s2ts.R:164-180), full outer on (day, sensor, orbit)
-    g_days, g_sens, g_orbs = dop_grid(set(korbit), set(ksensor),
+    # theoretical grid (smooth_s2ts.R:164-180), full outer on (day, sensor,
+    # orbit): one stable sort of the kept rows then the grid puts a grid row
+    # right behind the kept rows with its key; dropping it leaves the grid
+    # days no observation kept. ``pos`` is each merged row's source position.
+    g_days, g_sens, g_orbs = dop_grid(orbit[kidx], sensor[kidx],
                                       int(kdays.min()), int(kdays.max()))
-    obs_keys = {(int(d), s, o) for d, s, o in zip(kdays, ksensor, korbit)}
-    grid_keys = list(zip(g_days.tolist(), g_sens.tolist(), g_orbs.tolist()))
-    inject = [k for k in grid_keys if (k[0], k[1], k[2]) not in obs_keys]
-
-    mdays = np.concatenate([kdays, np.array([k[0] for k in inject], dtype=np.int64)])
-    msens = np.concatenate([ksensor, np.array([k[1] for k in inject], dtype=object)])
-    morbs = np.concatenate([korbit, np.array([k[2] for k in inject], dtype=object)])
-    mvalue = np.concatenate([kvalue, np.full(len(inject), np.nan)])
-    mqa0 = np.concatenate([
-        kqa if kqa is not None else np.ones(len(kidx)),
-        np.full(len(inject), 1e-2),
-    ])
-    morder = np.lexsort((morbs, msens, mdays))
-    mdays, msens, morbs = mdays[morder], msens[morder], morbs[morder]
-    mvalue, mqa0 = mvalue[morder], mqa0[morder]
+    mdays = np.concatenate([kdays, g_days])
+    msens = np.concatenate([sensor[kidx], g_sens])
+    morbs = np.concatenate([orbit[kidx], g_orbs])
+    pos = np.lexsort((morbs, msens, mdays))
+    mdays, msens, morbs = mdays[pos], msens[pos], morbs[pos]
+    repeat = np.concatenate(([False], (mdays[1:] == mdays[:-1])
+                             & (msens[1:] == msens[:-1])
+                             & (morbs[1:] == morbs[:-1])))
+    merged = ~repeat | (pos < n_kept)
+    pos, mdays = pos[merged], mdays[merged]
+    msens, morbs = msens[merged], morbs[merged]
+    obs = pos < n_kept
+    mvalue = np.concatenate([kvalue, np.full(len(g_days), np.nan)])[pos]
+    mqa0 = np.concatenate([np.ones(n_kept) if qa_arr is None else qa_arr[kidx],
+                           np.full(len(g_days), 1e-2)])[pos]
     nm = len(mdays)
 
+    # SG window from the distinct orbits and sensors; a shorter series is NULL
+    n_orbits = len(set(morbs.tolist()))
+    n_sensors = len(set(msens.tolist()))
+    sg_window = math.ceil(sg_daywindow / 10 * n_orbits * n_sensors) * 2 + 1
+    if filter_type != "whittaker" and nm < sg_window:
+        return out
+
     # linear interpolation of value0 at injected dates (smooth_s2ts.R:182-193)
-    valid = ~np.isnan(mvalue)
     value0 = mvalue.copy()
-    vd = mdays[valid].astype(np.float64)
-    vv = mvalue[valid]
-    # np.interp needs strictly usable x; duplicate days (two sensors same day)
-    # cannot occur on observed rows of one series, but guard by averaging
-    if len(np.unique(vd)) != len(vd):
-        uq, inv = np.unique(vd, return_inverse=True)
-        sums = np.zeros(len(uq)); cnts = np.zeros(len(uq))
-        np.add.at(sums, inv, vv); np.add.at(cnts, inv, 1)
-        vd, vv = uq, sums / cnts
+    vd, vv = _average_ties(mdays[obs].astype(np.float64), mvalue[obs])
     in_range = (mdays >= vd[0]) & (mdays <= vd[-1])
     value0[in_range] = np.interp(mdays[in_range].astype(np.float64), vd, vv)
 
     # iterated weighted Savitzky-Golay (smooth_s2ts.R:196-215)
-    n_orbits = len(set(morbs.tolist()))
-    n_sensors = len(set(msens.tolist()))
-    sg_window = math.ceil(sg_daywindow / 10 * n_orbits * n_sensors) * 2 + 1
     qa_it = mqa0.copy()
     val_fixed = value0.copy()
     value_sg = value0.copy()
@@ -215,36 +209,33 @@ def smooth_series(
     if filter_type == "whittaker":
         value_sg = whittaker_smooth(value0, mqa0, lam=whittaker_lambda)
     else:
-        for _ in range(sg_n):
+        for _ in range(max(sg_n, 1)):
             qa_it = (rank_average(val_fixed - value_sg) - 1.0) / (nm - 1.0) * qa_it
             value_sg = w_savgol(val_fixed, x_num, qa_it,
                                 window=sg_window, polynom=sg_polynom)
 
-    # semi-join back to the filtered observed rows (smooth_s2ts.R:216-219)
-    mkeys = list(zip(mdays.tolist(), msens.tolist(), morbs.tolist()))
-    sel = np.array([k in obs_keys for k in mkeys], dtype=bool)
+    # semi-join back to the kept rows (smooth_s2ts.R:216-219), in kidx order
+    # (the stable sort keeps the kept rows' own order)
+    smoothed = value_sg[obs]
 
     # clamp to observed range ± max_extrapolation (smooth_s2ts.R:223-226)
-    smoothed = value_sg[sel]
     if max_extrapolation < np.inf:
         omin, omax = np.nanmin(kvalue), np.nanmax(kvalue)
         orng = omax - omin
         smoothed = np.clip(smoothed, omin - orng * max_extrapolation,
                            omax + orng * max_extrapolation)
 
-    # restore dropped rows (full outer with the original table, smooth_s2ts.R:229)
-    out_value = np.full(n_all, np.nan)
-    kept_keys = {k: v for k, v in zip(
-        zip(mdays[sel].tolist(), msens[sel].tolist(), morbs[sel].tolist()), smoothed)}
-    for i in range(n_all):
-        k = (int(days[i]), sensor[i], orbit[i])
-        if k in kept_keys:
-            out_value[i] = kept_keys[k]
-
-    return {
-        "days": days, "sensor": sensor, "orbit": orbit,
-        "qa": qa_arr, "rawval": value, "value": out_value,
-    }
+    # restore dropped rows (full outer with the original table,
+    # smooth_s2ts.R:229): every input row takes the value of the last kept
+    # row of its (day, sensor, orbit) run, NaN when none was kept
+    run = np.cumsum(np.concatenate(([True], (days[1:] != days[:-1])
+                                    | (sensor[1:] != sensor[:-1])
+                                    | (orbit[1:] != orbit[:-1])))) - 1
+    last = np.full(run[-1] + 1, -1)
+    np.maximum.at(last, run[kidx], np.arange(n_kept))
+    src = last[run]
+    out["value"][src >= 0] = smoothed[src[src >= 0]]
+    return out
 
 
 def fill_series(
@@ -273,32 +264,24 @@ def fill_series(
     }
 
     # theoretical passage dates over the full observed window (fill_s2ts.R:78-83)
-    g_days, _, _ = dop_grid(
-        set(orbit[orbit != None].tolist()),  # noqa: E711
-        set(sensor[sensor != None].tolist()),  # noqa: E711
-        int(days.min()), int(days.max()),
-    )
-    dop_days = np.unique(g_days)
-    if len(dop_days) == 0:
-        dop_days = np.unique(days)
+    g_days, _, _ = dop_grid(orbit[orbit != None], sensor[sensor != None],  # noqa: E711
+                            int(days.min()), int(days.max()))
+    dop_days = np.unique(g_days) if len(g_days) else \
+        np.unique(days).astype(np.int64)
 
     if frequency == "dop":
         out_days0 = dop_days
     elif frequency == "daily":
         out_days0 = np.arange(dop_days.min(), dop_days.max() + 1, dtype=np.int64)
     elif frequency == "gcd":
-        diffs = np.diff(dop_days)
-        g = 0
-        for dd in diffs:
-            g = math.gcd(g, int(dd))
-        out_days0 = np.arange(dop_days.min(), dop_days.max() + 1, max(g, 1),
+        step = max(int(np.gcd.reduce(np.diff(dop_days))), 1)
+        out_days0 = np.arange(dop_days.min(), dop_days.max() + 1, step,
                               dtype=np.int64)
     else:
         raise ValueError(f"unknown frequency {frequency!r}")
 
     # full outer merge on date (fill_s2ts.R:102-107)
-    obs_days = set(days.tolist())
-    inject = np.array([d for d in out_days0 if int(d) not in obs_days], dtype=np.int64)
+    inject = out_days0[~np.isin(out_days0, days)]
     mdays = np.concatenate([days, inject])
     mvalue = np.concatenate([value, np.full(len(inject), np.nan)])
     msens = np.concatenate([sensor, np.full(len(inject), None, dtype=object)])
@@ -317,31 +300,26 @@ def fill_series(
     interpolated = np.isnan(mvalue)
 
     # valid interpolation span (fill_s2ts.R:111-119): union of daily ranges
-    # between consecutive valid dates closer than max_na_days
+    # between consecutive valid dates at most max_na_days apart. span[k]
+    # marks the range ending at valid_days[k]; a date lies in the union iff
+    # the range ending at the first valid date >= it, or at the first one
+    # > it, is marked.
     vmask = ~np.isnan(value)
     valid_days = np.unique(days[vmask])
-    valid_x = set()
-    for i in range(len(valid_days) - 1):
-        if valid_days[i + 1] - valid_days[i] <= max_na_days:
-            valid_x.update(range(int(valid_days[i]), int(valid_days[i + 1]) + 1))
+    span = np.concatenate(([False], np.diff(valid_days) <= max_na_days, [False]))
+
+    def in_span(x):
+        return span[np.searchsorted(valid_days, x, "left")] | \
+            span[np.searchsorted(valid_days, x, "right")]
 
     out_value = mvalue.copy()
-    if valid_x:
-        # knots: observed rows with date in valid_x (NA pairs dropped by R spline)
-        knot_mask = vmask & np.isin(days, np.fromiter(valid_x, dtype=np.int64))
-        kx = days[knot_mask].astype(np.float64)
-        ky = value[knot_mask]
-        # R spline() regularize.values: average tied x (two orbits/sensors can
-        # share a passage date); dx=0 knots would NaN the tridiagonal solve.
-        if len(kx) and len(np.unique(kx)) != len(kx):
-            uq, inv = np.unique(kx, return_inverse=True)
-            sums = np.zeros(len(uq)); cnts = np.zeros(len(uq))
-            np.add.at(sums, inv, ky); np.add.at(cnts, inv, 1)
-            kx, ky = uq, sums / cnts
-        if len(kx) >= 1:
-            coefs = fmm_spline_coef(kx, ky)
-            eval_mask = np.isin(mdays, np.fromiter(valid_x, dtype=np.int64))
-            out_value[eval_mask] = fmm_spline_eval(coefs, mdays[eval_mask].astype(np.float64))
+    if span.any():
+        # knots: observed rows in the span (NA pairs dropped by R spline)
+        knot_mask = vmask & in_span(days)
+        kx, ky = _average_ties(days[knot_mask].astype(np.float64), value[knot_mask])
+        eval_mask = in_span(mdays)
+        out_value[eval_mask] = fmm_spline_eval(fmm_spline_coef(kx, ky),
+                                               mdays[eval_mask].astype(np.float64))
 
     # clamp (fill_s2ts.R:130-133)
     if max_extrapolation < np.inf and vmask.any():

@@ -8,10 +8,10 @@ series; the only shuffle is the hash partition on id, reused stage to stage.
 
 Scale note: a series must be colocated for its kernel, so per-series stages
 cannot be salted — series length is bounded instead by rolling up to the
-daily tier BEFORE smoothing (SURVEY.md §4.3). Kernel errors on degenerate
-series (shorter than the SG window) yield NULL smoothed values rather than
-failing the task (deviation from the reference, which errors the run); any
-other kernel error, a bad parameter among them, fails it.
+daily tier BEFORE smoothing (SURVEY.md §4.3). A series shorter than its
+SG window smooths to NULL values inside ``smooth_series`` (deviation from
+the reference, which errors the run); any kernel error, a bad parameter
+among them, fails the task.
 
 Kernels read and write numpy columns (``grouped_apply``): dates cross as
 int days since 1970-01-01, the kernels' own unit.
@@ -25,7 +25,6 @@ from pyspark.sql import DataFrame
 from ..kernels.cycles import cut_cycles_series
 from ..kernels.dlog import fit_with_fallback
 from ..kernels.pheno import pheno_deriv, pheno_gu, pheno_kl, pheno_trs
-from ..kernels.savgol import ShortSeriesError
 from ..kernels.series import fill_series, smooth_series
 
 __all__ = ["smooth", "fill", "cut_cycles", "extract_pheno", "SMOOTH_SCHEMA",
@@ -65,24 +64,14 @@ def smooth(obs: DataFrame, min_qa: float = 0.2, noise_dir: str = "low",
         raise ValueError(f"unknown noise_dir {noise_dir!r}")
 
     def _fn(run: dict) -> dict:
-        days, value, qa = run["date"], run["value"], run["qa"]
-        sensor, orbit = run["sensor"], run["orbit"]
-        try:
-            out = smooth_series(
-                days, value, qa, sensor, orbit,
-                min_qa=min_qa, noise_dir=noise_dir, spike=spike,
-                spike_window=spike_window, sg_daywindow=sg_daywindow,
-                sg_polynom=sg_polynom, sg_n=sg_n,
-                max_extrapolation=max_extrapolation,
-                filter_type=filter_type, whittaker_lambda=whittaker_lambda,
-            )
-        except ShortSeriesError:
-            # fewer points than the SG window: keep rows, NULL smooth (a
-            # singular window solve falls back to pinv inside w_savgol)
-            srt = np.lexsort((orbit, sensor, days))
-            out = {"days": days[srt], "sensor": sensor[srt],
-                   "orbit": orbit[srt], "qa": qa[srt],
-                   "rawval": value[srt], "value": np.full(len(days), np.nan)}
+        out = smooth_series(
+            run["date"], run["value"], run["qa"], run["sensor"], run["orbit"],
+            min_qa=min_qa, noise_dir=noise_dir, spike=spike,
+            spike_window=spike_window, sg_daywindow=sg_daywindow,
+            sg_polynom=sg_polynom, sg_n=sg_n,
+            max_extrapolation=max_extrapolation,
+            filter_type=filter_type, whittaker_lambda=whittaker_lambda,
+        )
         return {"id": run["id"], "date": out["days"], "orbit": out["orbit"],
                 "sensor": out["sensor"], "value": out["value"],
                 "qa": out["qa"], "rawval": out["rawval"]}
@@ -94,7 +83,12 @@ def smooth(obs: DataFrame, min_qa: float = 0.2, noise_dir: str = "low",
 def fill(smoothed: DataFrame, frequency: str = "daily",
          max_na_days: float = float("inf"),
          max_extrapolation: float = 0.1) -> DataFrame:
-    """obs_smoothed → obs_filled (regular grid + interpolated flag)."""
+    """obs_smoothed → obs_filled (regular grid + interpolated flag).
+
+    ``frequency`` is 'daily', 'dop' or 'gcd' (fill_s2ts.R); anything else
+    raises here, on the driver, before any job."""
+    if frequency not in ("daily", "dop", "gcd"):
+        raise ValueError(f"unknown frequency {frequency!r}")
 
     def _fn(run: dict) -> dict:
         out = fill_series(
@@ -114,7 +108,17 @@ def fill(smoothed: DataFrame, frequency: str = "daily",
 
 
 def cut_cycles(filled: DataFrame, **params) -> DataFrame:
-    """obs_filled → cycles (one row per detected cycle)."""
+    """obs_filled → cycles (one row per detected cycle).
+
+    ``weight_metric`` is 'integral', 'length' or 'maxval' and
+    ``value_type`` 'relative' or 'absolute' (cut_cycles.R); anything else
+    raises here, on the driver, before any job: the kernel would write NaN
+    weights or read the values as absolute."""
+    if params.get("weight_metric", "integral") not in ("integral", "length",
+                                                       "maxval"):
+        raise ValueError(f"unknown weight_metric {params['weight_metric']!r}")
+    if params.get("value_type", "relative") not in ("relative", "absolute"):
+        raise ValueError(f"unknown value_type {params['value_type']!r}")
 
     def _fn(run: dict) -> dict | None:
         rows = cut_cycles_series(run["date"], run["value"], **params)

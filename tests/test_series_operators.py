@@ -92,13 +92,7 @@ def _smooth_want(rows):
     qa = np.array([_nan(r["qa"]) for r in rows])
     sensor = np.array([r["sensor"] for r in rows], dtype=object)
     orbit = np.array([r["orbit"] for r in rows], dtype=object)
-    try:
-        out = smooth_series(days, value, qa, sensor, orbit)
-    except ValueError:  # shorter than its window: rows kept, value NULL
-        srt = np.lexsort((orbit, sensor, days))
-        out = {"days": days[srt], "sensor": sensor[srt],
-               "orbit": orbit[srt], "qa": qa[srt], "rawval": value[srt],
-               "value": np.full(len(days), math.nan)}
+    out = smooth_series(days, value, qa, sensor, orbit)
     return [(_date(d), o, s, _null(float(v)), _null(float(q)),
              _null(float(rv)))
             for d, o, s, v, q, rv in zip(out["days"], out["orbit"],
@@ -205,6 +199,18 @@ def test_cut_cycles_of_all_nan_series_is_silent():
     with warnings.catch_warnings():
         warnings.simplefilter("error")
         assert cut_cycles_series(filled["days"], filled["value"]) == []
+
+
+def test_smooth_of_all_nan_series_is_silent():
+    """A series with no value smooths to all-NaN without a RuntimeWarning
+    (the relval rescale's nanmin would warn on it)."""
+    days = np.arange(6) * 10
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        out = smooth_series(days, np.full(6, math.nan), np.ones(6),
+                            np.array(["2A"] * 6, dtype=object),
+                            np.array(["022"] * 6, dtype=object))
+    assert np.isnan(out["value"]).all() and len(out["value"]) == 6
 
 
 @pytest.mark.parametrize("levels", [1, 3, 20, 1000])

@@ -145,6 +145,31 @@ def test_smooth_rejects_unknown_options_before_any_job(spark):
         sc.setLocalProperty("spark.job.description", None)
 
 
+def test_fill_and_cut_cycles_reject_unknown_options_before_any_job(spark):
+    """A misspelled fill frequency, cut_cycles weight_metric or value_type
+    raises on the driver; in the kernel the frequency fails only inside the
+    job, the weight_metric writes NaN weights and the value_type reads as
+    absolute."""
+    from sen2rts_spark.operators.timeseries import FILL_SCHEMA, cut_cycles, fill
+
+    filled = spark.createDataFrame(
+        [("a", datetime.date(2020, 1, 1), "o", "s", 0.5, 1.0, 0.5, False)],
+        FILL_SCHEMA)
+    sc = spark.sparkContext
+    sc.setJobGroup("fill-cut-options", "bad fill/cut_cycles options")
+    try:
+        with pytest.raises(ValueError, match="frequency 'weekly'"):
+            fill(filled, frequency="weekly")
+        with pytest.raises(ValueError, match="weight_metric 'area'"):
+            cut_cycles(filled, weight_metric="area")
+        with pytest.raises(ValueError, match="value_type 'relatve'"):
+            cut_cycles(filled, value_type="relatve")
+        assert sc.statusTracker().getJobIdsForGroup("fill-cut-options") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
 def test_smooth_nulls_only_series_shorter_than_the_window(spark):
     """A 3-point series (window 5) keeps its rows with NULL values; a bad
     parameter, polynom 5 on a one-orbit, one-sensor series (window 5 from
